@@ -120,10 +120,12 @@ _WATCHDOGS: set[str] = set()
 # sf1-marathon diagnosis validated (one cleaner pass destroys the dead
 # broadcasts the first GC enqueued).
 _CLEANER_DRAIN_S = float(os.environ.get("SPARK_GRAFT_CLEANER_DRAIN_S", "2.0"))
-# One lock for memo mutations: serving.prewarm_plans builds plans on
-# background driver threads (PySpark is driver-thread-safe; each thread
-# gets its own Py4J connection), and OrderedDict move_to_end/popitem are
-# not atomic under concurrent mutation.
+# One lock for memo mutations: ThreadingHTTPServer request threads shed
+# the memo from the recovery ladder (run_with_memory_recovery), the
+# watchdog daemon sheds it while other driver threads call catalog
+# entries (PySpark is driver-thread-safe; each thread gets its own Py4J
+# connection), and OrderedDict move_to_end/popitem are not atomic under
+# concurrent mutation.
 _PLAN_MEMO_LOCK = threading.Lock()
 # serializes level-3 recovery's set/attempt/restore of the session-wide
 # autoBroadcastJoinThreshold (see run_with_memory_recovery)
@@ -523,7 +525,7 @@ def register(
                         return df
                 # build OUTSIDE the lock: fn() makes Py4J round-trips and
                 # may register lake tables — holding the lock would
-                # serialize prewarm threads against the serving thread
+                # serialize concurrent callers and stall the watchdog
                 df = _fn(spark, sf_dir)
                 with _PLAN_MEMO_LOCK:
                     existing = _PLAN_MEMO.get(key)

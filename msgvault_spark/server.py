@@ -469,24 +469,16 @@ def serve(
     port: int = 0,
     api_key: str | None = None,
     raw_store: DataFrame | None = None,
-    prewarm: bool = True,
 ) -> MsgvaultHTTPServer:
     """Start the API server on a background thread; returns the handle
     (``.port`` for an OS-assigned port, ``.shutdown()`` to stop).
 
-    With ``prewarm`` (default), spare driver threads Catalyst-compile the
-    headline catalog plans while the server answers its first requests
-    (serving.prewarm_plans) — the reference's prepared-statement warm-up
-    on its pooled connection (internal/query/duckdb.go:91-99); by the
-    time a route needs a plan it is usually a memo hit. The handle is on
-    ``.prewarm_handle`` (None when disabled) for tests/barriers."""
+    Routes build their plans through ``api.py`` on demand; serving never
+    builds or memoizes a catalog plan. ``.prewarm_handle`` is always None
+    and stays on the handle for callers that still read it."""
     srv = MsgvaultHTTPServer(
         spark, sf_dir, host=host, port=port, api_key=api_key,
         raw_store=raw_store,
     ).start()
     srv.prewarm_handle = None
-    if prewarm:
-        from msgvault_spark.serving import prewarm_plans
-
-        srv.prewarm_handle = prewarm_plans(spark, sf_dir)
     return srv

@@ -115,7 +115,8 @@ def get_spark(
     # referenced driver heap no cache clear can reclaim. These are
     # listener-construction-time configs, so they must be on the builder;
     # tools/heap_growth.py --retained sets this env var to A/B-attribute
-    # marathon-session heap residue. Unset → Spark defaults (1000).
+    # marathon-session heap residue. Unset → Spark defaults (1000 for
+    # executions, jobs and stages; 100000 for tasks).
     retained = os.environ.get("SPARK_GRAFT_UI_RETAINED")
     if retained is not None:
         builder = (

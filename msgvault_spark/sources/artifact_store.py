@@ -215,8 +215,8 @@ def save_group(
         return None
     digest = _digest(sf_dir, kind_key)
     d = os.path.join(root, digest)
-    # Serialize in-process writers: serving.prewarm_plans builds plans on
-    # driver threads, and two threads first-touching the same stale kind
+    # Serialize in-process writers: HTTP request threads build plans
+    # concurrently, and two threads first-touching the same stale kind
     # would otherwise race the SAME tmp dir and throwaway table name
     # (both were PID-keyed). Cross-process races stay handled by the
     # exists-check + atomic rename below.

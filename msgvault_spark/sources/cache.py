@@ -51,9 +51,10 @@ _WIDE_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 FACT_PARTITIONS = 16
 
-# serving.prewarm_plans builds catalog plans on background driver threads;
-# the memoized getters below must not double-build (wasted jobs, and a
-# losing thread's persisted dims would stay pinned unreferenced). One
+# ThreadingHTTPServer runs each request on its own driver thread, and
+# concurrent requests first-touch the same getters; the memoized getters
+# below must not double-build (wasted jobs, and a losing thread's
+# persisted dims would stay pinned unreferenced). One
 # reentrant lock around each getter: with a warm lake the held section is
 # metadata-only (registration + footer reads); builds serialize, which is
 # exactly the single-flight behavior a stale store needs.

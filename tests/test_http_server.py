@@ -394,38 +394,40 @@ def test_remote_engine_mirrors_new_routes(server, inline_server):
     assert e.value.status == 415
 
 
-def test_serve_prewarms_headline_plans(server, spark):
-    """serve() kicks background plan prewarm (the reference's pooled-
-    connection prepared statements): once it drains, headline plans are
-    memo hits for the serving thread."""
+def test_serving_never_memoizes_catalog_plans(server):
+    """Routes build their plans through api.py on demand: one request per
+    GET route family leaves no catalog plan memoized for the served
+    archive, and serve() starts no background plan builds."""
     import msgvault_spark.catalog as catmod
 
-    handle = server.prewarm_handle
-    assert handle is not None
-    results = handle.wait(timeout=300)
-    bad = {n: r for n, r in results.items() if r != "ok"}
-    assert not bad, bad
-    heads = {
-        n for n, s in catmod.CATALOG.items()
-        if s.headline and getattr(s.fn, "__wrapped__", None)
-    }
-    assert set(results) == heads
-    app = spark.sparkContext.applicationId
     with catmod._PLAN_MEMO_LOCK:
-        memoed = {k[2] for k in catmod._PLAN_MEMO if k[0] == app}
-    # the memo is budget-bounded, so containment can be partial after
-    # eviction — but at sf0.001 nothing approaches the budget
-    assert heads <= memoed
-
-
-def test_serve_prewarm_opt_out(spark):
-    from msgvault_spark.server import serve
-
-    srv = serve(spark, SF_DIR, api_key="k", prewarm=False)
-    try:
-        assert srv.prewarm_handle is None
-    finally:
-        srv.shutdown()
+        for k in [k for k in catmod._PLAN_MEMO if k[1] == SF_DIR]:
+            del catmod._PLAN_MEMO[k]
+            catmod._PLAN_PIN_SIZES.pop(k, None)
+    for path in (
+        "/api/v1/stats",
+        "/api/v1/stats/total",
+        "/api/v1/accounts",
+        "/api/v1/aggregates?view=senders&limit=3",
+        "/api/v1/aggregates/sub?view=senders"
+        "&domain=nation_3.example.com&limit=3",
+        "/api/v1/search?q=order&page_size=3",
+        "/api/v1/search?q=token7&mode=vector&page_size=3",
+        "/api/v1/search?q=token7&mode=hybrid&page_size=3",
+        "/api/v1/search/deep?q=order&limit=3",
+        "/api/v1/search/fast?q=order&limit=3",
+        "/api/v1/messages/filter?domain=nation_3.example.com&limit=3",
+        "/api/v1/messages?ids=1,2,3",
+        "/api/v1/messages/7",
+    ):
+        assert _get(server, path)[0] == 200, path
+    # the synthetic raw store carries no inline parts: the route runs its
+    # lookup and answers 404
+    assert _get_err(server, "/api/v1/messages/7/inline?cid=x")[0] == 404
+    with catmod._PLAN_MEMO_LOCK:
+        leaked = [k for k in catmod._PLAN_MEMO if k[1] == SF_DIR]
+    assert not leaked, leaked
+    assert server.prewarm_handle is None
 
 
 def test_memory_pressure_request_sheds_and_retries(server, monkeypatch):

@@ -6,6 +6,8 @@ eviction, and an evicted entry rebuilds cleanly on the next request."""
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 import msgvault_spark.catalog as catmod
@@ -131,6 +133,40 @@ def test_evicted_entry_rebuilds_and_collects(spark, monkeypatch):
     # their private broadcasts destroyed) — rebuilds must match
     for n in reversed(names):
         assert len(catmod.CATALOG[n].fn(spark, SF_DIR).collect()) == counts[n]
+
+
+def test_racing_builders_share_one_memoized_plan(spark):
+    """Two threads asking for the same entries at once must both get a
+    correct DataFrame: the memo's double-check admits one winner, and the
+    loser's duplicate build is discarded, not returned half-initialized."""
+    _clear_app(spark)
+    app = spark.sparkContext.applicationId
+    names = ["agg_domains", "latest_order_per_customer", "union_distinct_parts"]
+    start = threading.Barrier(2)
+    got: list[dict] = [{}, {}]
+    errs: list[str] = []
+
+    def ask(i: int) -> None:
+        try:
+            start.wait(timeout=60)
+            for n in names:
+                df = catmod.CATALOG[n].fn(spark, SF_DIR)
+                assert df.count() >= 0
+                got[i][n] = df
+        except Exception as exc:  # pragma: no cover - failure path
+            errs.append(f"{type(exc).__name__}: {exc}")
+
+    threads = [threading.Thread(target=ask, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs
+    with catmod._PLAN_MEMO_LOCK:
+        for n in names:
+            memoed = catmod._PLAN_MEMO[(app, SF_DIR, n)]
+            assert got[0][n] is memoed and got[1][n] is memoed
 
 
 def test_pressure_valve_sheds_to_quarter_budget(monkeypatch):

@@ -68,14 +68,6 @@ t["footer_probe"] = time.perf_counter() - t0
 from msgvault_spark.catalog import CATALOG
 heads = [(n, s) for n, s in CATALOG.items() if s.headline]
 first_name, first_spec = heads[0]
-prewarm = %(prewarm)r
-if prewarm:
-    # serving shape: spare driver threads compile the rest of the
-    # catalog while the serving thread answers queries (serving.py)
-    from msgvault_spark.serving import prewarm_plans
-    handle = prewarm_plans(
-        spark, sf_dir, [n for n, _ in heads[1:]], n_threads=4
-    )
 t0 = time.perf_counter()
 first_spec.fn(spark, sf_dir).collect()
 t["first_query"] = time.perf_counter() - t0
@@ -154,12 +146,8 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--first-query-slo="):
             slo = float(a.split("=", 1)[1])
-    prewarm = "--prewarm" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/repo/testdata/sf1"
-    subst = {
-        "here": HERE, "sf_dir": sf_dir, "tables": TABLES,
-        "prewarm": prewarm,
-    }
+    subst = {"here": HERE, "sf_dir": sf_dir, "tables": TABLES}
     spark = _run_child(_SPARK_CHILD % subst)
     duck = _run_child(_DUCK_CHILD % subst)
     for d in (spark, duck):
