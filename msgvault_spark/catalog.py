@@ -128,8 +128,10 @@ _CLEANER_DRAIN_S = float(os.environ.get("SPARK_GRAFT_CLEANER_DRAIN_S", "2.0"))
 # concurrent mutation.
 _PLAN_MEMO_LOCK = threading.Lock()
 # serializes level-3 recovery's set/attempt/restore of the session-wide
-# autoBroadcastJoinThreshold (see run_with_memory_recovery)
-_LEVEL3_LOCK = threading.Lock()
+# autoBroadcastJoinThreshold (see run_with_memory_recovery); reentrant, so
+# a ladder nested inside a level-3 attempt() reaches its own level 3
+# instead of deadlocking its thread
+_LEVEL3_LOCK = threading.RLock()
 
 
 def _pin_budget(spark) -> int:

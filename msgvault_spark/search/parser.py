@@ -239,6 +239,17 @@ def parse_size(value: str) -> int | None:
         return None
 
 
+def uses_relative_date(query: str) -> bool:
+    """True when ``query`` has an older_than:/newer_than: operator, whose
+    date parse_query resolves against the current time."""
+    return any(
+        not _is_quoted_phrase(t)
+        and t.split(":", 1)[0].lower() in ("older_than", "newer_than")
+        for t in tokenize(query)
+        if ":" in t
+    )
+
+
 def parse_query(query: str, now: datetime | None = None) -> ParsedQuery:
     """Parse a Gmail-like search string (reference Parse, parser.go:198-228)."""
     q = ParsedQuery()

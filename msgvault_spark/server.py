@@ -37,7 +37,31 @@ constructed with ``api_key``, every /api/v1 request must carry it in the
 
 Responses are the columnar QueryResult wire shape
 ``{"columns": [...], "rows": [...], "row_count": N}`` (views.go:11-16);
-errors are ``{"error": msg}`` with 400/401/404 status.
+errors are ``{"error": msg}``. A user error answers 400: a bad parameter
+(``KeyError``/``ValueError``), a query Spark rejects at analysis, parse
+or argument checking (``AnalysisException``, ``ParseException``,
+``IllegalArgumentException``), or one that fails an ANSI runtime check
+(``ArithmeticException`` for ``1/0``, ``ArrayIndexOutOfBoundsException``,
+``DateTimeException``, ``NumberFormatException``). Routes answer
+401/404/415 themselves. Any other exception is an engine failure: 500,
+plus one line on stderr.
+
+Answer cache: the 200 JSON body of every ``/api/v1/*`` GET route is
+stored (``sources.cache.get_answer``) under (route path, sorted query
+items) and a repeat of that tuple is sent the stored bytes without
+running a Spark job. Stored answers live exactly as long as the archive
+frames that computed them: ``clear_serving_caches()`` (memory-recovery
+level 2) drops both. Until then a serving process answers from one
+memoized set of lake frames. The clock is the one other input: a
+search whose ``q`` has ``older_than:``/``newer_than:`` resolves its
+dates against the current time, so those requests always run their
+route and are never stored.
+Identical requests in flight together run the route once
+(single-flight). Errors are never stored, and neither are ``/health``,
+``POST /api/v1/query`` (the SQL may read anything) or the inline-bytes
+route (already ``Cache-Control: immutable`` for clients). A repeat of a
+vector or hybrid search repeats the ``took_ms`` of the request that
+computed it. The auth check runs before the cache, on hits too.
 
 Threading: HTTP handlers run on the serving thread(s) and call into the
 shared SparkSession — safe because Spark driver APIs are thread-safe and
@@ -49,13 +73,43 @@ lifting stays in the cluster.
 from __future__ import annotations
 
 import json
+import sys
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import (
+    AnalysisException,
+    ArithmeticException,
+    ArrayIndexOutOfBoundsException,
+    DateTimeException,
+    IllegalArgumentException,
+    NumberFormatException,
+)
 from pyspark.sql import DataFrame, SparkSession
 
 from msgvault_spark import api
+from msgvault_spark.search.parser import uses_relative_date
+from msgvault_spark.sources.cache import get_answer
+
+
+# answered 400: the request is at fault, not the engine
+_USER_ERRORS = (
+    KeyError,
+    ValueError,
+    AnalysisException,  # includes ParseException
+    IllegalArgumentException,
+    # ANSI-mode runtime checks on user SQL (1/0, element_at out of range,
+    # bad casts)
+    ArithmeticException,
+    ArrayIndexOutOfBoundsException,
+    DateTimeException,
+    NumberFormatException,
+)
+
+
+def _is_inline(path: str) -> bool:
+    return path.startswith("/api/v1/messages/") and path.endswith("/inline")
 
 
 class _HTTPError(Exception):
@@ -101,8 +155,8 @@ class MsgvaultHTTPServer:
                 pass
 
             # ---- plumbing ------------------------------------------------
-            def _send(self, code: int, payload: str) -> None:
-                body = payload.encode()
+            def _send(self, code: int, payload: str | bytes) -> None:
+                body = payload if isinstance(payload, bytes) else payload.encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(body)))
@@ -116,6 +170,46 @@ class MsgvaultHTTPServer:
                 if outer.api_key is None:
                     return True
                 return self.headers.get("X-API-Key") == outer.api_key
+
+            # ---- errors and answers --------------------------------------
+            def _fail(self, e: Exception) -> None:
+                """User errors answer 400 (or the route's own status);
+                anything else is an engine failure: 500 plus one stderr
+                line."""
+                if isinstance(e, _HTTPError):
+                    return self._err(e.code, str(e))
+                msg = (str(e).splitlines() or [repr(e)])[0][:500]
+                if isinstance(e, _USER_ERRORS):
+                    return self._err(400, msg)
+                print(
+                    f"[server] 500 {self.command} {self.path}: "
+                    f"{type(e).__name__}: {msg}",
+                    file=sys.stderr,
+                )
+                return self._err(500, msg)
+
+            def _run_get(self, path: str, q: dict):
+                # driver memory pressure (broadcast-build refusal / heap
+                # exhaustion): the shared 3-level recovery ladder (shed
+                # plans → clear serving caches + cleaner drain → one
+                # no-auto-broadcast retry) degrades the caches and the
+                # join strategy, never the request
+                from msgvault_spark.catalog import run_with_memory_recovery
+
+                r = run_with_memory_recovery(
+                    outer.spark,
+                    lambda: self._route_get(path, q),
+                    label=path,
+                )
+                if r is None:
+                    raise _HTTPError(404, f"no route {path}")
+                return r
+
+            def _json_answer(self, path: str, q: dict) -> bytes:
+                r = self._run_get(path, q)
+                if isinstance(r, dict):
+                    return json.dumps(r, default=str).encode()
+                return r.to_json().encode()
 
             # ---- routes --------------------------------------------------
             def do_GET(self):
@@ -135,36 +229,11 @@ class MsgvaultHTTPServer:
                     return self._err(404, f"no route {u.path}")
                 if not self._authed():
                     return self._err(401, "missing or invalid X-API-Key")
-                try:
-                    # driver memory pressure (broadcast-build refusal /
-                    # heap exhaustion): the shared 3-level recovery ladder
-                    # (shed plans → clear serving caches + cleaner drain →
-                    # one no-auto-broadcast retry) degrades the caches and
-                    # the join strategy, never the request — the
-                    # watchdog's reactive complement
-                    from msgvault_spark.catalog import (
-                        run_with_memory_recovery,
-                    )
-
-                    r = run_with_memory_recovery(
-                        outer.spark,
-                        lambda: self._route_get(u.path, q),
-                        label=u.path,
-                    )
-                except _HTTPError as e:
-                    return self._err(e.code, str(e))
-                except (KeyError, ValueError) as e:
-                    return self._err(400, str(e))
-                except Exception as e:  # noqa: BLE001 — engine errors from
-                    # user-supplied params (negative limits, bad views)
-                    # must produce a 400, never a dropped connection
-                    return self._err(400, str(e).splitlines()[0][:500])
-                if r is None:
-                    return self._err(404, f"no route {u.path}")
-                if isinstance(r, dict):
-                    return self._send(200, json.dumps(r, default=str))
-                if isinstance(r, tuple):  # ("bytes", content_type, body)
-                    _, ctype, body = r
+                if _is_inline(u.path):  # bytes, already immutable for clients
+                    try:
+                        _, ctype, body = self._run_get(u.path, q)
+                    except Exception as e:  # noqa: BLE001 — mapped by _fail
+                        return self._fail(e)
                     self.send_response(200)
                     self.send_header("Content-Type", ctype)
                     self.send_header("Content-Disposition", "inline")
@@ -176,7 +245,21 @@ class MsgvaultHTTPServer:
                     self.end_headers()
                     self.wfile.write(body)
                     return None
-                self._send(200, r.to_json())
+                try:
+                    if uses_relative_date(q.get("q", "")):
+                        # resolved against the clock: a stored answer
+                        # would keep the first request's date window
+                        body = self._json_answer(u.path, q)
+                    else:
+                        body = get_answer(
+                            outer.spark,
+                            outer.sf_dir,
+                            (u.path, *sorted(q.items())),
+                            lambda: self._json_answer(u.path, q),
+                        )
+                except Exception as e:  # noqa: BLE001 — mapped by _fail
+                    return self._fail(e)
+                self._send(200, body)
 
             def _route_get(self, path: str, q: dict):
                 spark, sf = outer.spark, outer.sf_dir
@@ -188,9 +271,7 @@ class MsgvaultHTTPServer:
                     return self._search(q)
                 if path == "/api/v1/search/deep":
                     return self._deep_search(q)
-                if path.startswith("/api/v1/messages/") and path.endswith(
-                    "/inline"
-                ):
+                if _is_inline(path):
                     mid = path[len("/api/v1/messages/"):-len("/inline")]
                     if not mid.isdigit():
                         raise _HTTPError(400, "Message ID must be a number")
@@ -435,12 +516,15 @@ class MsgvaultHTTPServer:
                     return self._err(
                         400, "body must be a JSON object with a 'sql' key"
                     )
+                limit = body.get("limit")
+                if limit is not None and (
+                    not isinstance(limit, int) or isinstance(limit, bool)
+                ):
+                    return self._err(400, "'limit' must be an integer")
                 try:
-                    r = api.query_sql(
-                        outer.spark, sql, limit=body.get("limit")
-                    )
-                except Exception as e:  # noqa: BLE001 — user SQL errors
-                    return self._err(400, str(e).splitlines()[0][:500])
+                    r = api.query_sql(outer.spark, sql, limit=limit)
+                except Exception as e:  # noqa: BLE001 — mapped by _fail
+                    return self._fail(e)
                 self._send(200, r.to_json())
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)

@@ -37,6 +37,7 @@ the fast path for the (overwhelmingly common) single-sender case.
 
 from __future__ import annotations
 
+import collections
 import functools
 import threading
 
@@ -721,6 +722,67 @@ def get_minhash_index(
     return _MINHASH_MEMO[key]
 
 
+# Serialized HTTP answers (server.py GET routes), keyed on
+# (applicationId, sf_dir, route, sorted query items). An answer is a pure
+# function of the archive frames the memos above hold (server.py keeps
+# clock-relative searches out), so it lives exactly as long as they do:
+# clear_serving_caches() drops it with them. Bodies are a few KB; the LRU
+# byte budget only bounds a pathological key spread.
+ANSWER_BUDGET_BYTES = 64 * 1024 * 1024
+_ANSWER_MEMO: collections.OrderedDict[tuple, bytes] = collections.OrderedDict()
+_ANSWER_BYTES = 0
+# one Event per answer being computed: identical requests wait on it
+# instead of running the same Spark jobs again (single-flight)
+_ANSWER_INFLIGHT: dict[tuple, threading.Event] = {}
+# bumped by clear_serving_caches(): an answer computed across a clear may
+# come from dropped frames, so it is returned but not stored
+_ANSWER_GEN = 0
+# its own lock, never held across compute(): _MEMO_LOCK is held for whole
+# lake builds, and a hit must not wait behind one
+_ANSWER_LOCK = threading.Lock()
+
+
+def get_answer(
+    spark: SparkSession, sf_dir: str, key: tuple, compute
+) -> bytes:
+    """Memoized answer bytes for ``key`` (route path + sorted query items)
+    over the archive at ``sf_dir``. A miss runs ``compute()``; a request
+    for a key already being computed waits for that computation. When
+    ``compute()`` raises, nothing is stored, the error reaches its caller,
+    and each waiter retries (the first one computes the answer itself)."""
+    global _ANSWER_BYTES
+    k = (spark.sparkContext.applicationId, sf_dir, *key)
+    while True:
+        with _ANSWER_LOCK:
+            body = _ANSWER_MEMO.get(k)
+            if body is not None:
+                _ANSWER_MEMO.move_to_end(k)
+                return body
+            flight = _ANSWER_INFLIGHT.get(k)
+            if flight is None:
+                flight = _ANSWER_INFLIGHT[k] = threading.Event()
+                gen = _ANSWER_GEN
+                break
+        flight.wait()
+    body = None
+    try:
+        body = compute()
+        return body
+    finally:
+        with _ANSWER_LOCK:
+            del _ANSWER_INFLIGHT[k]
+            if (
+                body is not None
+                and gen == _ANSWER_GEN
+                and len(body) <= ANSWER_BUDGET_BYTES
+            ):
+                _ANSWER_MEMO[k] = body
+                _ANSWER_BYTES += len(body)
+                while _ANSWER_BYTES > ANSWER_BUDGET_BYTES:
+                    _ANSWER_BYTES -= len(_ANSWER_MEMO.popitem(last=False)[1])
+            flight.set()
+
+
 def _unpersist_tree(obj) -> int:
     """Unpersist every DataFrame reachable inside obj (DFs, dicts,
     tuples/lists of them). blocking=True: callers are memory-pressure
@@ -746,12 +808,18 @@ def clear_serving_caches() -> int:
     """Memory-pressure recovery level 2 (cold-restart-without-process-
     restart): drop every long-lived serving cache this module holds —
     the persisted archive twins, wide view, sharded tables, FTS/term
-    indexes, generic artifacts, components and minhash labelings. Each
+    indexes, generic artifacts, components and minhash labelings — and
+    the HTTP answers computed from them. Each
     getter rebuilds lazily from the artifact lake on next use, so the
     only cost is the next consumer's re-warm; the benefit is a driver
     heap no longer carrying every entry ever served this session.
     Returns the number of memo entries dropped. Scalar memos stay: they
     hold bytes, not relations."""
+    global _ANSWER_BYTES, _ANSWER_GEN
+    with _ANSWER_LOCK:
+        _ANSWER_GEN += 1
+        _ANSWER_MEMO.clear()
+        _ANSWER_BYTES = 0
     dropped = 0
     for memo in (
         _ARCHIVE_MEMO,

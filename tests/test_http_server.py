@@ -6,6 +6,8 @@ middleware, the columnar QueryResult wire shape, and error statuses."""
 from __future__ import annotations
 
 import json
+import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -184,6 +186,13 @@ def test_malformed_inputs_get_http_errors_not_dropped_connections(server):
         _get(server, "/api/v1/messages?ids=")
     assert e.value.code == 400
     assert "empty id list" in json.loads(e.value.read())["error"]
+
+
+def test_post_non_integer_limit_is_a_user_error(server):
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(server, "/api/v1/query", {"sql": "SELECT 1 AS n", "limit": "x"})
+    assert e.value.code == 400
+    assert "limit" in json.loads(e.value.read())["error"]
 
 
 def test_remote_engine_wraps_connection_errors(server):
@@ -420,6 +429,9 @@ def test_serving_never_memoizes_catalog_plans(server):
         "/api/v1/messages?ids=1,2,3",
         "/api/v1/messages/7",
     ):
+        # a tuple no other test sends, so the route runs instead of
+        # answering from the answer cache
+        path += ("&" if "?" in path else "?") + "case=no-plan-memo"
         assert _get(server, path)[0] == 200, path
     # the synthetic raw store carries no inline parts: the route runs its
     # lookup and answers 404
@@ -449,5 +461,227 @@ def test_memory_pressure_request_sheds_and_retries(server, monkeypatch):
         return real(spark, sf_dir)
 
     monkeypatch.setattr(apimod, "get_summary_stats", flaky)
-    status, body = _get(server, "/api/v1/stats")
+    # a tuple no other test sends: a stored answer would skip the route
+    status, body = _get(server, "/api/v1/stats?case=memory-pressure")
     assert status == 200 and calls["n"] == 2
+
+
+# ---------------------------------------------------------------------------
+# answer cache: repeated GET tuples answer from stored bytes, single-flight
+# ---------------------------------------------------------------------------
+
+
+def _count_calls(monkeypatch, name, fail=None, delay=0.0):
+    """Wrap ``api.<name>`` with a call counter; the first call raises
+    ``fail`` when given, every call sleeps ``delay`` seconds first."""
+    from msgvault_spark import api as apimod
+
+    real = getattr(apimod, name)
+    calls = {"n": 0}
+
+    def counted(*a, **kw):
+        calls["n"] += 1
+        time.sleep(delay)
+        if fail is not None and calls["n"] == 1:
+            raise fail
+        return real(*a, **kw)
+
+    monkeypatch.setattr(apimod, name, counted)
+    return calls
+
+
+def test_repeated_tuple_answers_stored_bytes(server, monkeypatch):
+    calls = _count_calls(monkeypatch, "get_total_stats")
+    s1, _, b1 = _get_raw(server, "/api/v1/stats/total?case=repeat&x=1")
+    # the same query items in another order are the same tuple
+    s2, _, b2 = _get_raw(server, "/api/v1/stats/total?x=1&case=repeat")
+    assert s1 == s2 == 200
+    assert b1 == b2
+    assert calls["n"] == 1
+
+
+def test_identical_requests_in_flight_run_the_route_once(server, monkeypatch):
+    calls = _count_calls(monkeypatch, "get_total_stats", delay=1.0)
+    barrier = threading.Barrier(2)
+    bodies = []
+
+    def client():
+        barrier.wait()
+        bodies.append(_get_raw(server, "/api/v1/stats/total?case=flight")[2])
+
+    threads = [threading.Thread(target=client) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert len(bodies) == 2 and bodies[0] == bodies[1]
+    assert calls["n"] == 1
+
+
+def test_stored_answer_still_requires_key(server):
+    path = "/api/v1/stats/total?case=auth"
+    assert _get(server, path)[0] == 200
+    assert _get_err(server, path, key=None)[0] == 401
+    assert _get_err(server, path, key="wrong")[0] == 401
+
+
+@pytest.mark.parametrize(
+    "fail,code",
+    [
+        (ValueError("bad parameter"), 400),
+        ("route-404", 404),
+        (RuntimeError("executor lost"), 500),
+    ],
+    ids=["400", "404", "500"],
+)
+def test_error_answers_are_not_stored(server, monkeypatch, fail, code):
+    """A failed first call answers its status; the tuple's next request
+    runs the route again and only that 200 is stored. An exception that
+    is not a user error is an engine failure: 500, not 400."""
+    from msgvault_spark.server import _HTTPError
+
+    if fail == "route-404":
+        fail = _HTTPError(404, "gone")
+    calls = _count_calls(monkeypatch, "get_total_stats", fail=fail)
+    path = f"/api/v1/stats/total?case=error-{code}"
+    assert _get_err(server, path)[0] == code
+    assert _get(server, path)[0] == 200
+    assert _get(server, path)[0] == 200
+    assert calls["n"] == 2
+
+
+def test_clear_serving_caches_drops_stored_answers(server, monkeypatch):
+    from msgvault_spark.sources.cache import clear_serving_caches
+
+    calls = _count_calls(monkeypatch, "get_total_stats")
+    path = "/api/v1/stats/total?case=clear"
+    _, _, before = _get_raw(server, path)
+    _get_raw(server, path)
+    assert calls["n"] == 1
+    clear_serving_caches()
+    _, _, after = _get_raw(server, path)
+    assert calls["n"] == 2 and after == before
+
+
+def test_answer_computed_across_a_clear_is_returned_not_stored(spark):
+    from msgvault_spark.sources.cache import clear_serving_caches, get_answer
+
+    def compute_across_clear():
+        clear_serving_caches()
+        return b"old"
+
+    key = ("/test/answer", ("case", "generation"))
+    assert get_answer(spark, SF_DIR, key, compute_across_clear) == b"old"
+    assert get_answer(spark, SF_DIR, key, lambda: b"new") == b"new"
+    assert get_answer(spark, SF_DIR, key, lambda: b"newer") == b"new"
+
+
+def test_answer_store_is_lru_bounded_in_bytes(spark, monkeypatch):
+    from msgvault_spark.sources import cache as srccache
+
+    monkeypatch.setattr(srccache, "ANSWER_BUDGET_BYTES", 10)
+
+    def get(name, body):
+        return srccache.get_answer(spark, SF_DIR, ("/lru", name), lambda: body)
+
+    get("a", b"aaaa")  # evicts every answer earlier tests stored
+    get("b", b"bbbb")
+    get("a", b"")  # hit: a becomes most recent
+    get("c", b"cccc")  # 12 bytes > 10: evicts b, the least recent
+    assert get("a", b"x") == b"aaaa"
+    assert get("c", b"x") == b"cccc"
+    assert get("b", b"BBBB") == b"BBBB"
+    assert get("huge", b"h" * 11) == b"h" * 11  # over budget: not stored
+    assert get("huge", b"x") == b"x"
+
+
+def test_answer_store_under_thread_contention(spark):
+    """32 threads over 4 keys with a tiny switch interval: each key is
+    computed exactly once and every caller gets that key's bytes."""
+    import sys
+
+    from msgvault_spark.sources.cache import get_answer
+
+    computed = {k: 0 for k in range(4)}
+    lock = threading.Lock()
+    got = []
+
+    def compute(k):
+        with lock:
+            computed[k] += 1
+        time.sleep(0.01)
+        return f"answer-{k}".encode()
+
+    def client(i):
+        k = i % 4
+        key = ("/stress", ("k", str(k)))
+        got.append((k, get_answer(spark, SF_DIR, key, lambda: compute(k))))
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=client, args=(i,)) for i in range(32)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert computed == {k: 1 for k in range(4)}
+    assert sorted(got) == sorted(
+        (i % 4, f"answer-{i % 4}".encode()) for i in range(32)
+    )
+
+
+def test_relative_date_search_follows_the_clock(server, monkeypatch):
+    """newer_than: resolves against the current time, so its answer is
+    never stored: the same tuple asked at a later ``now`` runs the route
+    again and answers the later window."""
+    from datetime import datetime as real_datetime
+
+    from msgvault_spark.search import parser
+
+    clock = {"now": real_datetime(2001, 1, 1)}
+
+    class FakeDatetime(real_datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return clock["now"].replace(tzinfo=tz)
+
+    monkeypatch.setattr(parser, "datetime", FakeDatetime)
+    calls = _count_calls(monkeypatch, "search_messages")
+    path = "/api/v1/search/fast?q=newer_than:1y&limit=5"
+    status, then = _get(server, path)
+    assert status == 200 and then["row_count"] > 0  # data spans 1995-2001
+    clock["now"] = real_datetime(2030, 1, 1)
+    status, later = _get(server, path)
+    assert status == 200 and later["row_count"] == 0
+    assert calls["n"] == 2
+
+
+def test_ansi_runtime_error_in_user_sql_is_a_400(server):
+    """Spark 4 runs ANSI mode: 1/0 raises ArithmeticException at run
+    time. The SQL is at fault, not the engine."""
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(server, "/api/v1/query", {"sql": "SELECT 1/0 AS x"})
+    assert e.value.code == 400
+    assert "DIVIDE_BY_ZERO" in json.loads(e.value.read())["error"]
+
+
+def test_post_query_is_never_cached(server, monkeypatch):
+    from msgvault_spark.sources import cache as srccache
+
+    calls = _count_calls(
+        monkeypatch, "query_sql", fail=RuntimeError("executor lost")
+    )
+    body = {"sql": "SELECT COUNT(*) AS n FROM v_domains"}
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(server, "/api/v1/query", body)
+    assert e.value.code == 500
+    first = _post(server, "/api/v1/query", body)
+    assert _post(server, "/api/v1/query", body) == first
+    assert first[0] == 200 and calls["n"] == 3
+    assert not [k for k in srccache._ANSWER_MEMO if "/api/v1/query" in k]

@@ -180,6 +180,52 @@ def test_level3_concurrent_ladders_restore_threshold(spark):
     assert spark.conf.get(key) == orig
 
 
+def test_nested_ladder_reaches_level3_without_deadlock(spark, monkeypatch):
+    """A ladder nested inside a level-3 attempt() (a route whose work
+    itself runs under the ladder) reaches its own level 3 on the same
+    thread: the level-3 lock is reentrant. Hard timeout: a non-reentrant
+    lock hangs the thread forever."""
+    import threading
+
+    from msgvault_spark import catalog as catmod
+
+    monkeypatch.setattr(catmod, "_CLEANER_DRAIN_S", 0.0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    orig = spark.conf.get(key)
+    pressure = "Not enough memory to build and broadcast the table"
+    calls = {"outer": 0, "inner": 0}
+
+    def inner():
+        calls["inner"] += 1
+        if calls["inner"] < 4:  # fail first try + levels 1-2
+            raise RuntimeError(pressure)
+        return "ok"
+
+    def outer():
+        calls["outer"] += 1
+        if calls["outer"] < 4:
+            raise RuntimeError(pressure)
+        return catmod.run_with_memory_recovery(spark, inner, label="inner")
+
+    out = {}
+
+    def run():
+        try:
+            out["r"] = catmod.run_with_memory_recovery(
+                spark, outer, label="outer"
+            )
+        except Exception as e:  # noqa: BLE001
+            out["e"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "nested level-3 ladder deadlocked"
+    assert out == {"r": "ok"}
+    assert calls == {"outer": 4, "inner": 4}
+    assert spark.conf.get(key) == orig
+
+
 def test_pagerank_unpersists_superseded_checkpoints(spark):
     from msgvault_spark.operators.pagerank import pagerank
 

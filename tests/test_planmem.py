@@ -135,10 +135,17 @@ def test_evicted_entry_rebuilds_and_collects(spark, monkeypatch):
         assert len(catmod.CATALOG[n].fn(spark, SF_DIR).collect()) == counts[n]
 
 
-def test_racing_builders_share_one_memoized_plan(spark):
+def test_racing_builders_share_one_memoized_plan(spark, monkeypatch):
     """Two threads asking for the same entries at once must both get a
     correct DataFrame: the memo's double-check admits one winner, and the
     loser's duplicate build is discarded, not returned half-initialized."""
+    # no eviction path may drop an entry before the identity check: the
+    # cap and budget are never reached, and the insert valve and the
+    # watchdog never see pressure, whatever earlier tests left on the heap
+    monkeypatch.setattr(catmod, "_PLAN_MEMO_CAP", 100)
+    monkeypatch.setattr(catmod, "_PIN_BUDGET", 10**12)
+    monkeypatch.setattr(catmod, "_PIN_PRESSURE_FRAC", 2.0)
+    monkeypatch.setattr(catmod, "_WATCHDOG_FRAC", 2.0)
     _clear_app(spark)
     app = spark.sparkContext.applicationId
     names = ["agg_domains", "latest_order_per_customer", "union_distinct_parts"]

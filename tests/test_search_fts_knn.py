@@ -26,6 +26,26 @@ def test_search_operators(archive):
     assert 4 not in ids(search_fast(archive, ""))
 
 
+def test_from_search_matching_only_chat_messages_returns_no_rows(archive):
+    """Fast search is email-only (reference shared.go:18): a sender with
+    an email address whose only messages are chat-type matches from: but
+    answers 0 rows."""
+    from msgvault_spark.search.fast import compile_search
+    from msgvault_spark.search.parser import parse_query
+
+    # carol (participant 3) sends only message 4, a whatsapp chat
+    parts = archive["participants"].withColumn(
+        "email_address",
+        F.when(F.col("id") == 3, F.lit("c@z.com")).otherwise(
+            F.col("email_address")
+        ),
+    )
+    chat_only = dict(archive, participants=parts)
+    q = parse_query("from:c@z.com")
+    assert ids(compile_search(chat_only, q, email_only=False)) == [4]
+    assert ids(search_fast(chat_only, "from:c@z.com")) == []
+
+
 def test_search_text_terms_cover_sender_fields(archive):
     # term matches sender display name
     assert ids(search_fast(archive, '"X Corp"')) == [2, 1]
