@@ -22,6 +22,29 @@ from msgvault_spark.catalog import CATALOG
 # exceeds 50, all 50 slots go to touched entries and the overflow relies
 # on the out-of-band full-oracle sweep until its next window.
 _PRIORITY = [
+    # the exact wide record (sources/cache.build_wide_messages with
+    # nested junction rows; aggregate_wide/sub_aggregate_wide and the
+    # shared name helpers in functions/text.py): narrow changes, every
+    # aggregate/sub-aggregate entry re-verifies
+    "agg_senders",
+    "agg_sender_names",
+    "agg_recipients",
+    "agg_domains",
+    "agg_labels",
+    "agg_time_month",
+    "agg_time_year_filtered",
+    "sub_agg_domain_to_senders",
+    "sub_agg_label_to_time",
+    "total_stats",
+    "agg_senders_wide",
+    "agg_domains_wide",
+    "agg_labels_wide",
+    "agg_time_month_wide",
+    "sub_agg_domain_to_senders_wide",
+    "agg_recipients_wide",
+    "agg_senders_wide_multifrom",
+    "agg_senders_join_multifrom",
+    "agg_senders_with_search",
     # --- round 12 gate window (50 slots). Composition, in order:
     # (1) the mid-build narrow changes (promote_generation hardening in
     #     embeddings_pipeline.py; the NEW ivfpq_knn_seed0 +

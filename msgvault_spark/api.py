@@ -123,13 +123,16 @@ def aggregate_view(
 ) -> QueryResult:
     """`aggregate_messages` MCP tool / GET /api/v1/aggregate analog
     (reference mcp/server.go:107-118, api/server.go:153-190): named view →
-    columnar result. opts forwards AggregateOptions fields."""
+    columnar result. opts forwards AggregateOptions fields. Served from
+    the wide record; answers equal ``aggregate`` over the archive."""
     from msgvault_spark.plans import aggregate as agg
     from msgvault_spark.plans.models import AggregateOptions, ViewType
-    from msgvault_spark.sources.cache import get_archive
+    from msgvault_spark.sources.cache import get_wide_messages
 
     options = AggregateOptions(limit=limit, **opts)
-    df = agg.aggregate(get_archive(spark, sf_dir), ViewType(view), options)
+    df = agg.aggregate_wide(
+        get_wide_messages(spark, sf_dir), ViewType(view), options
+    )
     return collect_result(df)
 
 
@@ -138,17 +141,18 @@ def sub_aggregate_view(
 ) -> QueryResult:
     """SubAggregate analog (A3, duckdb.go:1025-1065 / GET
     /api/v1/aggregates/sub): same grouping over a filter-restricted
-    subset. filter_opts forwards MessageFilter fields."""
+    subset. filter_opts forwards MessageFilter fields. Served from the
+    wide record; answers equal ``sub_aggregate``."""
     from msgvault_spark.plans import aggregate as agg
     from msgvault_spark.plans.models import (
         AggregateOptions,
         MessageFilter,
         ViewType,
     )
-    from msgvault_spark.sources.cache import get_archive
+    from msgvault_spark.sources.cache import get_wide_messages
 
-    df = agg.sub_aggregate(
-        get_archive(spark, sf_dir),
+    df = agg.sub_aggregate_wide(
+        get_wide_messages(spark, sf_dir),
         ViewType(view),
         MessageFilter(**filter_opts),
         AggregateOptions(limit=limit),
@@ -160,27 +164,35 @@ def search_messages(
     spark, sf_dir: str, query: str, limit: int = 50
 ) -> QueryResult:
     """`search_messages` MCP tool analog: Gmail-style query string →
-    ranked metadata rows."""
-    from msgvault_spark.search.fast import search_fast
-    from msgvault_spark.sources.cache import get_archive
+    ranked metadata rows. Served from the wide record; answers equal
+    ``search_fast``."""
+    from msgvault_spark.search.fast_wide import search_fast_wide
+    from msgvault_spark.sources.cache import get_wide_messages
 
     return collect_result(
-        search_fast(get_archive(spark, sf_dir), query, limit=limit)
+        search_fast_wide(get_wide_messages(spark, sf_dir), query, limit=limit)
     )
 
 
 def list_view(
     spark, sf_dir: str, *, limit: int = 50, offset: int = 0, **filter_opts
 ) -> QueryResult:
-    """`list_messages` analog: filtered two-phase listing page."""
-    from msgvault_spark.plans.listing import list_messages
+    """`list_messages` analog: filtered two-phase listing page. Served
+    from the wide record; answers equal ``list_messages``."""
     from msgvault_spark.plans.models import MessageFilter, Pagination
-    from msgvault_spark.sources.cache import get_archive
+    from msgvault_spark.search.fast_wide import list_messages_wide
+    from msgvault_spark.sources.cache import get_archive, get_wide_messages
 
     filt = MessageFilter(
         pagination=Pagination(limit=limit, offset=offset), **filter_opts
     )
-    return collect_result(list_messages(get_archive(spark, sf_dir), filt))
+    return collect_result(
+        list_messages_wide(
+            get_wide_messages(spark, sf_dir),
+            get_archive(spark, sf_dir)["conversations"],
+            filt,
+        )
+    )
 
 
 def get_total_stats(spark, sf_dir: str) -> QueryResult:

@@ -161,14 +161,10 @@ def list_messages_by_domain_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sub_agg_domain_to_senders_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drill-down on the wide view: domain filter + senders group-by in one
     scan (sub-aggregate = filter ∘ aggregate, zero joins)."""
-    wide = get_wide_messages(spark, sf_dir)
-    from pyspark.sql import functions as F
-
-    return agg.aggregate_wide(
-        wide.filter(
-            F.col("has_from_row") & (F.col("from_domain") == "nation_7.example.com")
-        ),
+    return agg.sub_aggregate_wide(
+        get_wide_messages(spark, sf_dir),
         ViewType.SENDERS,
+        MessageFilter(domain="nation_7.example.com"),
     )
 
 
@@ -234,24 +230,19 @@ def agg_recipients_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multi-'from' divergence fixtures
+# multi-'from' fixtures
 #
 # The driver's synthetic archive gives every message exactly one 'from'
-# recipient row, so the wide path's first-'from' policy (sources/cache.py
-# first_from: min_by participant_id) and the join path's per-from-row
-# semantics (plans/aggregate.py SENDERS join) are indistinguishable on it.
-# These two entries PLANT a deterministic second 'from' row on ~2% of
-# messages — with the SAME expression in Spark and in the DuckDB oracle —
-# and pin each path's documented behavior with its own oracle:
-#   * wide path: one sender per message, the from-row with the LOWEST
-#     participant_id wins (arg_min in the oracle);
-#   * join path: every from-row contributes a group row (reference
-#     semantics — msg ⋈ mr[type='from'] ⋈ p, duckdb.go runAggregation).
+# recipient row. These two entries PLANT a deterministic second 'from'
+# row on ~2% of messages — with the SAME expression in Spark and in the
+# DuckDB oracle — and check that the wide record and the join path both
+# keep the reference's per-'from'-row semantics there: every from-row
+# contributes a group row (msg ⋈ mr[type='from'] ⋈ p, duckdb.go
+# runAggregation), so both entries share one oracle.
 # The planted participant_id is MIN(to/cc/bcc pid) − SUPPLIER_ID_OFFSET,
 # i.e. the message's smallest supplier key reused as a customer id — a
 # guaranteed-existing participant that is usually (not always) smaller
-# than the original from-pid, so the min_by policy changes real winners
-# in both directions.
+# than the original from-pid.
 # ---------------------------------------------------------------------------
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -315,54 +306,8 @@ def _planted_archive(spark: SparkSession, sf_dir: str) -> dict:
     return arch
 
 
-@register(
-    "agg_senders_wide_multifrom",
-    oracle(
-        f"""
-, {_MULTIFROM_MR2}
-, {_MULTIFROM_ATT}
-, ff AS (
-    SELECT mr.message_id,
-           arg_min(p.email_address, mr.participant_id) AS key
-    FROM mr2 mr
-    JOIN participants p ON p.id = mr.participant_id
-    WHERE mr.recipient_type = 'from'
-    GROUP BY mr.message_id
-)
-, agg AS (
-    SELECT ff.key,
-           COUNT(*) AS count,
-           CAST(COALESCE(SUM(CAST(msg.size_estimate AS BIGINT)), 0) AS BIGINT)
-               AS total_size,
-           CAST(COALESCE(SUM(att.attachment_size), 0) AS BIGINT)
-               AS attachment_size,
-           CAST(COALESCE(SUM(att.attachment_count), 0) AS BIGINT)
-               AS attachment_count
-    FROM messages msg
-    JOIN ff ON ff.message_id = msg.id
-    LEFT JOIN att ON att.message_id = msg.id
-    WHERE ff.key IS NOT NULL
-    GROUP BY 1
-)
-{_MULTIFROM_TAIL}
-"""
-    ),
-)
-def agg_senders_wide_multifrom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Senders over a wide view rebuilt from the planted multi-'from'
-    junction: pins the first-'from' policy (min_by participant_id,
-    sources/cache.py first_from) under real multi-from data — the oracle
-    implements the same policy with arg_min, so a silent change to the
-    survivor rule hash-fails here even though the stock archive can't
-    distinguish it."""
-    wide = build_wide_messages(_planted_archive(spark, sf_dir))
-    return agg.aggregate_wide(wide, ViewType.SENDERS)
-
-
-@register(
-    "agg_senders_join_multifrom",
-    oracle(
-        f"""
+_MULTIFROM_ORACLE = oracle(
+    f"""
 , {_MULTIFROM_MR2}
 , {_MULTIFROM_ATT}
 , agg AS (
@@ -383,12 +328,21 @@ def agg_senders_wide_multifrom(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 {_MULTIFROM_TAIL}
 """
-    ),
 )
+
+
+@register("agg_senders_wide_multifrom", _MULTIFROM_ORACLE)
+def agg_senders_wide_multifrom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Senders over a wide record rebuilt from the planted multi-'from'
+    junction: one group row per 'from' row, like the join path, so a
+    planted message counts for BOTH senders' groups."""
+    wide = build_wide_messages(_planted_archive(spark, sf_dir))
+    return agg.aggregate_wide(wide, ViewType.SENDERS)
+
+
+@register("agg_senders_join_multifrom", _MULTIFROM_ORACLE)
 def agg_senders_join_multifrom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Senders via the JOIN path on the same planted junction: every
     'from' row counts (reference runAggregation semantics) — a planted
-    message contributes to BOTH senders' groups. Together with
-    agg_senders_wide_multifrom this pins the documented divergence
-    between the two paths instead of leaving it prose-only."""
+    message contributes to BOTH senders' groups."""
     return agg.aggregate(_planted_archive(spark, sf_dir), ViewType.SENDERS)

@@ -17,24 +17,21 @@ def nullif_empty(col: Column) -> Column:
     return F.when(col != "", col)
 
 
-def participant_name(df_prefix: str = "") -> Column:
+def participant_name(display: Column, phone: Column, email: Column) -> Column:
     """Display-name fallback chain display_name → phone_number →
-    email_address (reference shared.go:32-37). ``df_prefix`` like 'p.'."""
-    p = df_prefix
+    email_address (reference shared.go:32-37)."""
     return F.coalesce(
-        nullif_empty(F.trim(F.col(p + "display_name"))),
-        nullif_empty(F.col(p + "phone_number")),
-        F.col(p + "email_address"),
+        nullif_empty(F.trim(display)), nullif_empty(phone), email
     )
 
 
-def recipient_name(mr_prefix: str, p_prefix: str) -> Column:
-    """Per-message display override chain (reference shared.go:47-52)."""
+def recipient_name(row: Column) -> Column:
+    """Per-message display override chain (reference shared.go:47-52) over
+    a wide-record junction row (sources/cache.py): the recipient row's
+    display_name, then the participant's chain, then ''."""
     return F.coalesce(
-        nullif_empty(F.trim(F.col(mr_prefix + "display_name"))),
-        nullif_empty(F.trim(F.col(p_prefix + "display_name"))),
-        nullif_empty(F.col(p_prefix + "phone_number")),
-        F.col(p_prefix + "email_address"),
+        nullif_empty(F.trim(row["recipient_display_name"])),
+        participant_name(row["display_name"], row["phone"], row["email"]),
         F.lit(""),
     )
 

@@ -205,10 +205,12 @@ def aggregate_wide(
     *,
     total_unique: int | None = None,
 ) -> DataFrame:
-    """Join-free aggregate over the denormalized wide view
-    (sources/cache.py): scan + hash-agg only — the 100 TB fast path. Sender
-    semantics = first-'from' per message (see cache.py note); identical to
-    the join path whenever messages carry a single sender row.
+    """``aggregate`` over the denormalized wide record
+    (sources/cache.build_wide_messages): scan + hash-agg, no join — the
+    100 TB fast path, same answer as the join path clause for clause. A
+    junction view explodes the record's nested rows, so each 'from' row,
+    to/cc/bcc row or label row is one group row, exactly the
+    msg ⋈ junction ⋈ dim rows ``aggregate`` groups.
 
     ``total_unique``: the distinct-group count captured at ETL time (a
     catalog statistic, exactly like BM25's corpus constants) — folds in
@@ -216,7 +218,7 @@ def aggregate_wide(
     must pass it ONLY for the unfiltered corpus scope; any filtered
     drill-down keeps the in-plan total."""
     opts = opts or AggregateOptions()
-    df = wide
+    df = live_messages(wide, opts.hide_deleted_from_source)
     preds = _base_message_predicates(opts)
     if total_unique is not None and preds:
         # the ETL-captured statistic is only valid for the unfiltered corpus
@@ -228,43 +230,45 @@ def aggregate_wide(
     for cond in preds:
         df = df.filter(cond)
 
-    # sender views gate on has_from_row so the wide path matches the join
-    # path's "must have a 'from' recipient row" semantics (the ds_* fallback
-    # columns serve search/listing, not these aggregates)
-    if view == ViewType.SENDERS:
-        key = F.col("from_email")
-        guard = F.col("has_from_row") & key.isNotNull()
-    elif view == ViewType.SENDER_NAMES:
-        key = F.col("from_name")
-        guard = F.col("has_from_row") & key.isNotNull()
+    rows = {
+        ViewType.SENDERS: "from_rows",
+        ViewType.SENDER_NAMES: "from_rows",
+        ViewType.DOMAINS: "from_rows",
+        ViewType.RECIPIENTS: "recipient_rows",
+        ViewType.RECIPIENT_NAMES: "recipient_rows",
+        ViewType.LABELS: "labels",
+    }.get(view)
+    if rows is not None:
+        df = df.withColumn("_row", F.explode(rows))
+    r = F.col("_row")
+    if view in (ViewType.SENDERS, ViewType.RECIPIENTS):
+        key = r["email"]
+        null_guard = key.isNotNull()
     elif view == ViewType.DOMAINS:
-        key = F.col("from_domain")
-        guard = F.col("has_from_row") & key.isNotNull() & (key != "")
-    elif view == ViewType.TIME:
-        key, guard = time_key(opts.time_granularity), F.col("sent_at").isNotNull()
+        key = r["domain"]
+        null_guard = key.isNotNull() & (key != "")
+    elif view in (ViewType.SENDER_NAMES, ViewType.RECIPIENT_NAMES):
+        key = participant_name(r["display_name"], r["phone"], r["email"])
+        null_guard = key.isNotNull()
     elif view == ViewType.LABELS:
-        df = df.select(
-            F.explode("labels").alias("_lbl"),
-            F.col("size_estimate"),
-            F.col("att_size_sum"),
-            F.col("att_count_sum"),
-        )
-        key, guard = F.col("_lbl"), F.col("_lbl").isNotNull()
-    elif view == ViewType.RECIPIENTS:
-        # multiplicity-preserving explode of the denormalized email array —
-        # the join-free twin of the msg⋈mr(to/cc/bcc)⋈p path
-        df = df.select(
-            F.explode("recipient_emails").alias("_remail"),
-            F.col("size_estimate"),
-            F.col("att_size_sum"),
-            F.col("att_count_sum"),
-        )
-        key, guard = F.col("_remail"), F.col("_remail").isNotNull()
-    else:
-        raise ValueError(f"wide path does not support view {view}")
+        key = r
+        null_guard = key.isNotNull()
+    elif view == ViewType.TIME:
+        key = time_key(opts.time_granularity)
+        null_guard = F.col("sent_at").isNotNull()
+    else:  # pragma: no cover
+        raise ValueError(f"unsupported view type: {view}")
+
+    if opts.search_query:
+        for term in opts.search_query.split():
+            df = df.filter(
+                ilike_contains(F.col("subject"), term)
+                | ilike_contains(F.col("snippet"), term)
+                | ilike_contains(key, term)
+            )
 
     grouped = (
-        df.filter(guard)
+        df.filter(null_guard)
         .groupBy(key.alias("key"))
         .agg(
             F.count(F.lit(1)).alias("count"),
@@ -319,6 +323,18 @@ def sub_aggregate(
     restricted = dict(archive)
     restricted["messages"] = apply_message_filter(archive, filter_)
     return aggregate(restricted, view, opts)
+
+
+def sub_aggregate_wide(
+    wide: DataFrame,
+    view: ViewType,
+    filter_: MessageFilter,
+    opts: AggregateOptions | None = None,
+) -> DataFrame:
+    """``sub_aggregate`` over the wide record: filter, then aggregate."""
+    from msgvault_spark.plans.filters import apply_message_filter_wide
+
+    return aggregate_wide(apply_message_filter_wide(wide, filter_), view, opts)
 
 
 def total_stats(

@@ -16,7 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from msgvault_spark.functions.text import ilike_equals, time_key
+from msgvault_spark.functions.text import (
+    ilike_equals,
+    participant_name,
+    time_key,
+)
 from msgvault_spark.plans.models import (
     MessageFilter,
     ViewType,
@@ -188,5 +192,109 @@ def apply_message_filter(
         msg = msg.join(
             ml.select(F.col("message_id").alias("id")), "id", "left_anti"
         )
+
+    return msg
+
+
+def _row_name(r: Column) -> Column:
+    return participant_name(r["display_name"], r["phone"], r["email"])
+
+
+def _sender_name() -> Column:
+    return participant_name(
+        F.col("sender_display_name"), F.col("sender_phone"), F.col("sender_email")
+    )
+
+
+def apply_message_filter_wide(
+    wide: DataFrame, filter_: MessageFilter
+) -> DataFrame:
+    """``apply_message_filter`` over the denormalized wide record
+    (sources/cache.build_wide_messages), clause for clause: each semi-join
+    becomes an EXISTS over the record's nested junction rows and each
+    anti-join its negation, so the same messages pass. All wide columns
+    are preserved (the result can re-enter aggregate_wide())."""
+    from msgvault_spark.plans.aggregate import live_messages
+
+    msg = live_messages(wide, filter_.hide_deleted_from_source)
+    froms, recips = F.col("from_rows"), F.col("recipient_rows")
+
+    # --- plain column predicates -------------------------------------------
+    if filter_.source_ids is not None:
+        if len(filter_.source_ids) == 0:
+            msg = msg.filter(F.lit(False))
+        else:
+            msg = msg.filter(F.col("source_id").isin(*filter_.source_ids))
+    if filter_.conversation_id is not None:
+        msg = msg.filter(F.col("conversation_id") == filter_.conversation_id)
+    if filter_.after is not None:
+        msg = msg.filter(F.col("sent_at") >= F.lit(filter_.after))
+    if filter_.before is not None:
+        msg = msg.filter(F.col("sent_at") < F.lit(filter_.before))
+    if filter_.with_attachments_only:
+        msg = msg.filter(F.col("has_attachments") == F.lit(True))
+    if filter_.time_period:
+        g = infer_time_granularity(filter_.time_granularity, filter_.time_period)
+        msg = msg.filter(time_key(g) == filter_.time_period)
+
+    # --- junction filters as EXISTS over the nested rows -------------------
+    # Anti-join predicates below are never NULL, so their negation keeps
+    # exactly the rows the anti-join keeps.
+    if filter_.sender:
+        s = filter_.sender
+        msg = msg.filter(
+            F.array_contains(F.col("from_rows.email"), s)
+            | F.array_contains(F.col("from_rows.phone"), s)
+            | (F.col("sender_email") == s)
+            | (F.col("sender_phone") == s)
+        )
+    elif ViewType.SENDERS in filter_.empty_value_targets:
+        msg = msg.filter(
+            F.col("sender_id").isNull()
+            & ~F.exists(
+                froms,
+                lambda r: (r["email"].isNotNull() & (r["email"] != ""))
+                | (r["phone"].isNotNull() & (r["phone"] != "")),
+            )
+        )
+
+    if filter_.sender_name:
+        n = filter_.sender_name
+        msg = msg.filter(
+            F.exists(froms, lambda r: _row_name(r) == n) | (_sender_name() == n)
+        )
+    elif ViewType.SENDER_NAMES in filter_.empty_value_targets:
+        msg = msg.filter(
+            ~F.exists(froms, lambda r: _row_name(r).isNotNull())
+            & _sender_name().isNull()
+        )
+
+    if filter_.recipient:
+        msg = msg.filter(
+            F.array_contains(F.col("recipient_rows.email"), filter_.recipient)
+        )
+    elif ViewType.RECIPIENTS in filter_.empty_value_targets:
+        msg = msg.filter(F.size(recips) == 0)
+
+    if filter_.recipient_name:
+        n = filter_.recipient_name
+        msg = msg.filter(F.exists(recips, lambda r: _row_name(r) == n))
+    elif ViewType.RECIPIENT_NAMES in filter_.empty_value_targets:
+        msg = msg.filter(~F.exists(recips, lambda r: _row_name(r).isNotNull()))
+
+    if filter_.domain:
+        msg = msg.filter(F.array_contains(F.col("from_rows.domain"), filter_.domain))
+    elif ViewType.DOMAINS in filter_.empty_value_targets:
+        msg = msg.filter(
+            ~F.exists(
+                froms, lambda r: r["domain"].isNotNull() & (r["domain"] != "")
+            )
+        )
+
+    if filter_.label:
+        label = filter_.label
+        msg = msg.filter(F.exists("labels", lambda x: ilike_equals(x, label)))
+    elif ViewType.LABELS in filter_.empty_value_targets:
+        msg = msg.filter(F.size("labels") == 0)
 
     return msg

@@ -238,12 +238,19 @@ class SearchWithStats:
     stats, and every page — the reference's temp-table cache
     (duckdb.go:2190-2300) as a persisted DataFrame."""
 
-    def __init__(self, archive: dict[str, DataFrame], query: str | ParsedQuery,
+    def __init__(self, source: dict[str, DataFrame] | DataFrame,
+                 query: str | ParsedQuery,
                  filter_: MessageFilter | None = None):
+        """``source``: the archive (join path, ``compile_search``) or the
+        wide record (``fast_wide.compile_search_wide``, same matches)."""
+        from msgvault_spark.search.fast_wide import compile_search_wide
         from msgvault_spark.search.parser import parse_query
 
         q = parse_query(query) if isinstance(query, str) else query
-        self.matches = compile_search(archive, q, filter_).persist(
+        compile_ = (
+            compile_search_wide if isinstance(source, DataFrame) else compile_search
+        )
+        self.matches = compile_(source, q, filter_).persist(
             StorageLevel.MEMORY_AND_DISK
         )
 

@@ -1,24 +1,27 @@
-"""Fast search + listing over the denormalized wide view.
+"""Fast search + listing over the denormalized wide record.
 
-Same user-visible semantics as search/fast.py and plans/listing.py for the
-single-'from'-row case, but compiled against the wide view: every predicate
-— including from:/text-term/sender-field matches — is a column filter on ONE
-scan, no joins until the (tiny) page decoration. This is the 100 TB shape:
-the wide view is the columnar search index, filters push into parquet, and
-a query is scan → filter → top-k.
+Same answers as search/fast.py (``compile_search``, ``search_fast``) and
+plans/listing.py (``list_messages``), clause for clause, compiled against
+the wide record of sources/cache.build_wide_messages: every predicate —
+including from:/to:/label matches, which the join path answers with
+semi-joins against message_recipients/participants/message_labels — is a
+column or nested-row filter on ONE scan, and the sender columns are
+resolved from the record's own rows. This is the 100 TB shape: the wide
+record is the columnar search index, filters push into the scan, and a
+query is scan → filter → top-k, with one broadcast of conversations to
+decorate a listing page.
 
-Recipient (to:/cc:/bcc:/recipient) filters compile to EXISTS over the wide
-row's denormalized recipient_emails/recipient_phones arrays — one scan, no
-junction-table shuffle — mirroring the reference's denormalized search
-columns (internal/query/duckdb.go:719-770, SURVEY §1.1). Semantics match
-the join path's semi-join exactly: to:/cc:/bcc: all probe the merged
-to∪cc∪bcc set (search/fast.py), ilike on email-or-phone; `recipient` is
-exact equality.
+Sender resolution (the join path's ``_sender_resolution`` and listing
+phase 2): the 'from' row with the lowest participant_id — element 1 of
+the sorted ``from_rows`` — else the direct sender (``sender_*``), else
+''. Operator matches over nested rows (from:, to:/cc:/bcc:) are EXISTS
+over the rows, like the join path's semi-joins (reference denormalized
+search columns, internal/query/duckdb.go:719-770, SURVEY §1.1).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from msgvault_spark.functions.text import (
@@ -26,19 +29,58 @@ from msgvault_spark.functions.text import (
     ilike_contains,
     ilike_endswith,
     ilike_equals,
+    participant_name,
+    recipient_name,
     time_key,
 )
-from msgvault_spark.plans.models import (
-    MessageFilter,
-    MessageSortField,
-    SortDirection,
-    infer_time_granularity,
-)
+from msgvault_spark.operators.present import present_sorted
+from msgvault_spark.plans.models import MessageFilter, infer_time_granularity
 from msgvault_spark.search.parser import ParsedQuery, parse_query
-
 
 # lowered-contains compilation of ILIKE '%escaped%' (functions/text.py)
 _ilike = ilike_contains
+
+
+def _any_ilike(values: Column, term: str, blob: Column | None = None) -> Column:
+    """EXISTS(values, v -> v ILIKE '%term%') over an array of strings.
+    For a term that is non-empty and has no '\\n' it is the lowered
+    contains() over the '\\n'-joined array (``blob`` when the record
+    stores it pre-lowered): such a term cannot span a join boundary, and
+    the flat predicate stays inside whole-stage codegen, where the
+    higher-order EXISTS drops to interpreted evaluation (~4× slower per
+    scan). '' matches any non-NULL element, which the join would hide."""
+    if term == "" or "\n" in term:
+        return F.exists(values, lambda v: ilike_contains(v, term))
+    if blob is not None:
+        return blob.contains(F.lower(F.lit(term)))
+    return ilike_contains(F.concat_ws("\n", values), term)
+
+
+def _first_from() -> Column:
+    """The lowest-participant_id 'from' row (NULL when there is none)."""
+    return F.try_element_at(F.col("from_rows"), F.lit(1))
+
+
+def _resolved_sender(name: Column) -> list[Column]:
+    """from_email / from_name / from_phone of the join path: the first
+    'from' row's, each column falling back to the direct sender, then ''.
+    ``name`` is the first row's name chain (search and listing differ)."""
+    first = _first_from()
+    return [
+        F.coalesce(first["email"], F.col("sender_email"), F.lit("")).alias(
+            "from_email"
+        ),
+        F.coalesce(
+            F.when(first.isNotNull(), name),
+            F.col("sender_display_name"),
+            F.lit(""),
+        ).alias("from_name"),
+        F.coalesce(
+            F.when(first.isNotNull(), F.coalesce(first["phone"], F.lit(""))),
+            F.col("sender_phone"),
+            F.lit(""),
+        ).alias("from_phone"),
+    ]
 
 
 def compile_search_wide(
@@ -47,12 +89,13 @@ def compile_search_wide(
     filter_: MessageFilter | None = None,
     email_only: bool = True,
 ) -> DataFrame:
+    """``compile_search`` over the wide record: the matching messages'
+    columns plus resolved from_email/from_name/from_phone."""
+    from msgvault_spark.plans.aggregate import live_messages
+    from msgvault_spark.sources.cache import WIDE_EXTRA_COLUMNS
+
     filter_ = filter_ or MessageFilter()
-    df = wide
-    if "deleted_at" in df.columns:
-        df = df.filter(F.col("deleted_at").isNull())
-    if filter_.hide_deleted_from_source:
-        df = df.filter(F.col("deleted_from_source_at").isNull())
+    df = live_messages(wide, filter_.hide_deleted_from_source)
     if email_only:
         df = df.filter(email_only_predicate())
 
@@ -80,85 +123,70 @@ def compile_search_wide(
         df = df.filter(time_key(g) == filter_.time_period)
     for term in q.subject_terms:
         df = df.filter(_ilike(F.col("subject"), term))
+
+    # --- the join path's semi-joins: EXISTS over the nested rows ----------
     if filter_.sender:
+        s = filter_.sender
         df = df.filter(
-            (F.col("from_email") == filter_.sender)
-            | (F.col("from_phone") == filter_.sender)
+            F.array_contains(F.col("from_rows.email"), s)
+            | F.array_contains(F.col("from_rows.phone"), s)
+            | (F.col("sender_email") == s)
+            | (F.col("sender_phone") == s)
         )
-    if filter_.domain:
+    if filter_.recipient:
+        r = filter_.recipient
         df = df.filter(
-            ilike_endswith(F.col("from_email"), "@" + filter_.domain)
+            F.array_contains(F.col("recipient_rows.email"), r)
+            | F.array_contains(F.col("recipient_rows.phone"), r)
         )
+    if filter_.label:
+        label = filter_.label
+        df = df.filter(F.exists("labels", lambda x: ilike_equals(x, label)))
+    for label in q.labels:
+        df = df.filter(_any_ilike(F.col("labels"), label))
     for addr in q.from_addrs:
         df = df.filter(
-            _ilike(F.col("from_email"), addr)
-            | _ilike(F.col("from_phone"), addr)
-            | _ilike(F.col("from_name"), addr)
+            _any_ilike(F.col("from_rows.email"), addr)
+            | _any_ilike(F.col("from_rows.phone"), addr)
+            | _any_ilike(F.col("from_rows.display_name"), addr)
+            | _ilike(F.col("sender_email"), addr)
+            | _ilike(F.col("sender_phone"), addr)
+            | _ilike(F.col("sender_display_name"), addr)
         )
-    # factory closures: a higher-order lambda must stay single-parameter
-    # (PySpark feeds the array index to any second parameter)
-    def _elem_equals(term: str):
-        return lambda x: ilike_equals(x, term)
-
-    def _elem_contains(term: str):
-        return lambda x: ilike_contains(x, term)
-
-    if filter_.label:
-        df = df.filter(F.exists("labels", _elem_equals(filter_.label)))
-    for label in q.labels:
-        df = df.filter(F.exists("labels", _elem_contains(label)))
-    for term in q.text_terms:
+    # to:/cc:/bcc: all probe the merged to∪cc∪bcc rows, email or phone
+    for addr in q.to_addrs + q.cc_addrs + q.bcc_addrs:
         df = df.filter(
+            _any_ilike(
+                F.col("recipient_rows.email"), addr, F.col("recipient_emails_lc")
+            )
+            | _any_ilike(
+                F.col("recipient_rows.phone"), addr, F.col("recipient_phones_lc")
+            )
+        )
+
+    # --- sender resolution + last-stage predicates -------------------------
+    first = _first_from()
+    name = F.coalesce(
+        participant_name(first["display_name"], first["phone"], first["email"]),
+        F.lit(""),
+    )
+    decorated = df.select(
+        *[c for c in df.columns if c not in WIDE_EXTRA_COLUMNS],
+        *_resolved_sender(name),
+    )
+    if filter_.domain:
+        decorated = decorated.filter(
+            ilike_endswith(F.col("from_email"), "@" + filter_.domain)
+        )
+    for term in q.text_terms:
+        decorated = decorated.filter(
             _ilike(F.col("subject"), term)
             | _ilike(F.coalesce(F.col("snippet"), F.lit("")), term)
             | _ilike(F.col("from_email"), term)
             | _ilike(F.col("from_name"), term)
             | _ilike(F.col("from_phone"), term)
         )
-    # to:/cc:/bcc: probe the merged to∪cc∪bcc arrays, same as the join
-    # path's _recipient_ids(("to","cc","bcc"), email ILIKE | phone ILIKE).
-    # Fast path: the operator value is a LITERAL substring, and a literal
-    # without '\n' cannot span a '\n' join boundary, so lowered-contains
-    # over concat_ws("\n", array) is exactly exists(array, ILIKE) — and
-    # stays inside whole-stage codegen, where the array-exists
-    # higher-order function drops to interpreted evaluation (~4× slower
-    # per scan).
-    for addr in q.to_addrs + q.cc_addrs + q.bcc_addrs:
-        if addr == "":
-            # join-path parity: an empty operator value ('to:') matches
-            # messages with at least one recipient row whose email OR
-            # phone is non-NULL ('' ILIKE '%%' is true, NULL is not);
-            # '%%' over the concat would instead match EVERY message
-            df = df.filter(
-                (F.size(F.col("recipient_emails")) > 0)
-                | (F.size(F.col("recipient_phones")) > 0)
-            )
-            continue
-        if "\n" in addr:
-            df = df.filter(
-                F.exists("recipient_emails", _elem_contains(addr))
-                | F.exists("recipient_phones", _elem_contains(addr))
-            )
-        elif "recipient_emails_lc" in df.columns:
-            # pre-lowered build-time blobs (sources/cache.py): the scan
-            # reads two flat strings instead of decoding both arrays and
-            # lowering their concat per row; contains(lower(lit)) is the
-            # identical predicate (blob = lower(concat_ws("\n", arr)))
-            df = df.filter(
-                F.col("recipient_emails_lc").contains(F.lower(F.lit(addr)))
-                | F.col("recipient_phones_lc").contains(F.lower(F.lit(addr)))
-            )
-        else:
-            df = df.filter(
-                ilike_contains(F.concat_ws("\n", F.col("recipient_emails")), addr)
-                | ilike_contains(F.concat_ws("\n", F.col("recipient_phones")), addr)
-            )
-    if filter_.recipient:
-        df = df.filter(
-            F.array_contains("recipient_emails", filter_.recipient)
-            | F.array_contains("recipient_phones", filter_.recipient)
-        )
-    return df
+    return decorated
 
 
 def search_fast_wide(
@@ -167,15 +195,16 @@ def search_fast_wide(
     filter_: MessageFilter | None = None,
     limit: int = 100,
 ) -> DataFrame:
+    """``search_fast`` over the wide record: top page by recency."""
     q = parse_query(query) if isinstance(query, str) else query
-    df = compile_search_wide(wide, q, filter_)
     return (
-        df.select(
+        compile_search_wide(wide, q, filter_)
+        .select(
             "id",
             F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
             F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
-            F.coalesce(F.col("from_email"), F.lit("")).alias("from_email"),
-            F.coalesce(F.col("from_name"), F.lit("")).alias("from_name"),
+            "from_email",
+            "from_name",
             "sent_at",
             F.coalesce(F.col("size_estimate"), F.lit(0)).alias("size_estimate"),
             F.coalesce(F.col("has_attachments"), F.lit(False)).alias(
@@ -192,27 +221,22 @@ def list_messages_wide(
     conversations: DataFrame,
     filter_: MessageFilter,
 ) -> DataFrame:
-    """Two-phase listing where phase 2 is a single broadcast join against
-    conversations — sender fields and labels already ride on the wide row."""
-    df = compile_search_wide(wide, ParsedQuery(), filter_, email_only=False)
-    field = {
-        MessageSortField.DATE: "sent_at",
-        MessageSortField.SIZE: "size_estimate",
-        MessageSortField.SUBJECT: "subject",
-    }[filter_.sorting.field]
-    primary = F.col(field)
-    order = (
-        [primary.desc(), F.col("id").desc()]
-        if filter_.sorting.direction == SortDirection.DESC
-        else [primary.asc(), F.col("id").asc()]
-    )
+    """``list_messages`` over the wide record: the page of filtered
+    messages (apply_message_filter_wide), decorated from the record's own
+    rows — the listing's name chain prefers the 'from' row's display
+    name — plus one broadcast join against conversations."""
+    from msgvault_spark.plans.filters import apply_message_filter_wide
+    from msgvault_spark.plans.listing import _sort_cols
+
+    filtered = apply_message_filter_wide(wide, filter_)
+    order = _sort_cols(filter_)
     limit = filter_.pagination.limit or 500
     offset = filter_.pagination.offset
     # native OFFSET (O4): distributed TakeOrdered, not a global window
+    page = filtered.orderBy(*order)
     if offset:
-        page = df.orderBy(*order).offset(offset).limit(limit)
-    else:
-        page = df.orderBy(*order).limit(limit)
+        page = page.offset(offset)
+    page = page.limit(limit)
 
     conv = conversations.select(
         F.col("id").alias("conv_id"),
@@ -232,9 +256,7 @@ def list_messages_wide(
             ),
             F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
             F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
-            F.coalesce(F.col("from_email"), F.lit("")).alias("from_email"),
-            F.coalesce(F.col("from_name"), F.lit("")).alias("from_name"),
-            F.coalesce(F.col("from_phone"), F.lit("")).alias("from_phone"),
+            *_resolved_sender(recipient_name(_first_from())),
             F.col("sent_at"),
             F.coalesce(F.col("size_estimate"), F.lit(0)).alias("size_estimate"),
             F.coalesce(F.col("has_attachments"), F.lit(False)).alias(
@@ -246,5 +268,5 @@ def list_messages_wide(
             F.coalesce(F.col("message_type"), F.lit("")).alias("message_type"),
             F.coalesce(F.col("c_title"), F.lit("")).alias("conv_title"),
         )
-        .orderBy(*order)
+        .transform(present_sorted, *order)
     )

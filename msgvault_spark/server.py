@@ -30,6 +30,17 @@ Routes (GET unless noted):
     /api/v1/accounts             — account stats (handleListAccounts)
     POST /api/v1/query {"sql": ..., "limit"?: N}   (handleQuery)
 
+Denormalized record: the aggregate, sub-aggregate, fast-search, filtered
+listing, fts search and deep search routes (``/api/v1/aggregates``,
+``/aggregates/sub``, ``/search/fast``, ``/messages/filter``,
+``/search`` with mode=fts, ``/search/deep``) read the wide message record
+(``sources.cache.get_wide_messages``: each message with its
+message_recipients rows as nested fields, its direct sender, labels and
+attachment sums) — one pruned scan, no per-request join, same answers
+as the join-path plans. The record loads on the first request that needs
+it. Stats, total, accounts, id hydration, detail, inline, vector/hybrid
+search and SQL keep their join-path plans.
+
 Auth mirrors the reference's API-key middleware: when the server is
 constructed with ``api_key``, every /api/v1 request must carry it in the
 ``X-API-Key`` header (401 otherwise); /health stays open
@@ -359,10 +370,10 @@ class MsgvaultHTTPServer:
                 if size < 1 or size > 100:
                     size = 20
                 from msgvault_spark.search.fast import SearchWithStats
-                from msgvault_spark.sources.cache import get_archive
+                from msgvault_spark.sources.cache import get_wide_messages
 
-                arch = get_archive(outer.spark, outer.sf_dir)
-                sws = SearchWithStats(arch, query)
+                wide = get_wide_messages(outer.spark, outer.sf_dir)
+                sws = SearchWithStats(wide, query)
                 try:
                     total = sws.count()
                     messages = self._rows_as_dicts(
@@ -385,7 +396,7 @@ class MsgvaultHTTPServer:
                 from msgvault_spark.search.hybrid import hybrid_search
                 from msgvault_spark.search.parser import parse_query
                 from msgvault_spark.similarity.knn import knn_bruteforce
-                from msgvault_spark.sources.cache import get_table
+                from msgvault_spark.sources.cache import get_scalar, get_table
 
                 parsed = parse_query(query)
                 free = " ".join(parsed.text_terms)
@@ -401,7 +412,13 @@ class MsgvaultHTTPServer:
                 emb = get_table(spark, sf, "embeddings")
                 from pyspark.sql import functions as F
 
-                dim = emb.select(F.size("embedding")).head()[0]
+                # a per-snapshot catalog statistic (BM25's corpus-stats
+                # pattern), not a Spark job per request
+                dim = get_scalar(
+                    spark,
+                    (sf, "embedding_dim"),
+                    lambda: emb.select(F.size("embedding")).head()[0],
+                )
                 qvec = fake_embed([free], dim)[0]
                 if mode == "hybrid":
                     hits = hybrid_search(
@@ -440,7 +457,7 @@ class MsgvaultHTTPServer:
                     limit = 100
                 from msgvault_spark.plans.models import MessageFilter
                 from msgvault_spark.search.fast import SearchWithStats
-                from msgvault_spark.sources.cache import get_archive
+                from msgvault_spark.sources.cache import get_wide_messages
 
                 filt = MessageFilter(
                     domain=q.get("domain", ""),
@@ -450,8 +467,8 @@ class MsgvaultHTTPServer:
                         [int(q["source_id"])] if q.get("source_id") else None
                     ),
                 )
-                arch = get_archive(outer.spark, outer.sf_dir)
-                sws = SearchWithStats(arch, query, filt)
+                wide = get_wide_messages(outer.spark, outer.sf_dir)
+                sws = SearchWithStats(wide, query, filt)
                 try:
                     # fetch one extra row to report has_more exactly
                     rows = self._rows_as_dicts(

@@ -17,22 +17,19 @@ straight off the prebuilt cache). Spark-first equivalents here:
     bucket count sized to the data (16 here ≈ local cores/2; ~512 MB
     buckets at 100 TB).
 
-  - wide_messages(): the v_messages-style denormalized view
-    (reference internal/query/views.go:346-489): messages + resolved sender
-    (first-'from' per message, min_by-deterministic) + sorted label array +
-    attachment pre-agg. Sender/domain/time aggregates become scan+agg with
-    ZERO joins — the shape that wins at 100 TB, built once per ETL and
-    served as a plain lake scan (column pruning + pushdown reach the
-    parquet footers, which full-width in-memory caching would forfeit).
+  - get_wide_messages(): the v_messages-style denormalized record
+    (reference internal/query/views.go:346-489; the paper's Parquet
+    cache, internal/query/DESIGN.md:19-31): messages + their
+    message_recipients rows as nested repeated fields + direct sender +
+    label array + attachment pre-agg (build_wide_messages). Aggregate,
+    search and listing plans become scan+filter+agg with ZERO joins and
+    answer exactly what the join-path plans answer — the shape that wins
+    at 100 TB, built once per ETL and served as a lake scan (column
+    pruning + pushdown reach the parquet footers).
 
 When the artifact store is disabled (SPARK_GRAFT_ARTIFACT_DIR="") the
 pre-round-11 in-session fallback applies: repartition by join key +
 MEMORY_AND_DISK persist, the same co-partitioning paid per session.
-
-NOTE wide-view semantics: sender columns hold the FIRST 'from' participant.
-For archives where a message can carry several 'from' rows the canonical
-join path (plans/aggregate.py) keeps per-row multiplicity; the wide path is
-the fast path for the (overwhelmingly common) single-sender case.
 """
 
 from __future__ import annotations
@@ -145,8 +142,32 @@ def _persist_dims(arch: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
-    """Denormalized wide view: one row per live message with resolved
-    sender, sorted label-name array, and attachment sums."""
+    """Denormalized wide record: one row per live message carrying its
+    junction rows as nested repeated fields (Dremel's record layout), so
+    aggregate, search and listing plans over it reproduce the join-path
+    plans exactly with no query-time join:
+
+      - every message column;
+      - ``from_rows`` / ``recipient_rows``: the message's 'from' and
+        to/cc/bcc ``message_recipients`` rows, each with its participant,
+        as sorted ``array<struct<participant_id, email, domain,
+        display_name, phone, recipient_display_name>>`` (one element per
+        junction row, multiplicity kept; ``display_name`` is the
+        participant's, ``recipient_display_name`` the row's override).
+        'from' rows keep only rows whose participant exists, the inner
+        join every sender plan makes, so element 1 is the lowest
+        participant_id (the join path's min_by survivor). Recipient rows
+        keep every row, participant fields NULL when unresolved: the
+        "(no recipient)" drill-down counts raw rows;
+      - ``sender_email``, ``sender_domain``, ``sender_display_name``,
+        ``sender_phone``: the direct sender (``sender_id``, chat), NULL
+        when absent;
+      - ``labels``: sorted label names, one per ``message_labels`` row
+        (NULL where the label id has no ``labels`` row);
+      - ``att_size_sum`` / ``att_count_sum``: the attachment pre-agg;
+      - ``recipient_emails_lc`` / ``recipient_phones_lc``: the lowered
+        '\\n'-joined recipient emails/phones, the to:/cc:/bcc: search
+        blobs (search/fast_wide.py)."""
     from msgvault_spark.plans.aggregate import _attachment_preagg, live_messages
 
     msg = live_messages(archive["messages"])
@@ -158,59 +179,39 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         F.col("display_name").alias("p_display"),
         F.col("phone_number").alias("p_phone"),
     )
-    name_expr = F.coalesce(
-        F.when(F.trim(F.col("p_display")) != "", F.trim(F.col("p_display"))),
-        F.when(F.col("p_phone") != "", F.col("p_phone")),
-        F.col("p_email"),
+    row = F.struct(
+        F.col("participant_id"),
+        F.col("p_email").alias("email"),
+        F.col("p_domain").alias("domain"),
+        F.col("p_display").alias("display_name"),
+        F.col("p_phone").alias("phone"),
+        F.col("display_name").alias("recipient_display_name"),
     )
-    first_from = (
-        mr.filter(F.col("recipient_type") == "from")
-        .join(F.broadcast(p_ren), F.col("participant_id") == F.col("p_id"))
-        .select(
-            "message_id",
-            F.col("p_email").alias("_email"),
-            F.col("p_domain").alias("_domain"),
-            name_expr.alias("_name"),
-            F.coalesce(F.col("p_phone"), F.lit("")).alias("_phone"),
-            F.col("participant_id").alias("_pid"),
+
+    def junction_rows(name: str, types: tuple[str, ...], how: str) -> DataFrame:
+        return (
+            mr.filter(F.col("recipient_type").isin(*types))
+            .join(
+                F.broadcast(p_ren),
+                F.col("participant_id") == F.col("p_id"),
+                how,
+            )
+            .groupBy(F.col("message_id").alias(f"{name}_mid"))
+            .agg(F.array_sort(F.collect_list(row)).alias(name))
         )
-        .groupBy("message_id")
-        .agg(
-            F.min_by("_email", "_pid").alias("ff_email"),
-            F.min_by("_domain", "_pid").alias("ff_domain"),
-            F.min_by("_name", "_pid").alias("ff_name"),
-            F.min_by("_phone", "_pid").alias("ff_phone"),
-        )
+
+    from_rows = junction_rows("from_rows", ("from",), "inner")
+    recipient_rows = junction_rows("recipient_rows", ("to", "cc", "bcc"), "left")
+    sender = p_ren.select(
+        F.col("p_id").alias("s_pid"),
+        F.col("p_email").alias("sender_email"),
+        F.col("p_domain").alias("sender_domain"),
+        F.col("p_display").alias("sender_display_name"),
+        F.col("p_phone").alias("sender_phone"),
     )
-    # direct-sender fallback (chat messages without a 'from' row — J6)
-    direct = (
-        msg.filter(F.col("sender_id").isNotNull())
-        .join(F.broadcast(p_ren), F.col("sender_id") == F.col("p_id"))
-        .select(
-            F.col("id").alias("d_message_id"),
-            F.coalesce(F.col("p_email"), F.lit("")).alias("ds_email"),
-            F.coalesce(F.col("p_domain"), F.lit("")).alias("ds_domain"),
-            F.coalesce(F.col("p_display"), F.lit("")).alias("ds_name"),
-            F.coalesce(F.col("p_phone"), F.lit("")).alias("ds_phone"),
-        )
-    )
-    # recipient (to/cc/bcc) email + phone lists per message, multiplicity-
-    # preserving and sorted for determinism — recipient aggregates become
-    # explode+agg, and to:/cc:/bcc:/recipient filters become array exists
-    # on ONE scan (the join-path semi-join shuffles the full junction table
-    # per query; the denormalized array is the reference's own search shape,
-    # internal/query/duckdb.go:719-770). Phones ride separately: a
-    # phone-only recipient has a NULL email, which collect_list drops.
-    recips_arr = (
-        mr.filter(F.col("recipient_type").isin("to", "cc", "bcc"))
-        .join(F.broadcast(p_ren), F.col("participant_id") == F.col("p_id"))
-        .groupBy("message_id")
-        .agg(
-            F.array_sort(F.collect_list("p_email")).alias("recipient_emails"),
-            F.array_sort(F.collect_list("p_phone")).alias("recipient_phones"),
-        )
-    )
-    labels_arr = (
+    # a struct is never NULL, so collect_list keeps the element of a
+    # label id that has no labels row (its name field is NULL)
+    labels = (
         archive["message_labels"]
         .join(
             F.broadcast(
@@ -219,70 +220,66 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
                 )
             ),
             F.col("label_id") == F.col("lbl_id"),
+            "left",
         )
-        .groupBy("message_id")
-        .agg(F.array_sort(F.collect_list("lbl_name")).alias("labels"))
+        .groupBy(F.col("message_id").alias("labels_mid"))
+        .agg(
+            F.array_sort(F.collect_list(F.struct("lbl_name"))["lbl_name"]).alias(
+                "labels"
+            )
+        )
     )
     # rename pre-agg columns: messages itself has an attachment_count column
     att = _attachment_preagg(archive["attachments"]).select(
-        "message_id",
+        F.col("message_id").alias("att_mid"),
         F.col("attachment_size").alias("att_size_sum"),
         F.col("attachment_count").alias("att_count_sum"),
     )
 
-    wide = (
-        msg.join(first_from, F.col("id") == first_from["message_id"], "left")
-        .drop(first_from["message_id"])
-        .join(direct, F.col("id") == F.col("d_message_id"), "left")
-        .drop("d_message_id")
-        .join(labels_arr, F.col("id") == labels_arr["message_id"], "left")
-        .drop(labels_arr["message_id"])
-        .join(recips_arr, F.col("id") == recips_arr["message_id"], "left")
-        .drop(recips_arr["message_id"])
-        .join(att, F.col("id") == att["message_id"], "left")
-        .drop(att["message_id"])
-        .withColumn("has_from_row", F.col("ff_email").isNotNull())
-        .withColumn("from_email", F.coalesce(F.col("ff_email"), F.col("ds_email")))
-        .withColumn("from_domain", F.coalesce(F.col("ff_domain"), F.col("ds_domain")))
-        .withColumn("from_name", F.coalesce(F.col("ff_name"), F.col("ds_name")))
-        .withColumn("from_phone", F.coalesce(F.col("ff_phone"), F.col("ds_phone")))
-        .drop("ff_email", "ff_domain", "ff_name", "ff_phone",
-              "ds_email", "ds_domain", "ds_name", "ds_phone")
-        .withColumn(
-            "labels", F.coalesce(F.col("labels"), F.array().cast("array<string>"))
-        )
-        .withColumn(
-            "recipient_emails",
-            F.coalesce(F.col("recipient_emails"), F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "recipient_phones",
-            F.coalesce(F.col("recipient_phones"), F.array().cast("array<string>")),
-        )
-        .withColumn(
+    wide = msg.join(sender, F.col("sender_id") == F.col("s_pid"), "left").drop(
+        "s_pid"
+    )
+    for name, per_message in (
+        ("from_rows", from_rows),
+        ("recipient_rows", recipient_rows),
+        ("labels", labels),
+        ("att", att),
+    ):
+        wide = wide.join(
+            per_message, F.col("id") == F.col(f"{name}_mid"), "left"
+        ).drop(f"{name}_mid")
+    for name in ("from_rows", "recipient_rows", "labels"):
+        empty = F.array().cast(wide.schema[name].dataType)
+        wide = wide.withColumn(name, F.coalesce(F.col(name), empty))
+    return (
+        wide.withColumn(
             "att_size_sum", F.coalesce(F.col("att_size_sum"), F.lit(0)).cast("long")
         )
         .withColumn(
             "att_count_sum", F.coalesce(F.col("att_count_sum"), F.lit(0)).cast("long")
         )
         # denormalized lowered recipient search blobs (r12): the hottest
-        # wide-search predicate (to:/cc:/bcc: substring match) otherwise
-        # pays array-decode + concat_ws + lower per row per query; these
-        # two flat strings move that work to build time — the reference's
-        # own denormalized-search-column shape (duckdb.go:719-770). A
-        # literal term without '\n' cannot span the '\n' join boundary,
-        # so contains() on the blob is exactly exists(array, ILIKE)
-        # (search/fast_wide.py).
+        # to:/cc:/bcc: predicate otherwise decodes the rows and lowers
+        # their concat per row per query. A literal term without '\n'
+        # cannot span the '\n' join boundary, so contains() on the blob
+        # is exactly exists(rows, ILIKE) (search/fast_wide.py).
         .withColumn(
             "recipient_emails_lc",
-            F.lower(F.concat_ws("\n", F.col("recipient_emails"))),
+            F.lower(F.concat_ws("\n", F.col("recipient_rows.email"))),
         )
         .withColumn(
             "recipient_phones_lc",
-            F.lower(F.concat_ws("\n", F.col("recipient_phones"))),
+            F.lower(F.concat_ws("\n", F.col("recipient_rows.phone"))),
         )
     )
-    return wide
+
+
+# the wide record's columns that are not message columns
+WIDE_EXTRA_COLUMNS = (
+    "from_rows", "recipient_rows", "sender_email", "sender_domain",
+    "sender_display_name", "sender_phone", "labels", "att_size_sum",
+    "att_count_sum", "recipient_emails_lc", "recipient_phones_lc",
+)
 
 
 @_locked

@@ -129,10 +129,10 @@ def test_load_table_normalizes_ntz_timestamps(spark, tmp_path):
 
 
 def test_wide_recipient_filters_match_join_path(spark, archive):
-    """to:/cc:/bcc: on the wide path (denormalized recipient arrays, r4)
+    """to:/cc:/bcc: on the wide path (denormalized recipient rows, r4)
     must return the same messages as the join path's junction semi-join —
-    including PHONE-ONLY recipients (carol, +2666, no email), which ride
-    the separate recipient_phones array."""
+    including PHONE-ONLY recipients (carol, +2666, no email), matched on
+    the rows' phone field."""
     from msgvault_spark.search.fast import search_fast
     from msgvault_spark.search.fast_wide import search_fast_wide
     from msgvault_spark.sources.cache import build_wide_messages

@@ -274,6 +274,26 @@ def test_search_vector_and_hybrid_modes(server):
     assert h["results"][0]["rrf_score"] >= h["results"][-1]["rrf_score"]
 
 
+def test_vector_search_reads_embedding_width_once(server, spark, monkeypatch):
+    """The embedding width is a per-snapshot scalar: once one vector
+    request has read it, later vector/hybrid requests run no job for it."""
+    _get(server, "/api/v1/search?q=token3&mode=vector&page_size=2&case=dim")
+    frame_cls = type(spark.range(1))
+    head, heads = frame_cls.head, []
+
+    def spy(self, *a, **kw):
+        heads.append(self.columns)
+        return head(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "head", spy)
+    for mode in ("vector", "hybrid"):
+        status, body = _get(
+            server, f"/api/v1/search?q=token5&mode={mode}&page_size=2&case=dim"
+        )
+        assert status == 200 and body["returned"] == 2
+    assert ["size(embedding)"] not in heads, heads
+
+
 def test_deep_search_has_more_and_filters(server):
     status, d = _get(server, "/api/v1/search/deep?q=order&limit=5")
     assert status == 200

@@ -820,7 +820,8 @@ def test_broadcast_sites_are_ratcheted():
                                      # always-1-row totals broadcast
         "textstats/pmi.py": 2,       # two 1-row totals (N_uni, N_bi)
         "sources/build_cache.py": 1,
-        "sources/cache.py": 4,
+        "sources/cache.py": 2,  # wide record: participants (both
+                                # junction arrays, one site) + labels
         "sources/merge.py": 2,
         "textstats/analysis.py": 1,  # 1-row corpus-token total
         "textstats/tfidf.py": 1,
@@ -843,3 +844,70 @@ def test_offset_pagination_is_take_ordered_not_window(spark, catalog):
         pre = _live_plan(plan)
         assert "offset=" in pre and "TakeOrderedAndProject" in pre, name
         assert "Window" not in pre, f"{name}: global window in plan"
+
+
+def test_wide_routes_scan_no_junction_tables(spark, monkeypatch):
+    """The aggregate, search and listing routes serve from the wide
+    record: every plan a request runs (collect/count, cached subtrees
+    included) scans no participants, message_recipients or message_labels
+    file — the junction rows ride the record's nested fields. Requests go
+    through the HTTP server, so the pin covers what the routes build."""
+    import json
+    import re
+    import urllib.request
+
+    from msgvault_spark.server import serve
+
+    frame_cls = type(spark.range(1))
+    plans: list[str] = []
+    for action in ("collect", "count"):
+        original = getattr(frame_cls, action)
+
+        def spy(self, *a, _original=original, **kw):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return _original(self, *a, **kw)
+
+        monkeypatch.setattr(frame_cls, action, spy)
+    junction_scan = re.compile(
+        r"FileScan parquet[^\n]*Location: [^\n]*"
+        r"/(participants|message_recipients|message_labels)\]"
+    )
+    dom, label = "nation_3.example.com", "1-URGENT"
+    paths = [
+        f"/api/v1/aggregates?view={view}&limit=5"
+        for view in ("senders", "sender_names", "recipients",
+                     "recipient_names", "domains", "labels", "time")
+    ] + [
+        f"/api/v1/aggregates/sub?view=senders&domain={dom}&label={label}"
+        "&sender=customer3%40nation_3.example.com&time_period=1996",
+        "/api/v1/search/fast?q=from:customer3%40+to:supplier1+label:urgent"
+        "+high&limit=5",
+        f"/api/v1/messages/filter?domain={dom}&label={label}&offset=2"
+        "&limit=5&time_period=1996&sender=customer3%40nation_3.example.com",
+        "/api/v1/search?q=high+from:customer&page=2&page_size=5",
+        f"/api/v1/search/deep?q=high&domain={dom}&label={label}"
+        "&sender=customer3%40nation_3.example.com",
+    ]
+    # scan nodes abbreviate their Location past this length (100 by
+    # default), which would hide the table directory the regex reads
+    max_meta = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    srv = serve(spark, SF_DIR)
+    try:
+        for path in paths:
+            plans.clear()
+            # a fresh query item: no answer stored by earlier tests
+            with urllib.request.urlopen(
+                f"http://127.0.0.1:{srv.port}{path}&case=wide-plan",
+                timeout=120,
+            ) as resp:
+                assert resp.status == 200, path
+                json.loads(resp.read())
+            assert plans, f"{path}: no plan ran"
+            for plan in plans:
+                hit = junction_scan.search(plan)
+                assert hit is None, f"{path} scans {hit.group(1)}:\n{plan}"
+            assert any("/wide]" in plan for plan in plans), path
+    finally:
+        srv.shutdown()
+        spark.conf.set("spark.sql.maxMetadataStringLength", max_meta)

@@ -1023,8 +1023,14 @@ _ff_parts = st.lists(
 def test_wide_first_from_matches_reference_random(
     spark, recips, parts, sender_of
 ):
-    """build_wide_messages' resolved sender (min_by over participant_id,
-    coalesce name chain, direct-sender fallback) vs brute force."""
+    """The wide record's resolved search sender (compile_search_wide: the
+    lowest-participant_id 'from' row, coalesce name chain, direct-sender
+    fallback, '' when neither) vs brute force and vs the join path."""
+    from pyspark.sql import functions as F
+
+    from msgvault_spark.search.fast import compile_search
+    from msgvault_spark.search.fast_wide import compile_search_wide
+    from msgvault_spark.search.parser import ParsedQuery
     from msgvault_spark.sources.cache import build_wide_messages
     from msgvault_spark.sources.loader import ARCHIVE_SCHEMAS
 
@@ -1062,13 +1068,18 @@ def test_wide_first_from_matches_reference_random(
         ),
     }
     wide = build_wide_messages(archive)
+    cols = ("id", "from_email", "from_name", "from_phone")
+    resolved = compile_search_wide(wide, ParsedQuery(), email_only=False)
+    has_from = dict(wide.select("id", F.size("from_rows") > 0).collect())
     got = {
         r["id"]: (r["from_email"], r["from_name"], r["from_phone"],
-                  r["has_from_row"])
-        for r in wide.select(
-            "id", "from_email", "from_name", "from_phone", "has_from_row"
-        ).collect()
+                  has_from[r["id"]])
+        for r in resolved.select(*cols).collect()
     }
+    join = compile_search(archive, ParsedQuery(), email_only=False)
+    assert sorted(resolved.select(*cols).collect()) == sorted(
+        join.select(*cols).collect()
+    )
 
     pmap = {p[0]: p for p in participants}
 
@@ -1087,7 +1098,7 @@ def test_wide_first_from_matches_reference_random(
             _, em, _, dn, ph = pmap[sender_of]
             ref[m] = (em, dn, ph, False)
         else:
-            ref[m] = (None, None, None, False)
+            ref[m] = ("", "", "", False)
     assert got == ref
 
 

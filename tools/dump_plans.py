@@ -1,5 +1,6 @@
 """Regenerate PLANS.md: the formatted physical plans of the headline
-queries at sf0.001, so plan-quality claims (pushdown, broadcast strategy,
+queries at sf0.001, plus one plan per HTTP route family served from the
+wide record, so plan-quality claims (pushdown, broadcast strategy,
 exchange counts, codegen spans) are reviewable without a Spark session.
 
     python tools/dump_plans.py [sf_dir]
@@ -48,6 +49,64 @@ SHOWCASE = [
 ]
 
 
+# one plan per HTTP route family served from the wide record: what a
+# request to the route runs (api.py / server.py build the same plans)
+ROUTES = [
+    "GET /api/v1/aggregates?view=senders",
+    "GET /api/v1/aggregates/sub?view=labels&domain=nation_3.example.com",
+    "GET /api/v1/search/fast?q=from:customer3@",
+    "GET /api/v1/messages/filter?domain=nation_3.example.com&offset=20",
+    "GET /api/v1/search?q=high&page=2 (mode=fts)",
+    "GET /api/v1/search/deep?q=high&domain=nation_3.example.com",
+]
+
+
+def _route_plan(spark, sf_dir: str, route: str):
+    """(DataFrame the route collects, cleanup) for one ROUTES entry."""
+    from msgvault_spark.plans import aggregate as agg
+    from msgvault_spark.plans.models import (
+        AggregateOptions,
+        MessageFilter,
+        Pagination,
+        ViewType,
+    )
+    from msgvault_spark.search.fast import SearchWithStats
+    from msgvault_spark.search.fast_wide import (
+        list_messages_wide,
+        search_fast_wide,
+    )
+    from msgvault_spark.sources.cache import get_archive, get_wide_messages
+
+    wide = get_wide_messages(spark, sf_dir)
+    domain = MessageFilter(domain="nation_3.example.com")
+    if "/aggregates/sub" in route:
+        df = agg.sub_aggregate_wide(
+            wide, ViewType.LABELS, domain, AggregateOptions(limit=100)
+        )
+    elif "/aggregates" in route:
+        df = agg.aggregate_wide(wide, ViewType.SENDERS, AggregateOptions())
+    elif "/search/fast" in route:
+        df = search_fast_wide(wide, "from:customer3@", limit=50)
+    elif "/messages/filter" in route:
+        domain.pagination = Pagination(limit=50, offset=20)
+        df = list_messages_wide(
+            wide, get_archive(spark, sf_dir)["conversations"], domain
+        )
+    else:  # fts and deep page one persisted match set
+        deep = "/search/deep" in route
+        sws = SearchWithStats(wide, "high", domain if deep else None)
+        return sws.page(101 if deep else 20, 0 if deep else 20), sws.release
+    return df, lambda: None
+
+
+def _formatted(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    ).rstrip()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     os.environ.setdefault("SPARK_GRAFT_AQE", "false")
@@ -74,17 +133,25 @@ def main() -> None:
         for k in [k for k in catmod._PLAN_MEMO if k[2] == name]:
             del catmod._PLAN_MEMO[k]
         df = CATALOG[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
+        out += [f"## {name}", "", "```", _formatted(spark, df), "```", ""]
+    out += [
+        "# Routes served from the wide record",
+        "",
+        "One plan per HTTP route family that reads the denormalized wide "
+        "record (`server.py`): no participants, message_recipients or "
+        "message_labels scan.",
+        "",
+    ]
+    for route in ROUTES:
+        df, cleanup = _route_plan(spark, sf_dir, route)
+        df.collect()  # the record and match sets are cached once built
+        out += [f"## {route}", "", "```", _formatted(spark, df), "```", ""]
+        cleanup()
 
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    print(f"wrote PLANS.md ({len(SHOWCASE) + len(ROUTES)} plans)")
 
 
 if __name__ == "__main__":
