@@ -232,24 +232,6 @@ _PRIORITY = [
     "bpe_trained_fertility",
     "edit_distance_pairs",
     "dedup_threshold_sweep",
-    "agg_senders",
-    "agg_sender_names",
-    "agg_recipients",
-    "agg_domains",
-    "agg_labels",
-    "agg_time_month",
-    "agg_time_year_filtered",
-    "sub_agg_domain_to_senders",
-    "sub_agg_label_to_time",
-    "total_stats",
-    "agg_senders_wide",
-    "agg_domains_wide",
-    "agg_labels_wide",
-    "agg_time_month_wide",
-    "sub_agg_domain_to_senders_wide",
-    "agg_recipients_wide",
-    "agg_senders_wide_multifrom",
-    "agg_senders_join_multifrom",
     "cache_roundtrip_by_year",
     "list_conversations",
     "text_agg_contacts",
@@ -260,7 +242,6 @@ _PRIORITY = [
     "text_stats_total",
     "csv_roundtrip_stats",
     "incremental_cache_append",
-    "agg_senders_with_search",
     "hydrate_search_hits",
     "get_messages_by_ids",
     "list_accounts",
