@@ -45,6 +45,23 @@ _PRIORITY = [
     "agg_senders_wide_multifrom",
     "agg_senders_join_multifrom",
     "agg_senders_with_search",
+    # the plan-memo removal: catalog_streaming lost its per-entry memo
+    # opt-out and streaming/incremental's pool clear changed (every
+    # stream entry); catalog_lookup's docstrings changed (every lookup
+    # entry). Narrow changes, must re-verify
+    "stream_rollup_daily",
+    "stream_dedup_count",
+    "stream_user_sessions",
+    "stream_stream_join_funnel",
+    "stream_static_enrich",
+    "hydrate_search_hits",
+    "get_messages_by_ids",
+    "list_accounts",
+    "get_messages_raw_batch",
+    "get_message_by_source_id",
+    "get_attachments_batch",
+    "gmail_ids_by_filter",
+    "summary_stats",
     # --- round 12 gate window (50 slots). Composition, in order:
     # (1) the mid-build narrow changes (promote_generation hardening in
     #     embeddings_pipeline.py; the NEW ivfpq_knn_seed0 +
@@ -64,11 +81,6 @@ _PRIORITY = [
     "embed_pipeline_vectors",
     "ivfpq_knn_seed0",
     "ivfpq_recall_report",
-    # r12 optimization-round narrow changes (gate_priority must_verify):
-    # plan restructures keep results hash-identical but must re-verify
-    "tfidf_top_terms",
-    "bigram_backoff_quality",
-    "doremi_weight_update",
     # the ILIKE→lowered-contains compilation (functions/text.py) touches
     # every search-path entry
     "search_fast_recipients_wide",
@@ -81,24 +93,29 @@ _PRIORITY = [
     "search_with_stats",
     "search_page2",
     "search_by_domains",
-    # simhash integer-shift bit votes (dedup/simhash.py)
-    "simhash_fingerprints",
-    "simhash_hamming_pairs",
-    # ngram prefix-filter df via window (dedup/ngram.py, r12)
-    "ngram_jaccard_pairs",
     # level-2 memory recovery (r12): checkpoint-unpersist discipline in
     # connected_components and pagerank — narrow changes, must re-verify
     "fuzzy_dedup_survivors",
     "quality_dedup_survivors",
     "dedup_component_sizes",
     "pagerank_dup_graph",
+    "hybrid_rrf_hydrated",
+    # --- end of the window. The r12 plan-restructure entries (tfidf/
+    #     backoff rewrites, simhash integer-shift votes, ngram prefix
+    #     filter) and r5-vintage TPC-H/operator entries, displaced by the
+    #     narrow changes above, queue first in overflow ---
+    "tfidf_top_terms",
+    "bigram_backoff_quality",
+    "doremi_weight_update",
+    "simhash_fingerprints",
+    "simhash_hamming_pairs",
+    "ngram_jaccard_pairs",
     "bloom_join_orders",
     "chunk_documents",
     "cms_frequency_orders",
     "cube_priority_status",
     "hist_quantile_orders",
     "hll_distinct_rollup",
-    "hybrid_rrf_hydrated",
     "market_share_q8",
     "nation_volume_q7",
     "pack_training_sequences",
@@ -106,7 +123,6 @@ _PRIORITY = [
     "salted_priority_rollup",
     "shipping_priority_q3",
     "snapshot_merge_timetravel",
-    "stream_rollup_daily",
     "temperature_mix_sources",
     "train_val_test_split",
     "customer_distribution_q13",
@@ -142,8 +158,6 @@ _PRIORITY = [
     "skew_report_orders",
     "sliding_window_events",
     "snapshot_diff_versions",
-    "stream_dedup_count",
-    "stream_stream_join_funnel",
     "semantic_decontaminate_docs",
     "decontaminate_docs",
     "dedup_exact_survivors",
@@ -242,20 +256,10 @@ _PRIORITY = [
     "text_stats_total",
     "csv_roundtrip_stats",
     "incremental_cache_append",
-    "hydrate_search_hits",
-    "get_messages_by_ids",
-    "list_accounts",
-    "get_messages_raw_batch",
-    "get_message_by_source_id",
-    "get_attachments_batch",
-    "gmail_ids_by_filter",
-    "summary_stats",
-    "stream_user_sessions",
     "weighted_mix_sources",
     "topk_orders_per_priority",
     "top_bigrams_corpus",
     "label_dispersion_report",
-    "stream_static_enrich",
     "small_quantity_revenue_q17",
     "large_orders_q18",
     "min_cost_supplier_q2",

@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import sys
 import threading
-from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -54,79 +53,20 @@ class QuerySpec:
 
 CATALOG: dict[str, QuerySpec] = {}
 
-# Prepared-query plan cache. Catalog entries are pure plan constructors, and
-# constructing one costs far more than running it at bench scale: building
-# the expression tree over Py4J + Catalyst analysis/optimization/codegen
-# measured 0.4-0.8s per query at sf0.1 vs 0.02-0.09s of actual execution.
-# Every serving engine caches prepared plans (Spark Thrift Server session
-# plans, DuckDB/SQLite prepared statements — the reference keeps prepared
-# queries on its pooled connection, internal/query/duckdb.go:91-99); this is
-# the same feature: repeated invocations of a catalog query in one session
-# reuse the analyzed DataFrame. Keyed by (application, sf_dir, name);
-# DataFrames are immutable so sharing the instance is safe. Side-effectful
-# entries (streaming runs) opt out via memoize_plan=False.
+# Catalog entries are pure plan constructors: every call builds a fresh
+# DataFrame and the catalog keeps none. A caller that replays a plan
+# (bench.py's warm loop, the sweep tools) holds the frame itself and drops
+# it when it moves on, so a marathon session never accumulates executed
+# plans or the broadcast relations they pin.
 #
-# The memo is a BOUNDED LRU, not a plain dict: every memoized plan pins its
-# executed JVM plan, and a plan that broadcast-joined a dim pins that
-# broadcast relation on the driver heap for as long as the Python DataFrame
-# is reachable. A marathon session that touches many unique plans (the
-# 221-entry ratio sweep; a long-lived serving process) would otherwise grow
-# driver memory monotonically — the r11 sweep OOM'd an 8 GB driver this way.
-# Evicting the DataFrame drops the Py4J handle; the JVM Dataset, its
-# executed plan, and its pinned broadcasts become garbage-collectable, and
-# Spark's ContextCleaner reclaims the broadcast blocks on the next GC.
-# The cap covers the full headline set with slack so bench/serving loops
-# never evict their own working set.
-#
-# The count cap alone is NOT enough at scale factors where dim broadcasts
-# are tens of MB: the r12 sf1 sweep OOM'd an 8 GB driver at plan ~56 —
-# BEFORE the 64-plan cap could evict anything — with ~95 pinned hashed
-# relations (2.7 GB of long[] pages in the heap histogram). So eviction is
-# additionally BYTE-budgeted: each memo insert lazily sizes older entries'
-# plan-private broadcasts (planmem.pinned_bytes) and evicts LRU entries
-# until the pinned total fits a budget scaled to the driver heap
-# (SPARK_GRAFT_PLAN_PIN_BUDGET bytes overrides). Evicted plans' private
-# broadcasts are destroyed DETERMINISTICALLY (planmem.release_plan) unless
-# another thread still holds the DataFrame, in which case release falls
-# back to the GC + ContextCleaner path.
-_PLAN_MEMO: "OrderedDict[tuple[str, str, str], DataFrame]" = OrderedDict()
-_PLAN_MEMO_CAP = int(os.environ.get("SPARK_GRAFT_PLAN_MEMO_CAP", "64"))
-# pinned-broadcast bytes per memo key; None = not yet sized (a plan's
-# broadcasts materialize at first execution, after insert)
-_PLAN_PIN_SIZES: dict[tuple[str, str, str], int | None] = {}
-_PIN_BUDGET: int | None = (
-    int(os.environ["SPARK_GRAFT_PLAN_PIN_BUDGET"])
-    if os.environ.get("SPARK_GRAFT_PLAN_PIN_BUDGET")
-    else None
-)
-# sized entries re-probed per insert (plans execute after insert, so
-# sizes resolve one insert late; 0-sized entries re-probe in case their
-# broadcasts materialized since)
-_PIN_RESIZE_PER_INSERT = 3
-# used-heap fraction that triggers the GC-confirmed pressure shed
-_PIN_PRESSURE_FRAC = float(os.environ.get("SPARK_GRAFT_PIN_PRESSURE", "0.6"))
-# watchdog: used-heap fraction that sheds the plan cache MID-EXECUTION —
-# the insert-time valve cannot see a heavy entry's transient demand (the
-# r12 sf1 sweep died inside ONE entry that wanted ~5 GB while older plans
-# pinned 3 GB the memory manager cannot evict: storage-eviction drops a
-# broadcast block's accounting but the plan's relationFuture keeps the
-# relation on the heap). Poll cost: one Py4J round-trip per second.
-_WATCHDOG_FRAC = float(os.environ.get("SPARK_GRAFT_WATCHDOG_PRESSURE", "0.75"))
-_WATCHDOG_POLL_S = 1.0
-_WATCHDOG_COOLDOWN_S = 20.0
-_WATCHDOGS: set[str] = set()
+# Always empty. perfbench/tracing.py still reports len(_PLAN_MEMO) as
+# catalog.memo_entries; the line goes once that metric does.
+_PLAN_MEMO: dict = {}
 # level-2 recovery's ContextCleaner drain pause (seconds). Paid only when
 # the clear actually dropped cached entries; 2.0 s is the value the r12
 # sf1-marathon diagnosis validated (one cleaner pass destroys the dead
 # broadcasts the first GC enqueued).
 _CLEANER_DRAIN_S = float(os.environ.get("SPARK_GRAFT_CLEANER_DRAIN_S", "2.0"))
-# One lock for memo mutations: ThreadingHTTPServer request threads shed
-# the memo from the recovery ladder (run_with_memory_recovery), the
-# watchdog daemon sheds it while other driver threads call catalog
-# entries (PySpark is driver-thread-safe; each thread gets its own Py4J
-# connection), and OrderedDict move_to_end/popitem are not atomic under
-# concurrent mutation.
-_PLAN_MEMO_LOCK = threading.Lock()
 # serializes level-3 recovery's set/attempt/restore of the session-wide
 # autoBroadcastJoinThreshold (see run_with_memory_recovery); reentrant, so
 # a ladder nested inside a level-3 attempt() reaches its own level 3
@@ -134,169 +74,9 @@ _PLAN_MEMO_LOCK = threading.Lock()
 _LEVEL3_LOCK = threading.RLock()
 
 
-def _pin_budget(spark) -> int:
-    """Pinned-broadcast byte budget: env override, else 18% of the driver
-    JVM's max heap (8 GB driver → ~1.4 GB; leaves the unified memory
-    region and unmanaged churn their usual room)."""
-    global _PIN_BUDGET
-    if _PIN_BUDGET is None:
-        try:
-            mx = (
-                spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
-                .maxMemory()
-            )
-            _PIN_BUDGET = max(int(mx * 0.18), 256 * 1024 * 1024)
-        except Exception:
-            _PIN_BUDGET = 1_500_000_000
-    return _PIN_BUDGET
-
-
-def _size_and_evict(spark, protect: tuple) -> None:
-    """Called under _PLAN_MEMO_LOCK after inserting ``protect``: resolve
-    pinned-broadcast sizes for a few stale entries, then evict LRU-first
-    until both the count cap and the byte budget hold. Plan-walking is
-    Py4J metadata only (no jobs); the just-inserted key is never sized
-    (it has not executed yet) and never evicted."""
-    from msgvault_spark import planmem
-
-    # bench/profile tools clear or del _PLAN_MEMO entries directly; their
-    # orphaned sizes must not keep counting toward the budget
-    for k in [k for k in _PLAN_PIN_SIZES if k not in _PLAN_MEMO]:
-        del _PLAN_PIN_SIZES[k]
-    # never-sized entries first (a 0-sized entry re-probes only with spare
-    # slots — re-probing zeros must not starve sizing of new big plans)
-    unsized = [
-        k for k in _PLAN_MEMO
-        if k != protect and _PLAN_PIN_SIZES.get(k) is None
-    ]
-    rezero = [
-        k for k in _PLAN_MEMO
-        if k != protect and _PLAN_PIN_SIZES.get(k) == 0
-    ]
-    stale = (unsized + rezero)[:_PIN_RESIZE_PER_INSERT]
-    for k in stale:
-        df = _PLAN_MEMO.get(k)
-        try:
-            _PLAN_PIN_SIZES[k] = planmem.pinned_bytes(df)
-        except Exception:
-            _PLAN_PIN_SIZES[k] = 0
-    # the loop variable would otherwise keep the last sized frame alive
-    # through eviction below, tripping evict_one's refcount guard for it
-    df = None
-    budget = _pin_budget(spark)
-    pinned = sum(v or 0 for v in _PLAN_PIN_SIZES.values())
-
-    def evict_one() -> bool:
-        nonlocal pinned
-        key, old = _PLAN_MEMO.popitem(last=False)
-        if key == protect:  # newest — can only surface if memo size 1
-            _PLAN_MEMO[key] = old
-            _PLAN_MEMO.move_to_end(key)
-            return False
-        pinned -= _PLAN_PIN_SIZES.pop(key, 0) or 0
-        # refcount guard: memo ref is dropped; baseline live refs are the
-        # local `old` + getrefcount's argument. More means another thread
-        # (a serving collect in flight) still holds the frame — leave its
-        # broadcasts to the GC + ContextCleaner path instead of yanking
-        # them mid-query.
-        if sys.getrefcount(old) <= 2:
-            try:
-                planmem.release_plan(old)
-            except Exception:
-                pass
-        return True
-
-    while len(_PLAN_MEMO) > 1 and (
-        len(_PLAN_MEMO) > _PLAN_MEMO_CAP or pinned > budget
-    ):
-        if not evict_one():
-            break
-
-    # Pressure valve: `dataSize` UNDERCOUNTS a pinned relation's real heap
-    # (~2.5× — page-allocation slack plus the serialized broadcast copy in
-    # the block manager; measured r12, SCALING.md), so a static budget that
-    # is generous enough to keep a warm working set pinned can still let a
-    # marathon session run the heap to the wall. When ACTUAL used heap
-    # crosses the pressure fraction at insert time (GC-confirmed so
-    # transient garbage cannot spuriously trip it), shed LRU plans down to
-    # a quarter of the budget — worst case the shed plans rebuild in
-    # ~0.1-0.3 s each; an OOM kills the session.
-    try:
-        jvm = spark.sparkContext._jvm
-        rt = jvm.java.lang.Runtime.getRuntime()
-        mx = rt.maxMemory()
-
-        def pressured() -> bool:
-            return (rt.totalMemory() - rt.freeMemory()) > _PIN_PRESSURE_FRAC * mx
-
-        if len(_PLAN_MEMO) > 1 and pressured():
-            jvm.java.lang.System.gc()
-            if pressured():
-                while pinned > budget / 4 and len(_PLAN_MEMO) > 1:
-                    if not evict_one():
-                        break
-                # still pressured after the quarter-budget shed (destroyed
-                # blocks free immediately, but `used` needs a GC to show
-                # it): re-check, and if the heap is genuinely still at the
-                # line, shed EVERYTHING but the protected entry — sized-0
-                # and not-yet-sized plans can pin real relations too, and
-                # a full rebuild of a shed plan costs ~0.1-0.3 s where an
-                # OOM costs the session
-                jvm.java.lang.System.gc()
-                if pressured():
-                    while len(_PLAN_MEMO) > 1:
-                        if not evict_one():
-                            break
-    except Exception:
-        pass
-
-
-def _shed_all_but_newest() -> int:
-    """Under _PLAN_MEMO_LOCK: evict every memoized plan except the
-    most-recently-used one, destroying each evicted plan's plan-private
-    broadcasts (refcount-guarded). Returns plans shed."""
-    from msgvault_spark import planmem
-
-    shed = 0
-    while len(_PLAN_MEMO) > 1:
-        key, old = _PLAN_MEMO.popitem(last=False)
-        _PLAN_PIN_SIZES.pop(key, None)
-        shed += 1
-        if sys.getrefcount(old) <= 2:
-            try:
-                planmem.release_plan(old)
-            except Exception:
-                pass
-    return shed
-
-
-def shed_plan_cache(*, keep_newest: bool = False) -> int:
-    """Public pressure-relief: evict memoized plans (destroying their
-    plan-private broadcasts, refcount-guarded) and return how many were
-    shed. Callers use it to recover from Spark's 'Not enough memory to
-    build and broadcast' — shed, then retry the failed query once
-    against a driver heap no longer holding other plans' relations."""
-    with _PLAN_MEMO_LOCK:
-        if keep_newest:
-            return _shed_all_but_newest()
-        from msgvault_spark import planmem
-
-        shed = 0
-        while _PLAN_MEMO:
-            key, old = _PLAN_MEMO.popitem(last=False)
-            _PLAN_PIN_SIZES.pop(key, None)
-            shed += 1
-            if sys.getrefcount(old) <= 2:
-                try:
-                    planmem.release_plan(old)
-                except Exception:
-                    pass
-        return shed
-
-
 def is_memory_pressure_error(exc: BaseException) -> bool:
-    """True for the driver-side failure modes a plan-cache shed can cure:
-    Spark's broadcast-build refusal and raw JVM heap exhaustion.
+    """True for the driver-side failure modes a retry over a freed heap
+    can cure: Spark's broadcast-build refusal and raw JVM heap exhaustion.
 
     Version pin (Spark 4.1.x — re-verify on upgrades; the matcher is a
     string match over the Py4J-propagated exception text):
@@ -321,18 +101,16 @@ def is_memory_pressure_error(exc: BaseException) -> bool:
 
 def clear_session_caches(spark: SparkSession) -> int:
     """Memory-pressure recovery LEVEL 2 — cold-restart-without-process-
-    restart. shed_plan_cache() (level 1) frees plan-private broadcasts,
-    but a marathon session's residual heap is the long-lived serving
+    restart. A marathon session's residual heap is the long-lived serving
     caches: the persisted archive/wide/table/index/artifact memos plus
     per-catalog-module index memos (PQ codes, SemDeDup cells, IVF-PQ).
     Drop them ALL — every getter rebuilds lazily from the artifact lake
     on next use — sweep any remaining cached relation, and ask the JVM
     for a full GC so the freed blocks are actually available to the next
-    broadcast build. Returns memo entries dropped (plans + caches)."""
-    dropped = shed_plan_cache()
+    broadcast build. Returns cache entries dropped."""
     from msgvault_spark.sources import cache as srccache
 
-    dropped += srccache.clear_serving_caches()
+    dropped = srccache.clear_serving_caches()
     # per-module index memos living outside sources/cache.py
     for modname, dictname in (
         ("msgvault_spark.catalog_search", "_PQ_MEMO"),
@@ -346,8 +124,8 @@ def clear_session_caches(spark: SparkSession) -> int:
                 srccache._unpersist_tree(v)
             dropped += len(memo)
             memo.clear()
-    # streaming one-shot pools: memory-sink views (driver-held rows), the
-    # footer-probe memo and the tmpfs checkpoint root — all rebuild lazily
+    # streaming one-shot pools: memory-sink views (driver-held rows) and
+    # the footer-probe memo — both rebuild lazily
     try:
         from msgvault_spark.streaming import incremental as _inc
 
@@ -391,7 +169,8 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
     """Run ``attempt()`` (plan build + action) under the full memory-
     pressure recovery ladder and return its result:
 
-      level 1 — shed the plan memo (frees plan-private broadcasts), retry;
+      level 1 — retry once: the failed attempt's plan, and the broadcast
+        relations it built, are garbage by now;
       level 2 — clear every session serving cache (archive twins, wide
         view, FTS/ANN indexes — all rebuild lazily from the artifact
         lake), drain the ContextCleaner, retry;
@@ -402,7 +181,8 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
         retry cannot die in a driver-side broadcast build no matter what
         the residual heap looks like. Join strategy only — results are
         identical; explicit broadcast() dimension hints ignore the
-        threshold and keep their (small, bounded) builds.
+        threshold and keep their (small, bounded) builds. ``attempt()``
+        builds a fresh plan, so it sees the new threshold.
 
     Non-memory errors propagate immediately at every level.  ``label``
     names the work in the recovery log lines (stdout, one per level)."""
@@ -411,8 +191,7 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
     except Exception as e:  # noqa: BLE001
         if not is_memory_pressure_error(e):
             raise
-        shed = shed_plan_cache()
-        print(f"  [{label}] memory pressure: shed {shed} plans, retry")
+        print(f"  [{label}] memory pressure: retry")
         try:
             return attempt()
         except Exception as e2:  # noqa: BLE001
@@ -428,7 +207,6 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
             except Exception as e3:  # noqa: BLE001
                 if not is_memory_pressure_error(e3):
                     raise
-                shed_plan_cache()  # force a fresh plan under the new conf
                 key = "spark.sql.autoBroadcastJoinThreshold"
                 # The set/attempt/restore window is serialized: the server
                 # handles requests on concurrent threads, and two threads
@@ -460,93 +238,9 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
                             spark.conf.unset(key)
 
 
-def _ensure_watchdog(spark: SparkSession) -> None:
-    """Start (once per application) a daemon thread that sheds the plan
-    cache when GC-confirmed used heap crosses _WATCHDOG_FRAC of max —
-    the mid-execution complement to the insert-time valve. Disable with
-    SPARK_GRAFT_MEMORY_WATCHDOG=0."""
-    if os.environ.get("SPARK_GRAFT_MEMORY_WATCHDOG", "1") == "0":
-        return
-    try:
-        app = spark.sparkContext.applicationId
-        jvm = spark.sparkContext._jvm
-        if jvm is None:
-            return
-    except Exception:
-        return
-    with _PLAN_MEMO_LOCK:
-        if app in _WATCHDOGS:
-            return
-        _WATCHDOGS.add(app)
-
-    def run() -> None:
-        import time
-
-        try:
-            rt = jvm.java.lang.Runtime.getRuntime()
-        except Exception:
-            return
-        while True:
-            time.sleep(_WATCHDOG_POLL_S)
-            try:
-                if app not in _WATCHDOGS:  # kill switch (tests, teardown)
-                    return
-                if spark.sparkContext._jsc is None:  # context stopped
-                    return
-                mx = rt.maxMemory()
-                if (rt.totalMemory() - rt.freeMemory()) <= _WATCHDOG_FRAC * mx:
-                    continue
-                jvm.java.lang.System.gc()
-                if (rt.totalMemory() - rt.freeMemory()) <= _WATCHDOG_FRAC * mx:
-                    continue
-                with _PLAN_MEMO_LOCK:
-                    _shed_all_but_newest()
-                time.sleep(_WATCHDOG_COOLDOWN_S)
-            except Exception:
-                return  # context torn down (or Py4J gone) — stop quietly
-
-    threading.Thread(
-        target=run, name=f"planmem-watchdog-{app}", daemon=True
-    ).start()
-
-
-def register(
-    name: str,
-    oracle_sql: str | None,
-    headline: bool = False,
-    memoize_plan: bool = True,
-):
+def register(name: str, oracle_sql: str | None, headline: bool = False):
     def deco(fn):
-        if memoize_plan:
-            def wrapper(spark: SparkSession, sf_dir: str, _name=name, _fn=fn):
-                key = (spark.sparkContext.applicationId, sf_dir, _name)
-                with _PLAN_MEMO_LOCK:
-                    df = _PLAN_MEMO.get(key)
-                    if df is not None:
-                        _PLAN_MEMO.move_to_end(key)
-                        return df
-                # build OUTSIDE the lock: fn() makes Py4J round-trips and
-                # may register lake tables — holding the lock would
-                # serialize concurrent callers and stall the watchdog
-                df = _fn(spark, sf_dir)
-                with _PLAN_MEMO_LOCK:
-                    existing = _PLAN_MEMO.get(key)
-                    if existing is not None:  # racing builder won
-                        _PLAN_MEMO.move_to_end(key)
-                        return existing
-                    _PLAN_MEMO[key] = df
-                    _PLAN_PIN_SIZES[key] = None
-                    _size_and_evict(spark, protect=key)
-                _ensure_watchdog(spark)  # outside the lock (non-reentrant)
-                return df
-
-            wrapper.__name__ = fn.__name__
-            wrapper.__doc__ = fn.__doc__
-            wrapper.__wrapped__ = fn
-            entry = wrapper
-        else:
-            entry = fn
-        CATALOG[name] = QuerySpec(fn=entry, oracle_sql=oracle_sql, headline=headline)
+        CATALOG[name] = QuerySpec(fn=fn, oracle_sql=oracle_sql, headline=headline)
         return fn
 
     return deco

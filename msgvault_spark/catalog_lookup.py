@@ -4,11 +4,10 @@ fetch, and the accounts dim — the reference Engine interface rows
 (engine.go:26-43, 77-78) the round-1 verdict flagged as missing.
 
 The id lists are produced by a DETERMINISTIC ranking collected once at
-plan-construction time (memoized with the plan, like the KNN seed
-vectors) so the entry exercises the real list-of-ids API shape; the
-oracle recomputes the identical list in SQL. ``rank`` is part of the
-compared output, so the order-insensitive hash still pins the
-rank↔id assignment — i.e. order preservation is verified by value.
+plan-construction time (like the KNN seed vectors) so the entry
+exercises the real list-of-ids API shape; the oracle recomputes the
+identical list in SQL. ``rank`` is part of the compared output, so the
+order-insensitive hash still pins the rank↔id assignment — i.e. order preservation is verified by value.
 """
 
 from __future__ import annotations
@@ -80,7 +79,7 @@ ORDER BY h.rank
 def hydrate_search_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GetMessageSummariesByIDs analog (engine.go:36-43, sqlite.go:715-806):
     hit ids → rank-ordered summaries, the anti-N+1 stage every search
-    handler runs. The id list is collected once (plan-memoized) and fed
+    handler runs. The id list is collected once per plan build and fed
     through the real list-of-ids API."""
     ids = _hit_ids(spark, sf_dir)
     return lookup.get_message_summaries_by_ids(get_archive(spark, sf_dir), ids)

@@ -42,7 +42,6 @@ FROM events
 GROUP BY 1, 2
 ORDER BY day ASC, event_type ASC
 """,
-    memoize_plan=False,  # runs a streaming query per invocation
 )
 def stream_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day windowed aggregate with event-time watermark, run via
@@ -62,7 +61,6 @@ def stream_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT COUNT(DISTINCT event_id) AS unique_events FROM events
 """,
-    memoize_plan=False,  # runs a streaming query per invocation
 )
 def stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup on event_id within the watermark horizon; the
@@ -100,7 +98,6 @@ FROM ordered
 GROUP BY user_id
 ORDER BY user_id
 """,
-    memoize_plan=False,  # runs a streaming query per invocation
 )
 def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator over the events file stream:
@@ -199,7 +196,6 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 GROUP BY 1
 ORDER BY 1
 """,
-    memoize_plan=False,  # runs a streaming query per invocation
 )
 def stream_stream_join_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (the one streaming join Spark state-stores
@@ -253,7 +249,6 @@ FROM events e JOIN customer c ON c.c_custkey = e.user_id
 GROUP BY 1, 2
 ORDER BY day ASC, segment ASC
 """,
-    memoize_plan=False,  # runs a streaming query per invocation
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment: the events file stream inner-joins the

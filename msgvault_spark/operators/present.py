@@ -4,9 +4,9 @@ A trailing ``df.orderBy(...)`` with no LIMIT compiles to a SortExec over a
 range-partitioned exchange. Range partitioning needs split bounds, and
 Spark computes them with an EAGER sampling job that re-executes the sort's
 child subtree — so every freshly built plan pays the query's whole
-upstream work twice (once to sample, once to answer). A prepared-plan
-cache hides that from warm serving, but cold/first-run latency and any
-at-scale consumer of an unlimited sort both eat it.
+upstream work twice (once to sample, once to answer). Replaying an
+already-executed plan hides that, but first-run latency and any at-scale
+consumer of an unlimited sort both eat it.
 
 For a result-presentation sort the input is already small — an aggregate
 over an enum-ish group domain, a drill-down page, a report — so the right

@@ -1,145 +1,10 @@
-"""Pinned-broadcast accounting for memoized plans.
+"""Driver-side release of a plan's storage that Spark only frees lazily.
 
-Why this exists: a memoized (and executed) DataFrame pins every broadcast
-hash relation its physical plan materialized — the JVM Dataset holds the
-executed plan, each ``BroadcastExchangeExec`` holds its ``relationFuture``,
-and the block manager keeps the deserialized value block until the
-broadcast is destroyed. At sf1 an archive plan pins 25-150 MB this way
-(participants/p_ren relations), so a marathon session over a few dozen
-unique plans accumulates gigabytes of LIVE heap that no GC can reclaim —
-the r11/r12 ratio-sweep OOM (heap histogram: ~95 hashed relations,
-2.7 GB of ``long[]`` pages at 55 plans). A count-capped LRU alone cannot
-prevent this: the OOM arrives before the count cap does.
-
-This module gives the memo (``catalog._PLAN_MEMO``) the two primitives a
-BYTE-budgeted policy needs:
-
-- ``pinned_bytes(df)``: how much broadcast data this plan pins, counting
-  only broadcasts PRIVATE to the plan (deduped by broadcast id);
-- ``release_plan(df)``: destroy those broadcasts deterministically on
-  eviction, so the heap drops now rather than whenever the ContextCleaner
-  happens to run after a GC.
-
-The one safety rule (discovered the hard way): never touch a broadcast
-reachable through a CACHED relation's subtree. ``InMemoryTableScanExec``
-(and its AQE wrapper ``TableCacheQueryStageExec``) embeds the cached
-build plan, and every future query over that cached table re-serializes
-that lineage per task — destroying a lineage-captured broadcast poisons
-every plan that shares the cache ("Attempted to use Broadcast(N) after
-it was destroyed" at closure-clean time). Those shared broadcasts are
-one-per-cached-table, not per-plan, so leaving them alive is both safe
-and cheap. The traversal therefore yields a cached-scan node but never
-descends into it.
-
-Everything here is driver-side Py4J metadata traversal — no jobs run.
-The reference's analog is connection-pool statement-cache eviction
-(internal/query/duckdb.go:91-99); Spark's unit of "prepared statement
-holding resources" is the executed plan with its broadcast futures.
+Everything here is Py4J metadata traversal plus one unpersist call — no
+jobs run.
 """
 
 from __future__ import annotations
-
-# Cached-relation wrappers: shared across plans; never descend, never
-# destroy anything below them (see module docstring).
-_CACHED_SUBTREE = ("InMemoryTableScanExec", "TableCacheQueryStageExec")
-
-
-def _seq(s) -> list:
-    try:
-        return [s.apply(i) for i in range(s.size())]
-    except Exception:
-        return []
-
-
-def iter_live_nodes(root):
-    """Yield (node, simpleClassName) over the LIVE part of a physical
-    plan: descends AQE wrappers (``AdaptiveSparkPlanExec.executedPlan``,
-    ``*QueryStageExec.plan``) and subqueries, stops at cached-relation
-    subtrees."""
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        try:
-            cls = n.getClass().getSimpleName()
-        except Exception:
-            continue
-        yield n, cls
-        if cls in _CACHED_SUBTREE:
-            continue
-        nxt = _seq(n.children())
-        try:
-            nxt += _seq(n.subqueries())
-        except Exception:
-            pass
-        if cls == "AdaptiveSparkPlanExec":
-            try:
-                nxt.append(n.executedPlan())
-            except Exception:
-                pass
-        elif cls.endswith("QueryStageExec"):
-            try:
-                nxt.append(n.plan())
-            except Exception:
-                pass
-        stack += nxt
-
-
-def live_broadcasts(df) -> list[tuple[int, object, int]]:
-    """(broadcast_id, Broadcast, approx_bytes) for every MATERIALIZED
-    broadcast private to this plan, deduped by broadcast id (AQE reuse
-    and multi-path traversal reach the same exchange more than once).
-
-    Un-executed exchanges (``relationFuture`` not done) are skipped: they
-    pin nothing yet. Non-JVM frames (test fakes) return []. Forces
-    physical PLANNING if the df was never planned — metadata-only, no
-    jobs."""
-    out: dict[int, tuple[object, int]] = {}
-    try:
-        root = df._jdf.queryExecution().executedPlan()
-    except Exception:
-        return []
-    for n, cls in iter_live_nodes(root):
-        if cls != "BroadcastExchangeExec":
-            continue
-        try:
-            fut = n.relationFuture()
-            if not fut.isDone():
-                continue
-            b = fut.get()
-            bid = int(b.id())
-            if bid in out:
-                continue
-            try:
-                size = int(n.metrics().apply("dataSize").value())
-            except Exception:
-                size = 0
-            out[bid] = (b, max(size, 0))
-        except Exception:
-            continue
-    return [(bid, b, s) for bid, (b, s) in out.items()]
-
-
-def pinned_bytes(df) -> int:
-    """Heap bytes this memoized plan pins in plan-private broadcast
-    relations (0 until it first executes)."""
-    return sum(s for _, _, s in live_broadcasts(df))
-
-
-def release_plan(df) -> int:
-    """Destroy this plan's plan-private materialized broadcasts; returns
-    approx bytes freed. Call ONLY on a plan being evicted with no
-    concurrent execution in flight (the caller's refcount guard). The
-    Dataset itself becomes unusable for further collects — a later
-    request must rebuild via the catalog fn, which creates fresh
-    exchanges."""
-    freed = 0
-    for _, b, s in live_broadcasts(df):
-        try:
-            b.destroy()
-            freed += s
-        except Exception:
-            pass
-    return freed
 
 
 def unpersist_local_checkpoint(df, blocking: bool = False) -> bool:

@@ -201,8 +201,8 @@ class MsgvaultHTTPServer:
 
             def _run_get(self, path: str, q: dict):
                 # driver memory pressure (broadcast-build refusal / heap
-                # exhaustion): the shared 3-level recovery ladder (shed
-                # plans → clear serving caches + cleaner drain → one
+                # exhaustion): the shared 3-level recovery ladder (retry
+                # → clear serving caches + cleaner drain → one
                 # no-auto-broadcast retry) degrades the caches and the
                 # join strategy, never the request
                 from msgvault_spark.catalog import run_with_memory_recovery
@@ -575,7 +575,7 @@ def serve(
     (``.port`` for an OS-assigned port, ``.shutdown()`` to stop).
 
     Routes build their plans through ``api.py`` on demand; serving never
-    builds or memoizes a catalog plan. ``.prewarm_handle`` is always None
+    builds a catalog plan. ``.prewarm_handle`` is always None
     and stays on the handle for callers that still read it."""
     srv = MsgvaultHTTPServer(
         spark, sf_dir, host=host, port=port, api_key=api_key,

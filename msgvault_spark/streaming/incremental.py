@@ -50,8 +50,10 @@ from pyspark.sql import types as T
 # (the new view's plan is force-analyzed before the old one is dropped, so
 # an in-flight consumer of the old DataFrame keeps working: a resolved
 # memory-sink plan holds the sink object, not the catalog name).
-# clear_stream_pools() drops everything; catalog.clear_session_caches
-# (memory-recovery level 2) calls it.
+# clear_stream_pools() drops the views and the probe memo;
+# catalog.clear_session_caches (memory-recovery level 2) calls it. It
+# leaves the checkpoint root alone: the root only ever holds in-flight
+# runs' subdirs, which belong to whichever thread is running them.
 # ---------------------------------------------------------------------------
 
 _CKPT_ROOT: str | None = None
@@ -73,26 +75,22 @@ def _checkpoint_root() -> str:
 
 
 def clear_stream_pools(spark: SparkSession | None = None) -> int:
-    """Drop every pooled streaming resource: memory-sink views (and their
-    driver-held rows), the probe memo, and the checkpoint root. Returns
-    entries dropped; every pool rebuilds lazily."""
-    global _CKPT_ROOT
-    dropped = 0
+    """Drop the pooled memory-sink views (and their driver-held rows) and
+    the probe memo. Returns entries dropped; both rebuild lazily. The
+    checkpoint root stays: a finished run deletes its own subdir, so the
+    root holds only runs still in flight on other threads."""
     with _POOL_LOCK:
-        for (_, _), names in _SINK_VIEWS.items():
-            for name in names:
-                dropped += 1
-                if spark is not None:
-                    try:
-                        spark.catalog.dropTempView(name)
-                    except Exception:
-                        pass
+        names = [n for ns in _SINK_VIEWS.values() for n in ns]
         _SINK_VIEWS.clear()
-        dropped += len(_PROBE_MEMO)
+        dropped = len(names) + len(_PROBE_MEMO)
         _PROBE_MEMO.clear()
-        root, _CKPT_ROOT = _CKPT_ROOT, None
-    if root:
-        shutil.rmtree(root, ignore_errors=True)
+    # drop outside the lock: each drop is a Py4J round-trip
+    if spark is not None:
+        for name in names:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:
+                pass
     return dropped
 
 EVENTS_SCHEMA = T.StructType(

@@ -38,13 +38,27 @@ def test_clear_session_caches_drops_and_rebuilds(spark):
         srccache._MINHASH_MEMO,
     ):
         assert not memo
-    from msgvault_spark import catalog as catmod
-
-    assert not catmod._PLAN_MEMO
 
     # rebuild path: same entry, identical rows from a cold memo state
     after = entry.fn(spark, SF_DIR).collect()
     assert after == before
+
+
+def test_catalog_entries_retain_no_plan(spark):
+    """A catalog entry hands its frame to the caller and keeps nothing:
+    once the caller drops an executed frame, it is garbage, and so are
+    the broadcast relations its plan pinned."""
+    import gc
+    import weakref
+
+    from msgvault_spark.catalog import CATALOG
+
+    df = CATALOG["agg_domains"].fn(spark, SF_DIR)
+    df.collect()
+    ref = weakref.ref(df)
+    del df
+    gc.collect()
+    assert ref() is None
 
 
 def test_clear_session_caches_is_idempotent(spark):
@@ -55,7 +69,7 @@ def test_clear_session_caches_is_idempotent(spark):
 
 
 def test_recovery_ladder_escalates_to_no_broadcast_retry(spark):
-    """The 3-level ladder (r12 sf1 marathon fix): when shedding plans and
+    """The 3-level ladder (r12 sf1 marathon fix): when a plain retry and
     clearing caches both fail to relieve pressure, the final retry runs
     with auto-broadcast disabled — and the threshold is restored after,
     success or not."""

@@ -632,16 +632,12 @@ def test_headline_exchange_counts_pinned(spark, catalog):
                                           # exchanges are ref-slice
                                           # cb/cu aggs + present
     }
-    # measure a FRESH (unexecuted) plan: once AQE executes the memoized
-    # DataFrame (earlier tests collect it), the string flips to the final
-    # plan where tiny exchanges coalesce away — a state-dependent count.
-    # Clearing the entry's plan memo pins the deterministic initial plan.
-    from msgvault_spark import catalog as catmod
-
+    # measure a FRESH (unexecuted) plan: once AQE executes a DataFrame,
+    # the string flips to the final plan where tiny exchanges coalesce
+    # away — a state-dependent count. Each entry call builds a fresh plan,
+    # which pins the deterministic initial plan.
     failures = []
     for name, want in PINNED.items():
-        for k in [k for k in catmod._PLAN_MEMO if k[2] == name]:
-            del catmod._PLAN_MEMO[k]
         plan = _plan(catalog[name].fn(spark, SF_DIR))
         pre = _live_plan(plan)
         got = (

@@ -4,11 +4,13 @@ gets a fresh subdir, deleted at termination), repeated invocations must
 RECOMPUTE from the parquet inputs (never return a stale sink), superseded
 memory-sink views must be dropped (bounded driver memory in a marathon
 session) without breaking an in-flight consumer of the previous result,
-and clear_stream_pools must reset everything rebuildably."""
+and clear_stream_pools must reset the views and probe memo rebuildably
+while leaving in-flight runs' checkpoints alone."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -73,10 +75,27 @@ def test_clear_stream_pools_resets_and_rebuilds(spark):
 
     before = _run_entry(spark, "stream_rollup_daily")
     assert inc._PROBE_MEMO  # probe memoized per (app, path)
+    root = inc._CKPT_ROOT
     dropped = inc.clear_stream_pools(spark)
     assert dropped >= 1
     assert not inc._PROBE_MEMO and not inc._SINK_VIEWS
-    assert inc._CKPT_ROOT is None
+    # the checkpoint root is not a pool to clear: the same root still exists
+    assert inc._CKPT_ROOT == root and os.path.isdir(root)
     # everything rebuilds lazily with identical results
     assert _run_entry(spark, "stream_rollup_daily") == before
     assert inc.clear_stream_pools(spark) >= 1  # the rebuild re-registered
+
+
+def test_session_cache_clear_keeps_in_flight_checkpoints(spark):
+    """A level-2 clear on one server thread must not delete the checkpoint
+    of a one-shot another thread is still running."""
+    from msgvault_spark.catalog import clear_session_caches
+    from msgvault_spark.streaming import incremental as inc
+
+    in_flight = os.path.join(inc._checkpoint_root(), "run_inflighttest")
+    os.makedirs(os.path.join(in_flight, "q"))
+    try:
+        clear_session_caches(spark)
+        assert os.path.isdir(in_flight)
+    finally:
+        shutil.rmtree(in_flight, ignore_errors=True)

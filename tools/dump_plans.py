@@ -5,7 +5,7 @@ exchange counts, codegen spans) are reviewable without a Spark session.
 
     python tools/dump_plans.py [sf_dir]
 
-Plans are FRESH (prepared-plan memo cleared) under the tuned session with
+Plans are FRESH (built after a warm-up run) under the tuned session with
 AQE off — the deterministic initial plan the exchange-count pins are
 calibrated against (see tests/test_plan_quality.py).
 """
@@ -112,7 +112,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_AQE", "false")
     os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
 
-    from msgvault_spark import catalog as catmod
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark
 
@@ -130,8 +129,6 @@ def main() -> None:
     for name in SHOWCASE:
         # warm ETL artifacts first so the printed plan reads from caches
         CATALOG[name].fn(spark, sf_dir).collect()
-        for k in [k for k in catmod._PLAN_MEMO if k[2] == name]:
-            del catmod._PLAN_MEMO[k]
         df = CATALOG[name].fn(spark, sf_dir)
         out += [f"## {name}", "", "```", _formatted(spark, df), "```", ""]
     out += [

@@ -270,9 +270,7 @@ def touch_map(base: str | None = None) -> dict[str, set[str]]:
 
     out: dict[str, set[str]] = {}
     for name, e in CATALOG.items():
-        # register() wraps entries in a plan-memo closure defined in
-        # catalog.py — unwrap to reach the real defining module
-        fn = getattr(e.fn, "__wrapped__", e.fn)
+        fn = e.fn
         mod = fn.__module__
         if mod not in pkg:
             continue

@@ -10,7 +10,7 @@ The suspect under test: Spark's always-on status stores (SQLAppStatusListener
 retains `spark.sql.ui.retainedExecutions` = 1000 executions, each holding the
 FULL physicalPlanDescription string + plan graph + metric maps; AppStatusListener
 retains jobs/stages/tasks) are strongly-referenced driver heap that no cache
-clear, plan-memo shed, or GC can reclaim — exactly the residual the r12 sf1
+clear or GC can reclaim — exactly the residual the r12 sf1
 marathon saw after level-2 recovery cleared every serving cache and still
 could not build a 1-row broadcast.
 

@@ -81,8 +81,6 @@ out["execute_s"] = round(time.perf_counter() - t0, 3)
 out["rows"] = n
 
 # the same build in the now-warm JVM, for the JIT-delta reading
-import msgvault_spark.catalog as catmod
-catmod._PLAN_MEMO.clear()
 t0 = time.perf_counter()
 df2 = fn(spark, sf_dir)
 out["fn_build_warm_s"] = round(time.perf_counter() - t0, 3)

@@ -46,10 +46,9 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_AQE", "false")
     os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-    # The plan memo is a bounded LRU (catalog._PLAN_MEMO_CAP), so a
-    # marathon over all 221 entries no longer pins every plan's broadcasts
-    # for the session's lifetime — the sweep runs on the default 8g driver
-    # (the r11 sweep needed a 16g override before the memo was bounded).
+    # Each entry's frame is dropped before the next entry, so a marathon
+    # over every entry never pins more than one plan's broadcasts — the
+    # sweep runs on the default 8g driver.
     spark = get_spark("msgvault_ratio_sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -89,6 +88,10 @@ def main() -> None:
 
     from msgvault_spark.catalog import run_with_memory_recovery
 
+    def build_and_collect(spec):
+        df = spec.fn(spark, sf_dir)
+        return df, len(df.collect())
+
     rows = []
     errors = []
     for name, spec in CATALOG.items():
@@ -99,22 +102,17 @@ def main() -> None:
         try:
             # a marathon session's accumulated heap can starve one heavy
             # entry's broadcast build — the shared 3-level recovery
-            # ladder (shed plans → clear session caches + cleaner drain
-            # → one no-auto-broadcast retry) is the same recovery a
-            # serving process applies (server.py)
-            n_out = len(
-                run_with_memory_recovery(
-                    spark,
-                    lambda spec=spec: spec.fn(spark, sf_dir).collect(),
-                    label=name,
-                )
+            # ladder (retry → clear session caches + cleaner drain → one
+            # no-auto-broadcast retry) is the same recovery a serving
+            # process applies (server.py). The warm and timed runs below
+            # replay the frame the successful attempt built.
+            df, n_out = run_with_memory_recovery(
+                spark, lambda: build_and_collect(spec), label=name
             )
             sink_mode = n_out >= FULL_OUTPUT_ROWS
             if sink_mode:
                 def run_spark():
-                    spec.fn(spark, sf_dir).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
+                    df.write.mode("overwrite").format("noop").save()
 
                 def run_duck():
                     con.execute(
@@ -123,7 +121,7 @@ def main() -> None:
                     )
             else:
                 def run_spark():
-                    spec.fn(spark, sf_dir).collect()
+                    df.collect()
 
                 def run_duck():
                     con.execute(spec.oracle_sql).fetchall()
@@ -145,6 +143,9 @@ def main() -> None:
             print(f"ERR {name}: {type(e).__name__}: {e}")
             errors.append((name, f"{type(e).__name__}: {e}"))
             continue
+        finally:
+            # drop the entry's plan (and the closures holding it)
+            df = run_spark = None
         ratio = s_t / d_t if d_t > 0 else float("inf")
         rows.append((name, s_t, d_t, ratio, sink_mode))
         tag = " [sink]" if sink_mode else ""
