@@ -22,10 +22,37 @@ from msgvault_spark.catalog import CATALOG
 # exceeds 50, all 50 slots go to touched entries and the overflow relies
 # on the out-of-band full-oracle sweep until its next window.
 _PRIORITY = [
-    # the exact wide record (sources/cache.build_wide_messages with
-    # nested junction rows; aggregate_wide/sub_aggregate_wide and the
-    # shared name helpers in functions/text.py): narrow changes, every
-    # aggregate/sub-aggregate entry re-verifies
+    # Narrow changes since the last clean boundary (tools/gate_priority.py
+    # marks them; each must hold a window slot):
+    # catalog_lookup's docstrings (every lookup entry)
+    "hydrate_search_hits",
+    "get_messages_by_ids",
+    "hybrid_rrf_hydrated",
+    "list_accounts",
+    "get_messages_raw_batch",
+    "get_message_by_source_id",
+    "get_attachments_batch",
+    "gmail_ids_by_filter",
+    "summary_stats",
+    # catalog_streaming's memo opt-outs and streaming/incremental's pool
+    # clear (every stream entry)
+    "stream_rollup_daily",
+    "stream_dedup_count",
+    "stream_user_sessions",
+    "stream_stream_join_funnel",
+    "stream_static_enrich",
+    # planmem.py lost its plan-memo helpers (checkpointing dedup entries)
+    "fuzzy_dedup_survivors",
+    "quality_dedup_survivors",
+    "dedup_component_sizes",
+    "pagerank_dup_graph",
+    # textstats/backoff.py: BROADCAST_MAX_ROWS is a plain constant
+    "bigram_backoff_quality",
+    "doremi_weight_update",
+    "pmi_collocations",
+    # --- broad changes (catalog.py, sources/cache.py, artifact_store.py)
+    # touch every entry, so the remaining slots keep the previous window's
+    # order: the wide-record aggregates, then the r12 window
     "agg_senders",
     "agg_sender_names",
     "agg_recipients",
@@ -45,44 +72,9 @@ _PRIORITY = [
     "agg_senders_wide_multifrom",
     "agg_senders_join_multifrom",
     "agg_senders_with_search",
-    # the plan-memo removal: catalog_streaming lost its per-entry memo
-    # opt-out and streaming/incremental's pool clear changed (every
-    # stream entry); catalog_lookup's docstrings changed (every lookup
-    # entry). Narrow changes, must re-verify
-    "stream_rollup_daily",
-    "stream_dedup_count",
-    "stream_user_sessions",
-    "stream_stream_join_funnel",
-    "stream_static_enrich",
-    "hydrate_search_hits",
-    "get_messages_by_ids",
-    "list_accounts",
-    "get_messages_raw_batch",
-    "get_message_by_source_id",
-    "get_attachments_batch",
-    "gmail_ids_by_filter",
-    "summary_stats",
-    # --- round 12 gate window (50 slots). Composition, in order:
-    # (1) the mid-build narrow changes (promote_generation hardening in
-    #     embeddings_pipeline.py; the NEW ivfpq_knn_seed0 +
-    #     ivfpq_recall_report entries in catalog_ann.py);
-    # (2) the r12 OPTIMIZATION-round narrow changes — every entry whose
-    #     plan was restructured this round (tfidf/backoff rewrites, the
-    #     ILIKE→lowered-contains compilation, simhash integer-shift
-    #     votes, the wide recipient-blob columns). Results are
-    #     hash-identical (proven against the oracle at sf0.001/0.01/0.1
-    #     in-round) but gate_priority must_verify fronts them;
-    # (3) the r2/r3-vintage rotation cohort (r11 verdict task #3)
-    #     filling the remaining slots; the r5-vintage tail the
-    #     optimization entries displaced queues first in overflow for
-    #     the r13 window.
-    # The full sf0.01 oracle sweep re-verified all 223 entries
-    # out-of-band on this round's tree. ---
     "embed_pipeline_vectors",
     "ivfpq_knn_seed0",
     "ivfpq_recall_report",
-    # the ILIKE→lowered-contains compilation (functions/text.py) touches
-    # every search-path entry
     "search_fast_recipients_wide",
     "search_fast_operators_wide",
     "search_fast_operators",
@@ -90,23 +82,12 @@ _PRIORITY = [
     "search_relative_dates",
     "list_messages_by_domain",
     "list_messages_by_domain_wide",
+    # --- end of the window; the overflow relies on the out-of-band
+    # full-oracle sweep until its next window ---
     "search_with_stats",
     "search_page2",
     "search_by_domains",
-    # level-2 memory recovery (r12): checkpoint-unpersist discipline in
-    # connected_components and pagerank — narrow changes, must re-verify
-    "fuzzy_dedup_survivors",
-    "quality_dedup_survivors",
-    "dedup_component_sizes",
-    "pagerank_dup_graph",
-    "hybrid_rrf_hydrated",
-    # --- end of the window. The r12 plan-restructure entries (tfidf/
-    #     backoff rewrites, simhash integer-shift votes, ngram prefix
-    #     filter) and r5-vintage TPC-H/operator entries, displaced by the
-    #     narrow changes above, queue first in overflow ---
     "tfidf_top_terms",
-    "bigram_backoff_quality",
-    "doremi_weight_update",
     "simhash_fingerprints",
     "simhash_hamming_pairs",
     "ngram_jaccard_pairs",
@@ -152,9 +133,6 @@ _PRIORITY = [
     "profile_orders_table",
     "returned_items_q10",
     "rp_project_embeddings",
-    # --- overflow (out-of-band full-oracle sweep; driver rows in
-    #     later rounds), prior order preserved; the r5-vintage tail
-    #     displaced by the r12 narrow-change entries queues first ---
     "skew_report_orders",
     "sliding_window_events",
     "snapshot_diff_versions",
@@ -276,7 +254,6 @@ _PRIORITY = [
     "boilerplate_prefixes",
     "length_mad_outliers",
     "volume_anomaly_days",
-    "pmi_collocations",
     "weighted_sample_sources",
     "lsh_band_recall_sweep",
     "redact_pii_docs",

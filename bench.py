@@ -7,7 +7,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 value = sum of per-query wall-clock seconds (post-warmup, best of
 BENCH_RUNS=3 runs each), re-collecting the frame the warmup built: a
 reduce-only replay (shuffle reuse skips the map stages). cold_value
-builds each plan fresh per run.
+builds each plan fresh per run. The session is the one the server runs
+(msgvault_spark/session.py), so these numbers measure the served
+configuration.
 """
 
 from __future__ import annotations
@@ -36,24 +38,6 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.1
-
-    # single-node small-SF run: AQE's stage-replanning barriers cost
-    # ~100ms/stage and optimize nothing here; constraint propagation only
-    # burns optimizer time at this scale. A cluster-scale deployment keeps
-    # both defaults (on) — see msgvault_spark/session.py
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-    # size shuffle partitions to the data, the same rule that picks
-    # thousands at 100 TB pointed the other way: at sf<=0.1 a shuffle
-    # partition of 32 holds ~KBs and per-task scheduling dominates —
-    # measured r7: cold total 13.1s at 32 partitions vs 11.1s at 8
-    if sf <= 0.1:
-        os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-
-    # the driver parses stdout: progress bars / log lines interleaved with
-    # the final JSON truncated r6/r7's artifacts to an unparseable tail —
-    # keep stdout to exactly one JSON line (full result goes to a file)
-    os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark

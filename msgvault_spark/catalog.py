@@ -16,7 +16,6 @@ Determinism rules (the driver hash-compares values):
 
 from __future__ import annotations
 
-import os
 import sys
 import threading
 from collections.abc import Callable
@@ -66,7 +65,7 @@ _PLAN_MEMO: dict = {}
 # the clear actually dropped cached entries; 2.0 s is the value the r12
 # sf1-marathon diagnosis validated (one cleaner pass destroys the dead
 # broadcasts the first GC enqueued).
-_CLEANER_DRAIN_S = float(os.environ.get("SPARK_GRAFT_CLEANER_DRAIN_S", "2.0"))
+_CLEANER_DRAIN_S = 2.0
 # serializes level-3 recovery's set/attempt/restore of the session-wide
 # autoBroadcastJoinThreshold (see run_with_memory_recovery); reentrant, so
 # a ladder nested inside a level-3 attempt() reaches its own level 3
@@ -149,11 +148,9 @@ def clear_session_caches(spark: SparkSession) -> int:
             # retry failed exactly this way). The second GC also reclaims
             # whatever the cleaner's destroys just unpinned.
             #
-            # The pause is paid only when this call actually dropped
-            # something (dropped == 0 → there were no broadcasts/blocks
-            # to drain, so one GC suffices), and its length is
-            # configurable (SPARK_GRAFT_CLEANER_DRAIN_S, default 2.0 —
-            # the value the r12 marathon diagnosis validated).
+            # The pause (_CLEANER_DRAIN_S) is paid only when this call
+            # actually dropped something (dropped == 0 → there were no
+            # broadcasts/blocks to drain, so one GC suffices).
             import time as _time
 
             jvm.System.gc()

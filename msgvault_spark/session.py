@@ -1,10 +1,16 @@
-"""SparkSession factory.
+"""SparkSession factory: the one session every process runs.
 
 The reference pins DuckDB to ``SET threads = GOMAXPROCS`` on one pooled
 connection (reference: internal/query/duckdb.go:91-99). The Spark analogue is
-a single long-lived session with AQE enabled so Catalyst re-plans at runtime
-(skew joins, partition coalescing) — the knobs that matter at 100 TB are set
-here once and inherited by every operator.
+a single long-lived session whose settings are fixed here and inherited by
+every operator. The server, ``bench.py``, the tools and the serving SLO test
+all run this session, so what is benchmarked is what is served.
+
+Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``,
+``SPARK_GRAFT_MASTER``, ``SPARK_GRAFT_DRIVER_MEM`` and
+``SPARK_GRAFT_JVM_OPTS`` here, plus the data and artifact directories
+(``SPARK_GRAFT_SF_DIR``, ``SPARK_GRAFT_ARTIFACT_DIR``) read elsewhere.
+No setting changes how a query is planned.
 """
 
 from __future__ import annotations
@@ -18,56 +24,38 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-def get_spark(
-    app_name: str = "msgvault_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession.
+def get_spark(app_name: str = "msgvault_spark") -> SparkSession:
+    """Build (or fetch) the session.
 
     Scale notes (100 TB design, local[N] testing):
-      - AQE on: runtime partition coalescing + skew-join splitting replace any
-        hand-tuned static shuffle count on a real cluster.
-      - shuffle.partitions defaults to 2×cores locally; on a 1000-executor
-        cluster AQE's coalescing makes the initial number non-critical.
+      - AQE on: runtime re-planning (partition coalescing, skew-join
+        splitting, join choice from accurate sizes) replaces hand-tuned
+        static shuffle counts and join strategies (Shark's partial DAG
+        execution).
+      - shuffle.partitions is max(32, cores); AQE's coalescing makes the
+        initial number non-critical at any scale.
+      - constraint propagation on: inferred filters prune wide plans.
       - Arrow on: every pandas_udf / mapInPandas boundary is Arrow-batched.
       - session timezone pinned to UTC: the reference stores UTC timestamps
         (FIXTURES.md), and oracle comparisons must not depend on host tz.
       - maxPartitionBytes 128m: keeps scan partitions executor-memory-sized.
     """
     cpus = default_parallelism()
-    if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(32, cpus))
-        )
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE defaults ON (skew-join splitting + partition coalescing are
-        # what keep 100 TB shuffles healthy). SPARK_GRAFT_AQE=false lets a
-        # small-scale single-node run drop AQE's per-stage replanning
-        # barrier, which costs ~100ms/stage and buys nothing on tiny data.
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_AQE", "true"),
-        )
+        .config("spark.sql.shuffle.partitions", str(max(32, cpus)))
+        # skew-join splitting + partition coalescing are what keep 100 TB
+        # shuffles healthy
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # single-node: never trade task-start latency for data locality
         .config("spark.locality.wait", "0")
-        # constraint propagation spends optimizer time inferring filter
-        # constraints across wide plans; SPARK_GRAFT_CONSTRAINTS=false lets
-        # a plan-construction-bound local run skip it (cluster default: on,
-        # where the inferred pruning pays for itself)
-        .config(
-            "spark.sql.constraintPropagation.enabled",
-            os.environ.get("SPARK_GRAFT_CONSTRAINTS", "true"),
-        )
+        .config("spark.sql.constraintPropagation.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # openCostInBytes is the per-file padding Spark adds when packing
@@ -87,13 +75,8 @@ def get_spark(
         # prefer their write-time bucket layout; the deliberate dimension
         # broadcasts all use explicit broadcast hints, which ignore
         # this threshold, and AQE's runtime re-plan uses ACCURATE decoded
-        # sizes where it is enabled.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get(
-                "SPARK_GRAFT_BROADCAST_THRESHOLD", str(16 * 1024 * 1024)
-            ),
-        )
+        # sizes.
+        .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # extra driver-JVM flags (cold-start experiments: JIT tiering, CDS)
         .config(
@@ -101,28 +84,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_JVM_OPTS", ""),
         )
         .config("spark.ui.enabled", "false")
-        # stage-progress bars corrupt machine-read stdout (the driver's
-        # bench capture); default on for humans, off for harnesses
-        .config(
-            "spark.ui.showConsoleProgress",
-            os.environ.get("SPARK_GRAFT_CONSOLE_PROGRESS", "true"),
-        )
+        # PySpark launches the JVM as "pyspark-shell", and Spark turns the
+        # console progress bar on for shells unless it is set; it would
+        # write stage bars into the server's log and every tool's stderr
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .getOrCreate()
     )
-    # Driver status-store retention: AppStatusListener (jobs/stages/tasks)
-    # and SQLAppStatusListener (spark.sql.ui.retainedExecutions, each entry
-    # holding the full physicalPlanDescription + plan graph) are strongly-
-    # referenced driver heap no cache clear can reclaim. These are
-    # listener-construction-time configs, so they must be on the builder;
-    # tools/heap_growth.py --retained sets this env var to A/B-attribute
-    # marathon-session heap residue. Unset → Spark defaults (1000 for
-    # executions, jobs and stages; 100000 for tasks).
-    retained = os.environ.get("SPARK_GRAFT_UI_RETAINED")
-    if retained is not None:
-        builder = (
-            builder.config("spark.sql.ui.retainedExecutions", retained)
-            .config("spark.ui.retainedJobs", retained)
-            .config("spark.ui.retainedStages", retained)
-            .config("spark.ui.retainedTasks", retained)
-        )
-    return builder.getOrCreate()

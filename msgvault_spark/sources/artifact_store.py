@@ -40,8 +40,8 @@ This module is the missing disk layer:
     prebuilt cache (cmd/msgvault/cmd/build_cache.go:52-56).
 
 Set ``SPARK_GRAFT_ARTIFACT_DIR`` to relocate the store (tests point it
-at tmp_path) or to the empty string to disable persistence entirely
-(in-session memos only, the pre-round-10 behavior).
+at tmp_path). When a lake write fails, ``save_group`` returns None and
+the caller serves an in-session copy instead.
 """
 
 from __future__ import annotations
@@ -65,12 +65,9 @@ _DEFAULT_ROOT = os.path.join(_REPO_ROOT, ".artifacts")
 _PKG_FP: str | None = None
 
 
-def store_root() -> str | None:
-    """Store directory, or None when persistence is disabled."""
-    root = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
-    if root == "":
-        return None
-    return root or _DEFAULT_ROOT
+def store_root() -> str:
+    """Store directory."""
+    return os.environ.get("SPARK_GRAFT_ARTIFACT_DIR") or _DEFAULT_ROOT
 
 
 def _package_fingerprint() -> str:
@@ -178,8 +175,6 @@ def load_group(
 ) -> tuple[dict[str, DataFrame], dict] | None:
     """(frames, scalars) for a fresh persisted group, else None."""
     root = store_root()
-    if root is None:
-        return None
     d = os.path.join(root, _digest(sf_dir, kind_key))
     meta_path = os.path.join(d, "meta.json")
     if not os.path.exists(meta_path):
@@ -205,14 +200,12 @@ def save_group(
     buckets: dict[str, tuple[str, int]] | None = None,
 ) -> dict[str, DataFrame] | None:
     """Persist a group; returns parquet-backed re-reads of the frames
-    (so the served bits ARE the stored bits) or None when persistence
-    is off or the write lost a race. ``buckets`` maps a frame name to
+    (so the served bits ARE the stored bits) or None when the write
+    failed or lost a race. ``buckets`` maps a frame name to
     (bucket_key, n_buckets): that frame is written hash-clustered +
     sorted on the key, one file per bucket (the write-time shuffle that
     replaces every serving session's co-partitioning exchange)."""
     root = store_root()
-    if root is None:
-        return None
     digest = _digest(sf_dir, kind_key)
     d = os.path.join(root, digest)
     # Serialize in-process writers: HTTP request threads build plans
@@ -332,8 +325,6 @@ def _prune_stale(root: str, kind: str, sf_dir: str, keep: str) -> None:
 def load_scalars(sf_dir: str, kind_key: tuple) -> dict | None:
     """Scalar-only group lookup (no Spark session needed)."""
     root = store_root()
-    if root is None:
-        return None
     meta_path = os.path.join(root, _digest(sf_dir, kind_key), "meta.json")
     if not os.path.exists(meta_path):
         return None
@@ -350,8 +341,6 @@ def save_scalars(sf_dir: str, kind_key: tuple, scalars: dict) -> None:
     serializes (tuple→list, int dict keys→str, date→skip) would change
     type across sessions, so it stays an in-session memo (r10 advice)."""
     root = store_root()
-    if root is None:
-        return
     try:
         if json.loads(json.dumps(scalars)) != scalars:
             return  # serializes but mutates: in-session memo only

@@ -27,9 +27,9 @@ straight off the prebuilt cache). Spark-first equivalents here:
     at 100 TB, built once per ETL and served as a lake scan (column
     pruning + pushdown reach the parquet footers).
 
-When the artifact store is disabled (SPARK_GRAFT_ARTIFACT_DIR="") the
-pre-round-11 in-session fallback applies: repartition by join key +
-MEMORY_AND_DISK persist, the same co-partitioning paid per session.
+When a lake write fails (``artifact_store.save_group`` returns None) the
+in-session fallback applies: repartition by join key + MEMORY_AND_DISK
+persist, the same co-partitioning paid per session.
 """
 
 from __future__ import annotations
@@ -82,15 +82,13 @@ _ARCHIVE_BUCKETS: dict[str, tuple[str, int]] = {
 
 
 @_locked
-def get_archive(
-    spark: SparkSession, sf_dir: str, *, materialize: bool = True
-) -> dict[str, DataFrame]:
+def get_archive(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Adapter archive, served straight off the bucketed artifact lake.
     Round 11: co-partitioning moved from session warm-in (a repartition +
     persist + count of every fact, ~10s of the sf1 cold budget) to a
     write-time property — serving sessions register the stored bucketed
     directories and scan them, paying nothing up front. The in-session
-    repartition+persist fallback survives only for store-disabled runs."""
+    repartition+persist fallback survives only for a failed lake write."""
     from msgvault_spark.sources import artifact_store
 
     key = _key(spark, sf_dir)
@@ -112,17 +110,17 @@ def get_archive(
         stored = _persist_dims(stored)
         _ARCHIVE_MEMO[key] = stored
         return stored
-    if materialize:  # store disabled: per-session co-partition fallback
-        arch = dict(arch)
-        for name, (bucket_key, n) in _ARCHIVE_BUCKETS.items():
-            arch[name] = arch[name].repartition(n, bucket_key).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        for name in ("participants", "labels", "conversations", "sources"):
-            arch[name] = arch[name].persist(StorageLevel.MEMORY_AND_DISK)
-        # force materialization now so first query isn't charged for it
-        for df in arch.values():
-            df.count()
+    # lake write failed: per-session co-partition fallback
+    arch = dict(arch)
+    for name, (bucket_key, n) in _ARCHIVE_BUCKETS.items():
+        arch[name] = arch[name].repartition(n, bucket_key).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+    for name in ("participants", "labels", "conversations", "sources"):
+        arch[name] = arch[name].persist(StorageLevel.MEMORY_AND_DISK)
+    # force materialization now so first query isn't charged for it
+    for df in arch.values():
+        df.count()
     _ARCHIVE_MEMO[key] = arch
     return arch
 
@@ -313,7 +311,7 @@ def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         stored = artifact_store.save_group(spark, sf_dir, kind, {"wide": built})
         if stored:
             wide = stored["wide"].persist(StorageLevel.MEMORY_AND_DISK)
-        else:  # store disabled: in-session persist fallback
+        else:  # lake write failed: in-session persist fallback
             wide = built.persist(StorageLevel.MEMORY_AND_DISK)
             wide.count()
     _WIDE_MEMO[key] = wide
@@ -428,7 +426,7 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if stored is not None:
             _TABLE_MEMO[key] = stored["data"]
             return _TABLE_MEMO[key]
-        # store disabled → fall through to the in-session cache path
+        # lake write failed → fall through to the in-session cache path
     raw = load_table(spark, sf_dir, name)
     if n_rows is None:
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
@@ -616,7 +614,7 @@ def _disk_backed(
     Lake-served frames come back as PLAIN SCANS (no persist/count — that
     per-artifact warm-in was most of the sf1 cold budget, and consumers'
     predicates now push into the artifact's parquet). Only the
-    store-disabled fallback persists: there the builder's plan would
+    failed-write fallback persists: there the builder's plan would
     otherwise re-run per query (iterative builders like connected
     components make that prohibitive)."""
     from msgvault_spark.sources import artifact_store

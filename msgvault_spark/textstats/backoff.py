@@ -33,8 +33,6 @@ exchange-free) plus one doc-keyed aggregate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -51,9 +49,7 @@ ALPHA_DEN = 5  # the backoff log argument stays a ratio of exact longs
 # keys AQE's skew split handles. ~2M (term, long) / (prev, cur, long) rows
 # is low hundreds of MB as a hashed relation — comfortably inside an 8 GB
 # driver while far above any plausible trusted-slice vocabulary.
-BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BACKOFF_BROADCAST_MAX_ROWS", "2000000")
-)
+BROADCAST_MAX_ROWS = 2_000_000
 
 
 def bigram_pairs(ws: Column) -> Column:

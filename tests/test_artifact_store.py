@@ -1,7 +1,7 @@
 """The on-disk artifact lake (sources/artifact_store.py) must serve
-exactly what was built, only while fresh, and never when disabled —
-the load-if-fresh serving model of the reference's build-cache +
-cacheNeedsBuild staleness probe (cmd/msgvault/cmd/build_cache.go:125-263,
+exactly what was built, and only while fresh — the load-if-fresh
+serving model of the reference's build-cache + cacheNeedsBuild
+staleness probe (cmd/msgvault/cmd/build_cache.go:125-263,
 cmd/msgvault/cmd/tui.go:183-290)."""
 
 from __future__ import annotations
@@ -62,13 +62,6 @@ def test_source_change_invalidates(spark, store, tmp_path):
     # fingerprints are recomputed per call, so the mtime change is seen
     # immediately — no fresh-process analog needed
     assert artifact_store.load_group(spark, str(src), ("t", "fresh")) is None
-
-
-def test_disabled_store_is_noop(spark, store, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", "")
-    built = spark.range(2).toDF("id")
-    assert artifact_store.save_group(spark, SF, ("t", "off"), {"data": built}) is None
-    assert artifact_store.load_group(spark, SF, ("t", "off")) is None
 
 
 def test_scalar_roundtrip_and_non_json_fallback(spark, store):

@@ -18,10 +18,8 @@ import sys
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r"""
-import json, os, sys, time
+import json, sys, time
 sys.path.insert(0, %(here)r)
-os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 t0 = time.perf_counter()
 from msgvault_spark.session import get_spark
 spark = get_spark("serving_slo_test")
@@ -29,9 +27,11 @@ spark.sparkContext.setLogLevel("ERROR")
 from msgvault_spark.catalog import CATALOG
 name, spec = next((n, s) for n, s in CATALOG.items() if s.headline)
 rows = spec.fn(spark, %(sf)r).collect()
-print("SLOJSON " + json.dumps(
-    {"wall": time.perf_counter() - t0, "entry": name, "rows": len(rows)}
-))
+print("SLOJSON " + json.dumps({
+    "wall": time.perf_counter() - t0, "entry": name, "rows": len(rows),
+    "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
+    "constraints": spark.conf.get("spark.sql.constraintPropagation.enabled"),
+}))
 """
 
 
@@ -62,6 +62,9 @@ def test_first_query_cold_process_budget(tmp_path):
     )
     rec = json.loads(line[len("SLOJSON "):])
     assert rec["rows"] >= 1
+    # the timed session is the one the server runs
+    assert rec["aqe"] == "true", rec
+    assert rec["constraints"] == "true", rec
     # typical: ~10s (5s JVM + 4s cold plan build + execute). 45s flags a
     # structural regression (warm-in, artifact rebuild on the hot path)
     # while riding out ambient VM noise.

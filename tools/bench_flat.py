@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 
     from pyspark.sql import functions as F
 

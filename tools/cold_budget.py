@@ -47,9 +47,6 @@ _SPARK_CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, %(here)r)
 sf_dir = %(sf_dir)r
-os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 t = {}
 t0 = time.perf_counter()
 from msgvault_spark.session import get_spark

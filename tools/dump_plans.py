@@ -5,9 +5,9 @@ exchange counts, codegen spans) are reviewable without a Spark session.
 
     python tools/dump_plans.py [sf_dir]
 
-Plans are FRESH (built after a warm-up run) under the tuned session with
-AQE off — the deterministic initial plan the exchange-count pins are
-calibrated against (see tests/test_plan_quality.py).
+Plans are FRESH (built after a warm-up run) under the serving session
+(msgvault_spark/session.py, AQE on) and printed before they execute: the
+initial plan AQE starts from, not the final plan it re-optimizes into.
 """
 
 from __future__ import annotations
@@ -109,8 +109,6 @@ def _formatted(spark, df) -> str:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
 
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark
@@ -121,9 +119,10 @@ def main() -> None:
     out = [
         "# PLANS — headline physical plans (generated by tools/dump_plans.py)",
         "",
-        f"Scale factor dir: `{sf_dir}`; AQE off (deterministic initial "
-        "plans, the shape the exchange-count pins are calibrated on). "
-        "Regenerate after any plan-affecting change.",
+        f"Scale factor dir: `{sf_dir}`; the serving session "
+        "(`msgvault_spark/session.py`, AQE on). Each plan is fresh and "
+        "unexecuted: the initial plan AQE starts from, not its final "
+        "re-optimized plan. Regenerate after any plan-affecting change.",
         "",
     ]
     for name in SHOWCASE:

@@ -22,7 +22,7 @@ would touch all 200+ entries on any edit):
     whole module x — any change in it touches the entry.
 
 Usage:
-    python tools/gate_priority.py            # base = last round commit
+    python tools/gate_priority.py            # base = last clean boundary
     python tools/gate_priority.py --base REV
 
 Prints touched entries (the suggested _PRIORITY front) and flags touched
@@ -167,8 +167,10 @@ def last_round_rev() -> str | None:
     """Base revision for the touched-entry diff: the newest round
     boundary that can actually serve as one.
 
-    A round boundary is the GROUP of commits sharing a round number
-    ("round N: end-of-round snapshot" + "round N: verdict/..."). The r8
+    A round boundary is the GROUP of commits sharing a round label
+    ("round N: end-of-round snapshot" + "round N: verdict/..."); a
+    pipeline boundary ("PR N: ..." or "re-anchor @ ...") is a group of
+    its own under the same rule. The r8
     loophole: the driver's snapshot commit can itself carry leftover
     msgvault_spark/ changes (997f7b8 shipped the adapter ID-space fix),
     and diffing against that very commit makes the change invisible —
@@ -178,7 +180,11 @@ def last_round_rev() -> str | None:
     changes then land in the diff against the previous clean group and
     re-enter the window)."""
     out = _git(
-        "log", "--grep", "^round [0-9]*:", "--format=%H %s"
+        "log", "-E",
+        "--grep", "^round [0-9]+:",
+        "--grep", "^PR [0-9]+:",
+        "--grep", "^re-anchor @ ",
+        "--format=%H %s",
     ).strip()
     if not out:
         return None
@@ -186,6 +192,7 @@ def last_round_rev() -> str | None:
     order: list[str] = []
     for line in out.splitlines():  # newest first
         rev, subject = line.split(" ", 1)
+        # "round N", "PR N" or "re-anchor @ ..." (one commit each)
         rnd = subject.split(":", 1)[0]
         if rnd not in groups:
             groups[rnd] = []

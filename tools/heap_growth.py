@@ -14,7 +14,7 @@ clear or GC can reclaim — exactly the residual the r12 sf1
 marathon saw after level-2 recovery cleared every serving cache and still
 could not build a 1-row broadcast.
 
-    python tools/heap_growth.py [sf_dir] [n_entries] [--retained N] [--hist]
+    python tools/heap_growth.py [sf_dir] [n_entries] [--hist]
 """
 
 from __future__ import annotations
@@ -28,12 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     args = sys.argv[1:]
-    retained = None
     hist = False
-    if "--retained" in args:
-        i = args.index("--retained")
-        retained = args[i + 1]
-        del args[i : i + 2]
     if "--hist" in args:
         hist = True
         args.remove("--hist")
@@ -41,28 +36,11 @@ def main() -> None:
     n_entries = int(args[1]) if len(args) > 1 else 80
     step = 20
 
-    if retained is not None:
-        # must be set before the session exists — these are listener-
-        # construction-time configs
-        os.environ["SPARK_GRAFT_UI_RETAINED"] = retained
-
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
     spark = get_spark("msgvault_heap_growth")
     spark.sparkContext.setLogLevel("ERROR")
-    if retained is not None:
-        # the env var is wired through session.py's builder; verify it
-        # took (getOrCreate silently ignores configs when a session
-        # already exists) so a retained-A/B never silently tests defaults
-        applied = spark.conf.get("spark.sql.ui.retainedExecutions")
-        if applied != retained:
-            raise SystemExit(
-                f"--retained {retained} did not apply "
-                f"(session reports {applied}); is a session already up?"
-            )
     jvm = spark.sparkContext._jvm
     rt = jvm.java.lang.Runtime.getRuntime()
 
@@ -75,10 +53,7 @@ def main() -> None:
         time.sleep(0.5)
         return (rt.totalMemory() - rt.freeMemory()) / 1e6
 
-    print(
-        f"retainedExecutions override: {retained or '(spark default)'}; "
-        f"sf_dir={sf_dir}; entries={n_entries}"
-    )
+    print(f"sf_dir={sf_dir}; entries={n_entries}")
     print(f"  0 entries: {settled_heap_mb():7.1f} MB settled heap")
     done = 0
     for name, spec in CATALOG.items():

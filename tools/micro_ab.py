@@ -26,10 +26,6 @@ WORKTREE = pathlib.Path("/tmp/micro_ab_prev")
 RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, os.getcwd())
-os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 from msgvault_spark.catalog import CATALOG
 from msgvault_spark.session import get_spark
 

@@ -37,10 +37,6 @@ import cProfile, io, json, pstats, sys, time
 sys.path.insert(0, %(here)r)
 sf_dir = %(sf_dir)r
 entry = %(entry)r
-import os
-os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 out = {}
 
 t0 = time.perf_counter()

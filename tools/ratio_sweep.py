@@ -44,8 +44,6 @@ def main() -> None:
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
     # Each entry's frame is dropped before the next entry, so a marathon
     # over every entry never pins more than one plan's broadcasts — the
     # sweep runs on the default 8g driver.

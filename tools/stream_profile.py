@@ -19,10 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    os.environ.setdefault("SPARK_GRAFT_AQE", "false")
-    os.environ.setdefault("SPARK_GRAFT_CONSTRAINTS", "false")
-    if "sf0.1" in sf_dir or "sf0.0" in sf_dir:
-        os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 
     from msgvault_spark.catalog import CATALOG
     from msgvault_spark.session import get_spark
