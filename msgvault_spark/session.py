@@ -10,7 +10,8 @@ Only deployment settings come from the environment: ``SPARK_GRAFT_CPUS``,
 ``SPARK_GRAFT_MASTER``, ``SPARK_GRAFT_DRIVER_MEM`` and
 ``SPARK_GRAFT_JVM_OPTS`` here, plus the data and artifact directories
 (``SPARK_GRAFT_SF_DIR``, ``SPARK_GRAFT_ARTIFACT_DIR``) read elsewhere.
-No setting changes how a query is planned.
+Apart from the core count, which sizes the shuffle, none of them changes
+how a query is planned.
 """
 
 from __future__ import annotations
