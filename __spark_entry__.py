@@ -24,7 +24,31 @@ from msgvault_spark.catalog import CATALOG
 _PRIORITY = [
     # Narrow changes since the last clean boundary (tools/gate_priority.py
     # marks them; each must hold a window slot):
-    # catalog_lookup's docstrings (every lookup entry)
+    # plans/aggregate.py (total_stats_wide), plans/lookup.py (the wide
+    # by-id plans) and search/fast_wide.py (search_sender): the aggregate
+    # and wide-record entries
+    "agg_senders",
+    "agg_sender_names",
+    "agg_recipients",
+    "agg_domains",
+    "agg_labels",
+    "agg_time_month",
+    "agg_time_year_filtered",
+    "sub_agg_domain_to_senders",
+    "sub_agg_label_to_time",
+    "total_stats",
+    "agg_senders_wide",
+    "agg_domains_wide",
+    "agg_labels_wide",
+    "agg_time_month_wide",
+    "search_fast_operators_wide",
+    "sub_agg_domain_to_senders_wide",
+    "search_fast_recipients_wide",
+    "agg_recipients_wide",
+    "agg_senders_wide_multifrom",
+    "agg_senders_join_multifrom",
+    "agg_senders_with_search",
+    # catalog_lookup's docstrings and plans/lookup.py (every lookup entry)
     "hydrate_search_hits",
     "get_messages_by_ids",
     "hybrid_rrf_hydrated",
@@ -52,31 +76,10 @@ _PRIORITY = [
     "pmi_collocations",
     # --- broad changes (catalog.py, sources/cache.py, artifact_store.py)
     # touch every entry, so the remaining slots keep the previous window's
-    # order: the wide-record aggregates, then the r12 window
-    "agg_senders",
-    "agg_sender_names",
-    "agg_recipients",
-    "agg_domains",
-    "agg_labels",
-    "agg_time_month",
-    "agg_time_year_filtered",
-    "sub_agg_domain_to_senders",
-    "sub_agg_label_to_time",
-    "total_stats",
-    "agg_senders_wide",
-    "agg_domains_wide",
-    "agg_labels_wide",
-    "agg_time_month_wide",
-    "sub_agg_domain_to_senders_wide",
-    "agg_recipients_wide",
-    "agg_senders_wide_multifrom",
-    "agg_senders_join_multifrom",
-    "agg_senders_with_search",
+    # order
     "embed_pipeline_vectors",
     "ivfpq_knn_seed0",
     "ivfpq_recall_report",
-    "search_fast_recipients_wide",
-    "search_fast_operators_wide",
     "search_fast_operators",
     "search_text_terms",
     "search_relative_dates",

@@ -196,32 +196,36 @@ def list_view(
 
 
 def get_total_stats(spark, sf_dir: str) -> QueryResult:
-    """`get_stats` analog: global archive stats row."""
+    """`get_stats` analog: global archive stats row. Served from the wide
+    record; answers equal ``total_stats`` over the archive."""
     from msgvault_spark.plans import aggregate as agg
-    from msgvault_spark.sources.cache import get_archive
+    from msgvault_spark.sources.cache import get_wide_messages
 
-    return collect_result(agg.total_stats(get_archive(spark, sf_dir)))
+    return collect_result(agg.total_stats_wide(get_wide_messages(spark, sf_dir)))
 
 
 def get_message_summaries(spark, sf_dir: str, ids: list[int]) -> QueryResult:
     """GetMessageSummariesByIDs analog (engine.go:36-43): hit ids →
-    rank-ordered summaries; the hydration stage after any search."""
-    from msgvault_spark.plans.lookup import get_message_summaries_by_ids
-    from msgvault_spark.sources.cache import get_archive
+    rank-ordered summaries; the hydration stage after any search. Served
+    from the wide record; answers equal
+    ``get_message_summaries_by_ids``."""
+    from msgvault_spark.plans.lookup import get_message_summaries_by_ids_wide
+    from msgvault_spark.sources.cache import get_wide_messages
 
     return collect_result(
-        get_message_summaries_by_ids(get_archive(spark, sf_dir), ids)
+        get_message_summaries_by_ids_wide(get_wide_messages(spark, sf_dir), ids)
     )
 
 
 def get_messages(spark, sf_dir: str, ids: list[int]) -> QueryResult:
     """Batch GetMessage/GetAttachment analog (engine.go:26-33): full detail
     (sender, recipients, labels, attachment rollup) per id, batch-latency
-    by design (SURVEY §7 — ms point lookup is a non-goal)."""
-    from msgvault_spark.plans.lookup import get_messages as _gm
-    from msgvault_spark.sources.cache import get_archive
+    by design (SURVEY §7 — ms point lookup is a non-goal). Served from the
+    wide record; answers equal ``plans.lookup.get_messages``."""
+    from msgvault_spark.plans.lookup import get_messages_wide
+    from msgvault_spark.sources.cache import get_wide_messages
 
-    return collect_result(_gm(get_archive(spark, sf_dir), ids))
+    return collect_result(get_messages_wide(get_wide_messages(spark, sf_dir), ids))
 
 
 def list_accounts(spark, sf_dir: str) -> QueryResult:

@@ -356,23 +356,44 @@ def total_stats(
     msg = msg.select("id", "source_id", "size_estimate")
     att = _attachment_preagg(archive["attachments"])
     joined = msg.join(att, F.col("id") == F.col("message_id"), "left")
-    core = joined.agg(
+    label_ids = msg.select("id").join(
+        archive["message_labels"], F.col("id") == F.col("message_id")
+    )
+    return _total_stats_row(joined, "attachment_count", "attachment_size", label_ids)
+
+
+def total_stats_wide(wide: DataFrame) -> DataFrame:
+    """``total_stats`` over the wide record: the live messages' own
+    attachment sums and label ids, two aggregates over one scan."""
+    live = live_messages(wide)
+    return _total_stats_row(
+        live,
+        "att_count_sum",
+        "att_size_sum",
+        live.select(F.explode("label_ids").alias("label_id")),
+    )
+
+
+def _total_stats_row(
+    msg: DataFrame, att_count: str, att_size: str, label_ids: DataFrame
+) -> DataFrame:
+    """The stats row: per-message attachment ``att_count``/``att_size``
+    summed over ``msg``, distinct ``label_id`` over ``label_ids``."""
+    core = msg.agg(
         F.count(F.lit(1)).alias("message_count"),
         F.coalesce(F.sum(F.col("size_estimate").cast("long")), F.lit(0)).alias(
             "total_size"
         ),
-        F.coalesce(F.sum("attachment_count"), F.lit(0)).cast("long").alias(
+        F.coalesce(F.sum(att_count), F.lit(0)).cast("long").alias(
             "attachment_count"
         ),
-        F.coalesce(F.sum("attachment_size"), F.lit(0)).cast("long").alias(
+        F.coalesce(F.sum(att_size), F.lit(0)).cast("long").alias(
             "attachment_size"
         ),
         F.count_distinct(F.col("source_id")).alias("account_count"),
     )
-    label_count = (
-        msg.select("id")
-        .join(archive["message_labels"], F.col("id") == F.col("message_id"))
-        .agg(F.count_distinct(F.col("label_id")).alias("label_count"))
+    label_count = label_ids.agg(
+        F.count_distinct(F.col("label_id")).alias("label_count")
     )
     return core.crossJoin(F.broadcast(label_count))
 

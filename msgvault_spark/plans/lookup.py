@@ -29,11 +29,57 @@ from msgvault_spark.operators.present import present_sorted
 from msgvault_spark.search.fast import _sender_resolution
 
 
-def _ids_frame(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
-    spark = archive["messages"].sparkSession
-    return spark.createDataFrame(
+def _with_rank(df: DataFrame, ids: list[int]) -> DataFrame:
+    """``df`` joined to the caller's ``(id, rank)`` page: one bounded
+    broadcast (the id page), no match for an absent id."""
+    ranks = df.sparkSession.createDataFrame(
         [(int(i), r + 1) for r, i in enumerate(ids)], "id long, rank int"
     )
+    return df.join(F.broadcast(ranks), "id")
+
+
+def _summary_columns() -> list:
+    """The summary row after ``rank`` and ``id`` (sender columns
+    resolved)."""
+    return [
+        F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
+        F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
+        "from_email",
+        "from_name",
+        "sent_at",
+        F.coalesce(F.col("size_estimate"), F.lit(0)).alias("size_estimate"),
+    ]
+
+
+def _summaries(ranked: DataFrame) -> DataFrame:
+    return ranked.select(
+        "rank",
+        "id",
+        *_summary_columns(),
+        F.coalesce(F.col("has_attachments"), F.lit(False)).alias(
+            "has_attachments"
+        ),
+    ).transform(present_sorted, "rank")
+
+
+def _details(decorated: DataFrame) -> DataFrame:
+    return decorated.select(
+        "rank",
+        "id",
+        *_summary_columns(),
+        F.coalesce(F.col("message_type"), F.lit("")).alias("message_type"),
+        F.coalesce(F.col("recipients"), F.lit("")).alias("recipients"),
+        F.coalesce(F.col("labels"), F.lit("")).alias("labels"),
+        F.coalesce(F.col("att_count"), F.lit(0)).cast("long").alias(
+            "attachment_count"
+        ),
+        F.coalesce(F.col("att_size"), F.lit(0)).cast("long").alias(
+            "attachment_size"
+        ),
+        F.coalesce(F.col("att_names"), F.lit("")).alias(
+            "attachment_names"
+        ),
+    ).transform(present_sorted, "rank")
 
 
 def get_message_summaries_by_ids(
@@ -49,23 +95,21 @@ def get_message_summaries_by_ids(
     decorated = _sender_resolution(
         msg, archive["message_recipients"], archive["participants"]
     )
-    return (
-        decorated.join(F.broadcast(_ids_frame(archive, ids)), "id")
-        .select(
-            "rank",
-            "id",
-            F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
-            F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
-            "from_email",
-            "from_name",
-            "sent_at",
-            F.coalesce(F.col("size_estimate"), F.lit(0)).alias("size_estimate"),
-            F.coalesce(F.col("has_attachments"), F.lit(False)).alias(
-                "has_attachments"
-            ),
-        )
-        .transform(present_sorted, "rank")
-    )
+    return _summaries(_with_rank(decorated, ids))
+
+
+def get_message_summaries_by_ids_wide(wide: DataFrame, ids: list[int]) -> DataFrame:
+    """``get_message_summaries_by_ids`` over the wide record
+    (sources/cache.build_wide_messages): an id filter on one scan, the
+    sender resolved from the record's own rows, no join but the rank
+    page's broadcast. Soft-deleted ids are returned, as the join path
+    returns them."""
+    from msgvault_spark.search.fast_wide import search_sender
+
+    if not ids:
+        raise ValueError("get_message_summaries_by_ids: empty id list")
+    msg = wide.filter(F.col("id").isin(*[int(i) for i in ids]))
+    return _summaries(_with_rank(msg.select("*", *search_sender()), ids))
 
 
 def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
@@ -134,9 +178,8 @@ def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
         )
     )
 
-    decorated = _sender_resolution(msg, mr, p)
     out = (
-        decorated.join(F.broadcast(_ids_frame(archive, idset)), "id")
+        _with_rank(_sender_resolution(msg, mr, p), idset)
         .join(recips, F.col("id") == recips["message_id"], "left")
         .drop(recips["message_id"])
         .join(labels, F.col("id") == labels["message_id"], "left")
@@ -144,28 +187,43 @@ def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
         .join(atts, F.col("id") == atts["message_id"], "left")
         .drop(atts["message_id"])
     )
-    return out.select(
-        "rank",
-        "id",
-        F.coalesce(F.col("subject"), F.lit("")).alias("subject"),
-        F.coalesce(F.col("snippet"), F.lit("")).alias("snippet"),
-        "from_email",
-        "from_name",
-        "sent_at",
-        F.coalesce(F.col("size_estimate"), F.lit(0)).alias("size_estimate"),
-        F.coalesce(F.col("message_type"), F.lit("")).alias("message_type"),
-        F.coalesce(F.col("recipients"), F.lit("")).alias("recipients"),
-        F.coalesce(F.col("labels"), F.lit("")).alias("labels"),
-        F.coalesce(F.col("att_count"), F.lit(0)).cast("long").alias(
-            "attachment_count"
-        ),
-        F.coalesce(F.col("att_size"), F.lit(0)).cast("long").alias(
-            "attachment_size"
-        ),
-        F.coalesce(F.col("att_names"), F.lit("")).alias(
-            "attachment_names"
-        ),
-    ).transform(present_sorted, "rank")
+    return _details(out)
+
+
+def get_messages_wide(wide: DataFrame, ids: list[int]) -> DataFrame:
+    """``get_messages`` over the wide record: an id filter on one scan,
+    every decoration read from the record's nested fields. ``recipients``
+    keeps the to/cc/bcc rows whose participant exists (the join path's
+    inner join), ``labels`` the names that resolve (``concat_ws`` skips
+    the NULL names of label ids with no labels row)."""
+    from msgvault_spark.search.fast_wide import search_sender
+
+    if not ids:
+        raise ValueError("get_messages: empty id list")
+    idset = [int(i) for i in ids]
+    resolved = F.filter("recipient_rows", lambda r: r["resolved"])
+    recipients = F.transform(
+        resolved, lambda r: F.concat_ws(":", r["recipient_type"], r["email"])
+    )
+    return _details(
+        _with_rank(
+            wide.filter(F.col("id").isin(*idset)).select(
+                "id",
+                "subject",
+                "snippet",
+                "sent_at",
+                "size_estimate",
+                "message_type",
+                *search_sender(),
+                F.concat_ws(",", F.array_sort(recipients)).alias("recipients"),
+                F.concat_ws(",", "labels").alias("labels"),
+                F.col("att_count_sum").alias("att_count"),
+                F.col("att_size_sum").alias("att_size"),
+                F.concat_ws(",", "att_names").alias("att_names"),
+            ),
+            idset,
+        )
+    )
 
 
 def get_messages_raw(

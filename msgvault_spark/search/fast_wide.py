@@ -83,6 +83,17 @@ def _resolved_sender(name: Column) -> list[Column]:
     ]
 
 
+def search_sender() -> list[Column]:
+    """The join path's ``_sender_resolution`` columns (search, id
+    hydration, detail): the first 'from' row's participant name chain."""
+    first = _first_from()
+    name = F.coalesce(
+        participant_name(first["display_name"], first["phone"], first["email"]),
+        F.lit(""),
+    )
+    return _resolved_sender(name)
+
+
 def compile_search_wide(
     wide: DataFrame,
     q: ParsedQuery,
@@ -165,14 +176,9 @@ def compile_search_wide(
         )
 
     # --- sender resolution + last-stage predicates -------------------------
-    first = _first_from()
-    name = F.coalesce(
-        participant_name(first["display_name"], first["phone"], first["email"]),
-        F.lit(""),
-    )
     decorated = df.select(
         *[c for c in df.columns if c not in WIDE_EXTRA_COLUMNS],
-        *_resolved_sender(name),
+        *search_sender(),
     )
     if filter_.domain:
         decorated = decorated.filter(

@@ -23,6 +23,7 @@ Routes (GET unless noted):
     /api/v1/messages/filter?domain=&label=&limit=&offset=
                                  — filtered listing page (handleFilteredMessages)
     /api/v1/messages?ids=1,2,3   — summary hydration (handleListMessages)
+    /api/v1/messages/{id}        — message detail (handleGetMessage)
     /api/v1/messages/{id}/inline?cid=<content-id>
                                  — CID-referenced inline image bytes
                                  (handleMessageInline; image/* only, 415
@@ -31,15 +32,17 @@ Routes (GET unless noted):
     POST /api/v1/query {"sql": ..., "limit"?: N}   (handleQuery)
 
 Denormalized record: the aggregate, sub-aggregate, fast-search, filtered
-listing, fts search and deep search routes (``/api/v1/aggregates``,
-``/aggregates/sub``, ``/search/fast``, ``/messages/filter``,
-``/search`` with mode=fts, ``/search/deep``) read the wide message record
-(``sources.cache.get_wide_messages``: each message with its
-message_recipients rows as nested fields, its direct sender, labels and
-attachment sums) — one pruned scan, no per-request join, same answers
-as the join-path plans. The record loads on the first request that needs
-it. Stats, total, accounts, id hydration, detail, inline, vector/hybrid
-search and SQL keep their join-path plans.
+listing, fts search, deep search, id-hydration, detail and total routes
+(``/api/v1/aggregates``, ``/aggregates/sub``, ``/search/fast``,
+``/messages/filter``, ``/search`` with mode=fts, ``/search/deep``,
+``/messages?ids=``, ``/messages/{id}``, ``/stats/total``) read the wide
+message record (``sources.cache.get_wide_messages``: every message, soft-
+deleted ones included, with its message_recipients rows as nested
+fields, its direct sender, labels, label ids and attachment sums and
+names) — one pruned scan, no per-request join, same answers as the
+join-path plans. The record loads on the first request that needs it.
+Stats, accounts, inline, vector/hybrid search and SQL keep their
+join-path plans.
 
 Auth mirrors the reference's API-key middleware: when the server is
 constructed with ``api_key``, every /api/v1 request must carry it in the

@@ -19,11 +19,12 @@ straight off the prebuilt cache). Spark-first equivalents here:
 
   - get_wide_messages(): the v_messages-style denormalized record
     (reference internal/query/views.go:346-489; the paper's Parquet
-    cache, internal/query/DESIGN.md:19-31): messages + their
+    cache, internal/query/DESIGN.md:19-31): every message + its
     message_recipients rows as nested repeated fields + direct sender +
-    label array + attachment pre-agg (build_wide_messages). Aggregate,
-    search and listing plans become scan+filter+agg with ZERO joins and
-    answer exactly what the join-path plans answer — the shape that wins
+    label arrays + attachment pre-agg (build_wide_messages). Aggregate,
+    search, listing, id-hydration, detail and total-stats plans become
+    scan+filter+agg with ZERO joins and answer exactly what the join-path
+    plans answer — the shape that wins
     at 100 TB, built once per ETL and served as a lake scan (column
     pruning + pushdown reach the parquet footers).
 
@@ -39,7 +40,7 @@ import functools
 import threading
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from msgvault_spark.sources.adapter import build_archive
@@ -140,10 +141,14 @@ def _persist_dims(arch: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
-    """Denormalized wide record: one row per live message carrying its
-    junction rows as nested repeated fields (Dremel's record layout), so
-    aggregate, search and listing plans over it reproduce the join-path
-    plans exactly with no query-time join:
+    """Denormalized wide record: one row per message, soft-deleted ones
+    included, carrying its junction rows as nested repeated fields
+    (Dremel's record layout), so aggregate, search, listing, id-hydration,
+    detail and total-stats plans over it reproduce the join-path plans
+    exactly with no query-time join. Readers that answer over live
+    messages apply ``plans.aggregate.live_messages`` to the record, as the
+    join path applies it to ``messages``; the by-id reads do not, because
+    the join path fetches deleted ids too.
 
       - every message column;
       - ``from_rows`` / ``recipient_rows``: the message's 'from' and
@@ -156,19 +161,21 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         join every sender plan makes, so element 1 is the lowest
         participant_id (the join path's min_by survivor). Recipient rows
         keep every row, participant fields NULL when unresolved: the
-        "(no recipient)" drill-down counts raw rows;
+        "(no recipient)" drill-down counts raw rows. They also carry
+        ``recipient_type`` and ``resolved`` (the participant row exists),
+        which tell a phone-only participant's NULL email from an
+        unresolved row's;
       - ``sender_email``, ``sender_domain``, ``sender_display_name``,
         ``sender_phone``: the direct sender (``sender_id``, chat), NULL
         when absent;
       - ``labels``: sorted label names, one per ``message_labels`` row
-        (NULL where the label id has no ``labels`` row);
-      - ``att_size_sum`` / ``att_count_sum``: the attachment pre-agg;
+        (NULL where the label id has no ``labels`` row); ``label_ids``:
+        the rows' sorted label ids;
+      - ``att_size_sum`` / ``att_count_sum`` / ``att_names``: the
+        attachment pre-agg and the sorted file names;
       - ``recipient_emails_lc`` / ``recipient_phones_lc``: the lowered
         '\\n'-joined recipient emails/phones, the to:/cc:/bcc: search
         blobs (search/fast_wide.py)."""
-    from msgvault_spark.plans.aggregate import _attachment_preagg, live_messages
-
-    msg = live_messages(archive["messages"])
     mr = archive["message_recipients"]
     p_ren = archive["participants"].select(
         F.col("id").alias("p_id"),
@@ -177,7 +184,7 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         F.col("display_name").alias("p_display"),
         F.col("phone_number").alias("p_phone"),
     )
-    row = F.struct(
+    row_fields = (
         F.col("participant_id"),
         F.col("p_email").alias("email"),
         F.col("p_domain").alias("domain"),
@@ -186,7 +193,10 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         F.col("display_name").alias("recipient_display_name"),
     )
 
-    def junction_rows(name: str, types: tuple[str, ...], how: str) -> DataFrame:
+    def junction_rows(
+        name: str, types: tuple[str, ...], how: str, *extra: Column
+    ) -> DataFrame:
+        row = F.struct(*row_fields, *extra)
         return (
             mr.filter(F.col("recipient_type").isin(*types))
             .join(
@@ -199,7 +209,13 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         )
 
     from_rows = junction_rows("from_rows", ("from",), "inner")
-    recipient_rows = junction_rows("recipient_rows", ("to", "cc", "bcc"), "left")
+    recipient_rows = junction_rows(
+        "recipient_rows",
+        ("to", "cc", "bcc"),
+        "left",
+        F.col("recipient_type"),
+        F.col("p_id").isNotNull().alias("resolved"),
+    )
     sender = p_ren.select(
         F.col("p_id").alias("s_pid"),
         F.col("p_email").alias("sender_email"),
@@ -224,18 +240,21 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         .agg(
             F.array_sort(F.collect_list(F.struct("lbl_name"))["lbl_name"]).alias(
                 "labels"
-            )
+            ),
+            F.array_sort(F.collect_list("label_id")).alias("label_ids"),
         )
     )
-    # rename pre-agg columns: messages itself has an attachment_count column
-    att = _attachment_preagg(archive["attachments"]).select(
-        F.col("message_id").alias("att_mid"),
-        F.col("attachment_size").alias("att_size_sum"),
-        F.col("attachment_count").alias("att_count_sum"),
+    # att_-prefixed: messages itself has an attachment_count column
+    att = archive["attachments"].groupBy(F.col("message_id").alias("att_mid")).agg(
+        F.sum("size").alias("att_size_sum"),
+        F.count(F.lit(1)).alias("att_count_sum"),
+        F.array_sort(F.collect_list("filename")).alias("att_names"),
     )
 
-    wide = msg.join(sender, F.col("sender_id") == F.col("s_pid"), "left").drop(
-        "s_pid"
+    wide = (
+        archive["messages"]
+        .join(sender, F.col("sender_id") == F.col("s_pid"), "left")
+        .drop("s_pid")
     )
     for name, per_message in (
         ("from_rows", from_rows),
@@ -246,7 +265,7 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
         wide = wide.join(
             per_message, F.col("id") == F.col(f"{name}_mid"), "left"
         ).drop(f"{name}_mid")
-    for name in ("from_rows", "recipient_rows", "labels"):
+    for name in ("from_rows", "recipient_rows", "labels", "label_ids", "att_names"):
         empty = F.array().cast(wide.schema[name].dataType)
         wide = wide.withColumn(name, F.coalesce(F.col(name), empty))
     return (
@@ -275,8 +294,9 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
 # the wide record's columns that are not message columns
 WIDE_EXTRA_COLUMNS = (
     "from_rows", "recipient_rows", "sender_email", "sender_domain",
-    "sender_display_name", "sender_phone", "labels", "att_size_sum",
-    "att_count_sum", "recipient_emails_lc", "recipient_phones_lc",
+    "sender_display_name", "sender_phone", "labels", "label_ids",
+    "att_size_sum", "att_count_sum", "att_names", "recipient_emails_lc",
+    "recipient_phones_lc",
 )
 
 

@@ -95,3 +95,25 @@ def test_footprint_resolves_function_local_imports():
     # imports the streaming stack; a module-granular closure would)
     assert not any(m.startswith("msgvault_spark.streaming") for m in mods)
     assert not any(c.startswith("msgvault_spark.catalog") for c in coarse)
+
+
+def test_ab_tools_diff_against_the_gate_base():
+    """tools/bench_ab.py (and micro_ab.py, which takes its default) A/B
+    the working tree against the base the gate diffs against, and name
+    the artifact one past the newest BENCH_AB_r<N>.json."""
+    gp = _gate_priority()
+    try:
+        base = gp.last_round_rev()
+    except subprocess.CalledProcessError:
+        pytest.skip("not a git checkout")
+    if base is None:
+        pytest.skip("no boundary commit to diff against")
+    import bench_ab
+
+    assert bench_ab.prev_round_rev() == base
+    newest = max(
+        (int(p.stem.split("_r")[-1]) for p in ROOT.glob("BENCH_AB_r*.json")
+         if p.stem.split("_r")[-1].isdigit()),
+        default=0,
+    )
+    assert bench_ab.next_artifact().name == f"BENCH_AB_r{newest + 1}.json"

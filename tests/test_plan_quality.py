@@ -780,7 +780,9 @@ def test_broadcast_sites_are_ratcheted():
         "plans/aggregate.py": 6,
         "plans/filters.py": 3,
         "plans/listing.py": 10,
-        "plans/lookup.py": 5,  # + gmail-ids: rows-per-account sources dim
+        "plans/lookup.py": 4,  # the id page (_with_rank, one site for
+                               # the join-path and wide by-id plans)
+                               # + gmail-ids: rows-per-account sources dim
         "search/fast.py": 7,
         "search/fast_wide.py": 1,
         "search/fts.py": 4,
@@ -865,10 +867,13 @@ def _scanned_tables(plan) -> list[str]:
 
 
 def test_wide_routes_scan_no_junction_tables(spark, monkeypatch):
-    """The aggregate, search and listing routes serve from the wide
-    record: every plan a request runs (collect/count, cached subtrees
-    included) scans no participants, message_recipients or message_labels
-    file — the junction rows ride the record's nested fields. Requests go
+    """The aggregate, search, listing, id-hydration, detail and total
+    routes serve from the wide record: every plan a request runs
+    (collect/count, cached subtrees included) scans no participants,
+    message_recipients or message_labels file — the junction rows ride
+    the record's nested fields. The by-id and total routes scan no
+    attachments or bucketed messages file either: the record carries
+    deleted messages, label ids and attachment names. Requests go
     through the HTTP server, so the pin covers what the routes build."""
     import json
     import urllib.request
@@ -904,20 +909,26 @@ def test_wide_routes_scan_no_junction_tables(spark, monkeypatch):
         f"/api/v1/search/deep?q=high&domain={dom}&label={label}"
         "&sender=customer3%40nation_3.example.com",
     ]
+    record_only = ["/api/v1/messages?ids=7,3,1,999999", "/api/v1/messages/3",
+                   "/api/v1/stats/total"]
     srv = serve(spark, SF_DIR)
     try:
-        for path in paths:
+        for path in paths + record_only:
             scans.clear()
             # a fresh query item: no answer stored by earlier tests
+            sep = "&" if "?" in path else "?"
             with urllib.request.urlopen(
-                f"http://127.0.0.1:{srv.port}{path}&case=wide-plan",
+                f"http://127.0.0.1:{srv.port}{path}{sep}case=wide-plan",
                 timeout=120,
             ) as resp:
                 assert resp.status == 200, path
                 json.loads(resp.read())
             assert scans, f"{path}: no plan ran"
+            banned = junction
+            if path in record_only:
+                banned = junction | {"attachments", "messages"}
             for tables in scans:
-                assert not junction & set(tables), (path, tables)
+                assert not banned & set(tables), (path, tables)
             assert any("wide" in tables for tables in scans), (path, scans)
     finally:
         srv.shutdown()

@@ -1,11 +1,13 @@
 """The wide-record functions answer exactly what the join-path plans answer.
 
-api.aggregate_view / sub_aggregate_view / search_messages / list_view and
-the fts/deep search routes serve from the denormalized wide record
+api.aggregate_view / sub_aggregate_view / search_messages / list_view /
+get_message_summaries / get_messages / get_total_stats and the fts/deep
+search routes serve from the denormalized wide record
 (sources/cache.build_wide_messages). Each case here runs one join-path
 plan (aggregate, sub_aggregate, search_fast, list_messages,
-SearchWithStats over the archive) and its wide twin over the same
-archive and compares the collected rows, in order. Three archives:
+SearchWithStats, get_message_summaries_by_ids, get_messages, total_stats
+over the archive) and its wide twin over the same archive and compares
+the collected rows, in order. Three archives:
 
   * ``archive``: the conftest fixture (chat sender, empty and phone-only
     senders, soft-deleted rows, fan-out recipients);
@@ -20,9 +22,16 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.sql import DataFrame
 
 from msgvault_spark.plans import aggregate as agg
 from msgvault_spark.plans.listing import list_messages
+from msgvault_spark.plans.lookup import (
+    get_message_summaries_by_ids,
+    get_message_summaries_by_ids_wide,
+    get_messages,
+    get_messages_wide,
+)
 from msgvault_spark.plans.models import (
     AggregateOptions,
     MessageFilter,
@@ -62,6 +71,8 @@ _FIXTURE_VALUES = {
     "smaller": "250",
     "after": "2024-01-20",
     "before": "2024-03-01",
+    # no message 99, but a dangling attachment row points at it
+    "unknown_id": 99,
 }
 
 
@@ -96,6 +107,7 @@ def _sf_values(arch) -> dict:
         "smaller": "20K",
         "after": "1997-06-01",
         "before": "1998-01-01",
+        "unknown_id": -1,
     }
 
 
@@ -282,3 +294,80 @@ def test_search_with_stats_matches_join_path(spark, pair):
         finally:
             join.release()
             wide_s.release()
+
+
+def _id_page(arch, v) -> list[int]:
+    """Known ids (soft-deleted ones and a planted multi-'from' message
+    among them when the archive has them) plus one unknown id."""
+    from pyspark.sql import functions as F
+
+    msg = arch["messages"]
+    ids = {r["id"] for r in msg.orderBy("id").limit(6).collect()}
+    ids |= {r["id"] for r in msg.filter(F.col("id") % 50 == 0).limit(1).collect()}
+    if "deleted_at" in msg.columns:
+        ids |= {
+            r["id"] for r in msg.filter(F.col("deleted_at").isNotNull()).collect()
+        }
+    return sorted(ids) + [v["unknown_id"]]
+
+
+@pytest.fixture(scope="module")
+def edge_pair(pair, spark):
+    """``pair`` with detail's edge rows added: a recipient row whose
+    participant does not exist, a recipient whose participant has a NULL
+    email (phone only), a label id with no labels row and an attachment
+    with a NULL file name."""
+    from msgvault_spark.sources.loader import ARCHIVE_SCHEMAS
+
+    arch, _, v, n = pair
+    first, second = _id_page(arch, v)[:2]
+    pid = arch["participants"].agg({"id": "max"}).first()[0] + 1000
+
+    def plus(name: str, rows: list[tuple]) -> DataFrame:
+        extra = spark.createDataFrame(rows, ARCHIVE_SCHEMAS[name])
+        return arch[name].unionByName(extra.select(*arch[name].columns))
+
+    edged = dict(arch)
+    edged["participants"] = plus("participants", [(pid, None, None, None, "+3777")])
+    edged["message_recipients"] = plus(
+        "message_recipients",
+        [(first, pid + 1, "bcc", "Nobody"), (second, pid, "to", "")],
+    )
+    edged["message_labels"] = plus("message_labels", [(first, 7777)])
+    edged["attachments"] = plus(
+        "attachments", [(second, 3, None, 990001, None, None)]
+    )
+    edged = {name: df.localCheckpoint() for name, df in edged.items()}
+    wide = build_wide_messages(edged).persist()
+    yield edged, wide, v, n
+    wide.unpersist()
+
+
+def test_id_hydration_matches_join_path(spark, pair):
+    arch, wide, v, _ = pair
+    page = _id_page(arch, v)
+    for ids in (page[::-1], page[1::2] + page[0::2]):
+        join = get_message_summaries_by_ids(arch, ids)
+        _same(join, get_message_summaries_by_ids_wide(wide, ids), ids)
+        got = [r["id"] for r in join.collect()]
+        # soft-deleted ids are fetched, the unknown id dropped
+        assert got == [i for i in ids if i != v["unknown_id"]], ids
+
+
+def test_detail_matches_join_path(spark, edge_pair):
+    arch, wide, v, _ = edge_pair
+    page = _id_page(arch, v)
+    ids = page[1::2] + page[0::2]
+    join = get_messages(arch, ids)
+    _same(join, get_messages_wide(wide, ids), ids)
+    rows = {r["rank"]: r for r in join.collect()}
+    first, second = rows[ids.index(page[0]) + 1], rows[ids.index(page[1]) + 1]
+    # the unresolved bcc row is dropped, the phone-only 'to' row kept
+    assert "bcc" not in first["recipients"].split(",")
+    assert "to" in second["recipients"].split(",")
+    assert second["attachment_count"] >= 1
+
+
+def test_total_stats_match_join_path(spark, pair, edge_pair):
+    for arch, wide, *_ in (pair, edge_pair):
+        _same(agg.total_stats(arch), agg.total_stats_wide(wide), "total")

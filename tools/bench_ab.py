@@ -7,13 +7,16 @@ range ±30-100% on identical code — see BENCH_AB_r6.json). Solo numbers
 cannot attribute a cross-round delta; interleaving can, because both
 trees sample the same noise distribution within minutes of each other.
 
-Protocol: N_ITER alternating pairs (HEAD run, PREV run); PREV is checked
-out with `git worktree` at its own bench.py, each run is a fresh
-subprocess/SparkSession; per-query and total best-of across iterations.
+Protocol: N_ITER alternating pairs (HEAD run, PREV run); PREV is a plain
+copy of its tree (``git archive``) running its own bench.py, each run is
+a fresh subprocess/SparkSession; per-query and total best-of across
+iterations. PREV defaults to the last clean boundary commit, the base
+``tools/gate_priority.py`` diffs against.
 
-Writes BENCH_AB_r<N>.json next to the repo root; bench.py embeds the
-newest such artifact in its own JSON line so BENCH_r<N>.json carries
-both solo and A/B numbers (the r6 verdict's bench-hygiene ask #9).
+Writes BENCH_AB_r<N>.json next to the repo root, N one past the highest
+existing artifact; bench.py embeds the newest such artifact in its own
+JSON line so BENCH_r<N>.json carries both solo and A/B numbers (the r6
+verdict's bench-hygiene ask #9).
 
 Usage: python tools/bench_ab.py [--iters 2] [--prev REV]
 """
@@ -23,12 +26,15 @@ from __future__ import annotations
 import json
 import pathlib
 import re
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
+from gate_priority import last_round_rev
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-WORKTREE = pathlib.Path("/tmp/bench_ab_prev")
 
 
 def _git(*args: str, cwd=ROOT) -> str:
@@ -37,16 +43,33 @@ def _git(*args: str, cwd=ROOT) -> str:
     ).stdout
 
 
-def prev_round_rev() -> tuple[str, int]:
-    """(commit, round_number) of the newest round-snapshot commit."""
-    out = _git(
-        "log", "--grep", "^round [0-9]*:", "-n", "1", "--format=%H %s"
-    ).strip()
-    if not out:
-        raise SystemExit("no round-snapshot commit found; pass --prev")
-    sha, subject = out.split(" ", 1)
-    n = int(re.match(r"round (\d+):", subject).group(1))
-    return sha, n
+def prev_round_rev() -> str:
+    """The previous tree: the last clean boundary commit
+    (``gate_priority.last_round_rev``'s rule)."""
+    rev = last_round_rev()
+    if rev is None:
+        raise SystemExit("no boundary commit found; pass --prev")
+    return rev
+
+
+def next_artifact() -> pathlib.Path:
+    """``BENCH_AB_r<N>.json``, one past the highest existing N."""
+    ns = [
+        int(m.group(1))
+        for f in ROOT.glob("BENCH_AB_r*.json")
+        if (m := re.search(r"_r(\d+)\.json$", f.name))
+    ]
+    return ROOT / f"BENCH_AB_r{max(ns, default=0) + 1}.json"
+
+
+def export_tree(rev: str) -> pathlib.Path:
+    """A plain copy of ``rev``'s files in a new temporary directory."""
+    dest = pathlib.Path(tempfile.mkdtemp(prefix="ab_prev_"))
+    tar = subprocess.run(
+        ["git", "archive", rev], cwd=ROOT, capture_output=True, check=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", str(dest)], input=tar, check=True)
+    return dest
 
 
 def run_bench(tree: pathlib.Path) -> dict:
@@ -78,44 +101,19 @@ def main() -> int:
     if "--prev" in args:
         prev = args[args.index("--prev") + 1]
     if prev is None:
-        prev, prev_round = prev_round_rev()
-    else:
-        prev_round = -1
-    if prev_round > 0:
-        this_round = prev_round + 1
-    else:
-        # explicit --prev: derive from the newest committed A/B artifact
-        import re as _re
-
-        ns = [
-            int(m.group(1))
-            for f in ROOT.glob("BENCH_AB_r*.json")
-            if (m := _re.search(r"_r(\d+)\.json$", f.name))
-        ]
-        this_round = max(ns, default=0) + 1 if ns else 0
+        prev = prev_round_rev()
 
     head = _git("rev-parse", "--short", "HEAD").strip()
-    if WORKTREE.exists():
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(WORKTREE)],
-            cwd=ROOT,
-            capture_output=True,
-        )
-    _git("worktree", "add", "--detach", str(WORKTREE), prev)
-
+    prev_tree = export_tree(prev)
     try:
         head_runs, prev_runs = [], []
         for i in range(iters):
             print(f"iter {i}: HEAD ...", file=sys.stderr)
             head_runs.append(run_bench(ROOT))
             print(f"iter {i}: prev ...", file=sys.stderr)
-            prev_runs.append(run_bench(WORKTREE))
+            prev_runs.append(run_bench(prev_tree))
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(WORKTREE)],
-            cwd=ROOT,
-            capture_output=True,
-        )
+        shutil.rmtree(prev_tree, ignore_errors=True)
 
     def best_per_query(runs: list[dict], key: str) -> dict[str, float]:
         out: dict[str, float] = {}
@@ -130,7 +128,7 @@ def main() -> int:
         "protocol": (
             f"interleaved A/B on one box: {iters} alternating bench.py "
             f"runs of HEAD ({head}) and the previous round tree "
-            f"({prev[:12]} via git worktree); per-query best across "
+            f"({prev[:12]}, a git archive copy); per-query best across "
             "runs. Solo numbers drift +/-30% on this box from "
             "hypervisor contention; only interleaved deltas are "
             "attributable to code."
@@ -157,7 +155,7 @@ def main() -> int:
             q: {"head": hb[q], "prev": pb.get(q)} for q in sorted(hb)
         },
     }
-    out_path = ROOT / f"BENCH_AB_r{this_round}.json"
+    out_path = next_artifact()
     out_path.write_text(json.dumps(artifact, indent=1))
     print(json.dumps({
         "wrote": str(out_path),

@@ -9,6 +9,7 @@ once, then takes best-of-K timed collects. Many more A/B pairs per minute
 cannot separate a 30% delta from this box's ±30% ambient drift.
 
 Usage: python tools/micro_ab.py <entry> [--prev REV] [--pairs 6] [--k 8]
+(REV defaults to bench_ab.py's base, the last clean boundary commit.)
 """
 
 from __future__ import annotations
@@ -16,12 +17,14 @@ from __future__ import annotations
 import argparse
 import json
 import pathlib
+import shutil
 import statistics
 import subprocess
 import sys
 
+from bench_ab import export_tree, prev_round_rev
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-WORKTREE = pathlib.Path("/tmp/micro_ab_prev")
 
 RUNNER = r"""
 import json, os, sys, time
@@ -42,12 +45,6 @@ for _ in range(k):
     best = min(best, time.perf_counter() - t0)
 print(json.dumps({"best": best}))
 """
-
-
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=ROOT, capture_output=True, text=True, check=True
-    ).stdout
 
 
 def run_one(tree: pathlib.Path, entry: str, k: int) -> float:
@@ -75,40 +72,14 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=8)
     args = ap.parse_args()
 
-    prev = args.prev
-    if prev is None:
-        # the most recent round commit that is NOT HEAD itself — right
-        # after a round boundary HEAD *is* the newest round commit, and
-        # A/B-ing HEAD against HEAD reports a meaningless ~zero delta
-        head = _git("rev-parse", "HEAD").strip()
-        revs = [
-            r
-            for r in _git(
-                "log", "--grep", "^round [0-9]*:", "--format=%H"
-            ).splitlines()
-            if r != head
-        ]
-        if not revs:
-            raise SystemExit("no prior round commit found; pass --prev")
-        prev = revs[0]
-    if WORKTREE.exists():
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(WORKTREE)],
-            cwd=ROOT,
-            capture_output=True,
-        )
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", str(WORKTREE), prev],
-        cwd=ROOT,
-        check=True,
-        capture_output=True,
-    )
+    prev = args.prev or prev_round_rev()
+    prev_tree = export_tree(prev)
     try:
         for entry in args.entries:
             head_times, prev_times = [], []
             for i in range(args.pairs):
                 head_times.append(run_one(ROOT, entry, args.k))
-                prev_times.append(run_one(WORKTREE, entry, args.k))
+                prev_times.append(run_one(prev_tree, entry, args.k))
                 print(
                     f"pair {i}: head={head_times[-1]:.3f} "
                     f"prev={prev_times[-1]:.3f}",
@@ -126,11 +97,7 @@ def main() -> None:
             }
             print(json.dumps(result))
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(WORKTREE)],
-            cwd=ROOT,
-            capture_output=True,
-        )
+        shutil.rmtree(prev_tree, ignore_errors=True)
 
 
 if __name__ == "__main__":
