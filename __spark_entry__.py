@@ -24,6 +24,18 @@ from msgvault_spark.catalog import CATALOG
 _PRIORITY = [
     # Narrow changes since the last clean boundary (tools/gate_priority.py
     # marks them; each must hold a window slot):
+    # plans/lookup.py (_with_rank's literal id page: the two by-id
+    # entries first; its module docstring touches every lookup entry)
+    # and catalog_lookup's docstrings
+    "hydrate_search_hits",
+    "get_messages_by_ids",
+    "hybrid_rrf_hydrated",
+    "list_accounts",
+    "get_messages_raw_batch",
+    "get_message_by_source_id",
+    "get_attachments_batch",
+    "gmail_ids_by_filter",
+    "summary_stats",
     # plans/aggregate.py (total_stats_wide), plans/lookup.py (the wide
     # by-id plans) and search/fast_wide.py (search_sender): the aggregate
     # and wide-record entries
@@ -48,16 +60,6 @@ _PRIORITY = [
     "agg_senders_wide_multifrom",
     "agg_senders_join_multifrom",
     "agg_senders_with_search",
-    # catalog_lookup's docstrings and plans/lookup.py (every lookup entry)
-    "hydrate_search_hits",
-    "get_messages_by_ids",
-    "hybrid_rrf_hydrated",
-    "list_accounts",
-    "get_messages_raw_batch",
-    "get_message_by_source_id",
-    "get_attachments_batch",
-    "gmail_ids_by_filter",
-    "summary_stats",
     # catalog_streaming's memo opt-outs and streaming/incremental's pool
     # clear (every stream entry)
     "stream_rollup_daily",

@@ -11,11 +11,13 @@ Reference surface (internal/query/engine.go:26-43, 77-78):
 
 Spark-first shape: the id list becomes (a) a pushed-down ``IN`` predicate
 on the message scan — Catalyst turns it into parquet row-group pruning, and
-a sorted/bucketed lake prunes most files — and (b) a tiny broadcast
-``(id, rank)`` frame joined back to restore the caller's ranking (the
-reference preserves order via ORDER BY array_position(ids, id); the rank
-column is the engine-portable spelling). ms-latency single-id serving stays
-a non-goal (SURVEY §7): the batch shape amortizes one pruned scan over a
+a sorted/bucketed lake prunes most files — and (b) one array literal of the
+page, from which each surviving row reads its 1-based positions as
+``rank`` (the reference preserves order via ORDER BY array_position(ids,
+id); the rank column is the engine-portable spelling). The page never
+leaves the JVM: no frame built from Python data, so no Python worker and
+no broadcast job per request. ms-latency single-id serving stays a
+non-goal (SURVEY §7): the batch shape amortizes one pruned scan over a
 whole page of ids, which is what the search handlers need.
 """
 
@@ -30,12 +32,18 @@ from msgvault_spark.search.fast import _sender_resolution
 
 
 def _with_rank(df: DataFrame, ids: list[int]) -> DataFrame:
-    """``df`` joined to the caller's ``(id, rank)`` page: one bounded
-    broadcast (the id page), no match for an absent id."""
-    ranks = df.sparkSession.createDataFrame(
-        [(int(i), r + 1) for r, i in enumerate(ids)], "id long, rank int"
+    """``df`` with ``rank``, every 1-based position of its ``id`` in the
+    caller's page: one row per occurrence of a duplicated id, none for an
+    id absent from the page. The page enters the plan as one string
+    literal cast to ``array<bigint>``, which constant folding turns into
+    one array literal — no join, no broadcast, no Python data."""
+    page = F.split(F.lit(",".join(str(int(i)) for i in ids)), ",").cast(
+        "array<bigint>"
     )
-    return df.join(F.broadcast(ranks), "id")
+    # the lambda index is an int, so rank keeps the page's ``rank int``
+    hits = F.transform(page, lambda x, i: F.when(x == F.col("id"), i + 1))
+    rank = F.explode(F.filter(hits, lambda r: r.isNotNull()))
+    return df.select("*", rank.alias("rank"))
 
 
 def _summary_columns() -> list:
@@ -101,9 +109,8 @@ def get_message_summaries_by_ids(
 def get_message_summaries_by_ids_wide(wide: DataFrame, ids: list[int]) -> DataFrame:
     """``get_message_summaries_by_ids`` over the wide record
     (sources/cache.build_wide_messages): an id filter on one scan, the
-    sender resolved from the record's own rows, no join but the rank
-    page's broadcast. Soft-deleted ids are returned, as the join path
-    returns them."""
+    sender resolved from the record's own rows, no join. Soft-deleted ids
+    are returned, as the join path returns them."""
     from msgvault_spark.search.fast_wide import search_sender
 
     if not ids:

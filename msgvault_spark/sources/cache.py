@@ -303,13 +303,13 @@ WIDE_EXTRA_COLUMNS = (
 @_locked
 def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized wide view: lake twin + LAZY persist. The wide view is the
-    hottest serving table (nine headline entries scan it, several with
-    scan-only plans that cannot reuse shuffle outputs across collects), so
-    it keeps an in-memory copy — but materialization is lazy: the r10
-    eager count() charged every session ~3s at sf1 up front; now the first
-    wide consumer materializes it as a side effect and the other eight
-    read memory (measured sf1 serving-cold: 9 entries × ~1s of re-scans
-    → one ~2s build + 8 × ~0.15s)."""
+    hottest serving table (the aggregate, search, listing, by-id, detail
+    and total routes all scan it, with scan-only plans that cannot reuse
+    shuffle outputs across collects), so it keeps an in-memory copy of
+    every column. Nothing materializes it up front: the first reader
+    builds the full copy as a side effect, however few columns it reads,
+    and every later reader scans memory. When serving, that first reader
+    is the setup ``total`` request."""
     from msgvault_spark.sources import artifact_store
 
     key = _key(spark, sf_dir)

@@ -1,0 +1,114 @@
+"""The by-id plans rank by every position of an id in the caller's page.
+
+``plans/lookup._with_rank`` gives each row the 1-based positions of its id
+in the page: a duplicated id comes back once per occurrence, an absent id
+not at all. Each case runs the join-path and wide-record summary and
+detail plans over the sf0.001 archive and compares their ``(rank, id)``
+rows with a pure-Python expectation. The plan case pins the page's form:
+one folded ``array<bigint>`` literal in the optimized plan, never a frame
+built from Python data (a Python-worker scan per request) nor one
+literal per id.
+"""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+
+from msgvault_spark.plans.lookup import (
+    get_message_summaries_by_ids,
+    get_message_summaries_by_ids_wide,
+    get_messages,
+    get_messages_wide,
+)
+
+SF0001 = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def by_id(spark):
+    """(the four by-id plan builders over one archive, its sorted ids)."""
+    from msgvault_spark.sources.cache import build_wide_messages, get_archive
+
+    arch = get_archive(spark, SF0001)
+    wide = build_wide_messages(arch).persist()
+    known = sorted(r["id"] for r in arch["messages"].select("id").collect())
+    plans = {
+        "summaries": lambda ids: get_message_summaries_by_ids(arch, ids),
+        "summaries_wide": lambda ids: get_message_summaries_by_ids_wide(
+            wide, ids
+        ),
+        "detail": lambda ids: get_messages(arch, ids),
+        "detail_wide": lambda ids: get_messages_wide(wide, ids),
+    }
+    yield plans, known
+    wide.unpersist()
+
+
+def _pages(known: list[int]) -> dict[str, list[int]]:
+    absent = known[-1] + 1
+    a, b, c = known[3], known[len(known) // 2], known[-1]
+    rng = random.Random(5000)
+    return {
+        "duplicates": [b, a, b, c, a, b],
+        "absent": [a, absent, c, -absent],
+        "reversed": known[:40][::-1],
+        "5000": [rng.choice(known + [absent]) for _ in range(5000)],
+    }
+
+
+def _expected(ids: list[int], known: list[int]) -> list[tuple[int, int]]:
+    have = set(known)
+    return [(rank, i) for rank, i in enumerate(ids, 1) if i in have]
+
+
+@pytest.mark.parametrize(
+    "plan", ["summaries", "summaries_wide", "detail", "detail_wide"]
+)
+def test_rank_is_every_position_in_the_page(by_id, plan):
+    plans, known = by_id
+    for case, ids in _pages(known).items():
+        if case == "5000":
+            assert len(set(ids)) < len(ids) and known[-1] + 1 in ids
+        got = [(r["rank"], r["id"]) for r in plans[plan](ids).collect()]
+        assert got == _expected(ids, known), (plan, case)
+
+
+def _nodes_and_expressions(plan):
+    """Every node of a JVM logical plan and every expression in it."""
+    nodes, exprs, todo = [], [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        pending = [node.expressions().apply(i)
+                   for i in range(node.expressions().size())]
+        while pending:
+            e = pending.pop()
+            exprs.append(e)
+            pending += [e.children().apply(i) for i in range(e.children().size())]
+        todo += [node.children().apply(i) for i in range(node.children().size())]
+    return nodes, exprs
+
+
+@pytest.mark.parametrize(
+    "plan", ["summaries", "summaries_wide", "detail", "detail_wide"]
+)
+def test_page_is_one_array_literal(by_id, plan):
+    plans, known = by_id
+    ids = _pages(known)["5000"]
+    optimized = plans[plan](ids)._jdf.queryExecution().optimizedPlan()
+    nodes, exprs = _nodes_and_expressions(optimized)
+    kinds = {n.getClass().getSimpleName() for n in nodes}
+    assert not {k for k in kinds if "RDD" in k}, kinds
+    assert not [
+        e for e in exprs if e.getClass().getSimpleName() == "CreateArray"
+    ]
+    pages = [
+        e
+        for e in exprs
+        if e.getClass().getSimpleName() == "Literal"
+        and e.dataType().simpleString() == "array<bigint>"
+    ]
+    assert len(pages) == 1, [p.toString()[:80] for p in pages]
+    assert pages[0].value().numElements() == len(ids)

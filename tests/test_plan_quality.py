@@ -780,9 +780,9 @@ def test_broadcast_sites_are_ratcheted():
         "plans/aggregate.py": 6,
         "plans/filters.py": 3,
         "plans/listing.py": 10,
-        "plans/lookup.py": 4,  # the id page (_with_rank, one site for
-                               # the join-path and wide by-id plans)
-                               # + gmail-ids: rows-per-account sources dim
+        "plans/lookup.py": 3,  # join-path detail: participants and
+                               # labels dims + gmail-ids: rows-per-account
+                               # sources dim (the id page is a literal)
         "search/fast.py": 7,
         "search/fast_wide.py": 1,
         "search/fts.py": 4,
@@ -844,18 +844,15 @@ def test_offset_pagination_is_take_ordered_not_window(spark, catalog):
         assert "Window" not in pre, f"{name}: global window in plan"
 
 
-def _scanned_tables(plan) -> list[str]:
-    """Directory names of every file scan in a JVM physical plan, cached
-    relations' build plans and adaptive initial plans included (read from
-    the scan nodes, not the plan text, whose Location is abbreviated)."""
+def _plan_nodes(plan) -> list:
+    """Every node of a JVM physical plan, cached relations' build plans,
+    adaptive initial plans and reused exchanges' children included."""
     out, todo = [], [plan]
     while todo:
         node = todo.pop()
+        out.append(node)
         kind = node.getClass().getSimpleName()
-        if kind == "FileSourceScanExec":
-            paths = node.relation().location().rootPaths()
-            out += [paths.apply(i).getName() for i in range(paths.size())]
-        elif kind == "InMemoryTableScanExec":
+        if kind == "InMemoryTableScanExec":
             todo.append(node.relation().cachedPlan())
         elif kind == "AdaptiveSparkPlanExec":
             todo.append(node.inputPlan())
@@ -864,6 +861,72 @@ def _scanned_tables(plan) -> list[str]:
         children = node.children()
         todo += [children.apply(i) for i in range(children.size())]
     return out
+
+
+def _scanned_tables(plan) -> list[str]:
+    """Directory names of every file scan in a JVM physical plan (read
+    from the scan nodes, not the plan text, whose Location is
+    abbreviated)."""
+    out = []
+    for node in _plan_nodes(plan):
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths()
+            out += [paths.apply(i).getName() for i in range(paths.size())]
+    return out
+
+
+def _spy_plans(spark, monkeypatch, read) -> list:
+    """Record ``read(executedPlan)`` for every frame a request collects or
+    counts; returns the list the spies append to."""
+    frame_cls = type(spark.range(1))
+    seen: list = []
+    for action in ("collect", "count"):
+        original = getattr(frame_cls, action)
+
+        def spy(self, *a, _original=original, **kw):
+            seen.append(read(self._jdf.queryExecution().executedPlan()))
+            return _original(self, *a, **kw)
+
+        monkeypatch.setattr(frame_cls, action, spy)
+    return seen
+
+
+_DOM, _LABEL = "nation_3.example.com", "1-URGENT"
+# the routes the wide record serves
+_WIDE_ROUTES = [
+    f"/api/v1/aggregates?view={view}&limit=5"
+    for view in ("senders", "sender_names", "recipients",
+                 "recipient_names", "domains", "labels", "time")
+] + [
+    f"/api/v1/aggregates/sub?view=senders&domain={_DOM}&label={_LABEL}"
+    "&sender=customer3%40nation_3.example.com&time_period=1996",
+    "/api/v1/search/fast?q=from:customer3%40+to:supplier1+label:urgent"
+    "+high&limit=5",
+    f"/api/v1/messages/filter?domain={_DOM}&label={_LABEL}&offset=2"
+    "&limit=5&time_period=1996&sender=customer3%40nation_3.example.com",
+    "/api/v1/search?q=high+from:customer&page=2&page_size=5",
+    f"/api/v1/search/deep?q=high&domain={_DOM}&label={_LABEL}"
+    "&sender=customer3%40nation_3.example.com",
+]
+# ... of which these read no archive table at all
+_RECORD_ONLY = ["/api/v1/messages?ids=7,3,1,999999", "/api/v1/messages/3",
+                "/api/v1/stats/total"]
+
+
+def _request(srv, path: str, case: str, body: dict | None = None) -> None:
+    """One request with the query item ``case`` (no answer stored by
+    earlier tests); asserts a 200 JSON answer."""
+    import json
+    import urllib.request
+
+    sep = "&" if "?" in path else "?"
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{srv.port}{path}{sep}case={case}",
+        data=None if body is None else json.dumps(body).encode(),
+    )
+    with urllib.request.urlopen(req, timeout=120) as resp:
+        assert resp.status == 200, path
+        json.loads(resp.read())
 
 
 def test_wide_routes_scan_no_junction_tables(spark, monkeypatch):
@@ -875,60 +938,67 @@ def test_wide_routes_scan_no_junction_tables(spark, monkeypatch):
     attachments or bucketed messages file either: the record carries
     deleted messages, label ids and attachment names. Requests go
     through the HTTP server, so the pin covers what the routes build."""
-    import json
-    import urllib.request
-
     from msgvault_spark.server import serve
 
-    frame_cls = type(spark.range(1))
-    scans: list[list[str]] = []
-    for action in ("collect", "count"):
-        original = getattr(frame_cls, action)
-
-        def spy(self, *a, _original=original, **kw):
-            scans.append(
-                _scanned_tables(self._jdf.queryExecution().executedPlan())
-            )
-            return _original(self, *a, **kw)
-
-        monkeypatch.setattr(frame_cls, action, spy)
+    scans = _spy_plans(spark, monkeypatch, _scanned_tables)
     junction = {"participants", "message_recipients", "message_labels"}
-    dom, label = "nation_3.example.com", "1-URGENT"
-    paths = [
-        f"/api/v1/aggregates?view={view}&limit=5"
-        for view in ("senders", "sender_names", "recipients",
-                     "recipient_names", "domains", "labels", "time")
-    ] + [
-        f"/api/v1/aggregates/sub?view=senders&domain={dom}&label={label}"
-        "&sender=customer3%40nation_3.example.com&time_period=1996",
-        "/api/v1/search/fast?q=from:customer3%40+to:supplier1+label:urgent"
-        "+high&limit=5",
-        f"/api/v1/messages/filter?domain={dom}&label={label}&offset=2"
-        "&limit=5&time_period=1996&sender=customer3%40nation_3.example.com",
-        "/api/v1/search?q=high+from:customer&page=2&page_size=5",
-        f"/api/v1/search/deep?q=high&domain={dom}&label={label}"
-        "&sender=customer3%40nation_3.example.com",
-    ]
-    record_only = ["/api/v1/messages?ids=7,3,1,999999", "/api/v1/messages/3",
-                   "/api/v1/stats/total"]
     srv = serve(spark, SF_DIR)
     try:
-        for path in paths + record_only:
+        for path in _WIDE_ROUTES + _RECORD_ONLY:
             scans.clear()
-            # a fresh query item: no answer stored by earlier tests
-            sep = "&" if "?" in path else "?"
-            with urllib.request.urlopen(
-                f"http://127.0.0.1:{srv.port}{path}{sep}case=wide-plan",
-                timeout=120,
-            ) as resp:
-                assert resp.status == 200, path
-                json.loads(resp.read())
+            _request(srv, path, "wide-plan")
             assert scans, f"{path}: no plan ran"
             banned = junction
-            if path in record_only:
+            if path in _RECORD_ONLY:
                 banned = junction | {"attachments", "messages"}
             for tables in scans:
                 assert not banned & set(tables), (path, tables)
             assert any("wide" in tables for tables in scans), (path, scans)
     finally:
         srv.shutdown()
+
+
+def test_json_routes_run_no_python(spark, monkeypatch):
+    """No JSON route runs Python in an executor: every plan a request runs
+    (collect/count, cached subtrees included) holds no scan of a frame
+    built from driver-side Python data (``RDDScanExec``) and no Python
+    UDF or pandas/Arrow map node, each of which forks ``pyspark.daemon``
+    workers and pays a Python round trip per request. Covers every JSON
+    GET route family and ``POST /api/v1/query``. The one exclusion is
+    ``/api/v1/messages/{id}/inline``, whose zlib MIME decode is a pandas
+    UDF by design and answers image bytes, not JSON."""
+    from msgvault_spark.server import serve
+
+    def python_nodes(plan) -> list[str]:
+        kinds = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
+        return [
+            k
+            for k in kinds
+            if k in ("RDDScanExec", "BatchEvalPythonExec",
+                     "ArrowEvalPythonExec")
+            or "InPandas" in k
+            or "InArrow" in k
+        ]
+
+    found = _spy_plans(spark, monkeypatch, python_nodes)
+    paths = _WIDE_ROUTES + _RECORD_ONLY + [
+        "/api/v1/stats",
+        "/api/v1/accounts",
+        "/api/v1/search?q=high+urgent&mode=vector&page_size=5",
+        "/api/v1/search?q=high+urgent&mode=hybrid&page_size=5",
+    ]
+    bad = {}
+    srv = serve(spark, SF_DIR)
+    try:
+        for path, body in [(p, None) for p in paths] + [
+            ("/api/v1/query",
+             {"sql": "SELECT COUNT(*) AS n FROM v_messages"}),
+        ]:
+            found.clear()
+            _request(srv, path, "no-python", body)
+            assert found, f"{path}: no plan ran"
+            if any(found):
+                bad[path] = sorted({k for kinds in found for k in kinds})
+    finally:
+        srv.shutdown()
+    assert not bad, bad
