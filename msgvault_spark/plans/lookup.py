@@ -40,7 +40,7 @@ def _with_rank(df: DataFrame, ids: list[int]) -> DataFrame:
     page = F.split(F.lit(",".join(str(int(i)) for i in ids)), ",").cast(
         "array<bigint>"
     )
-    # the lambda index is an int, so rank keeps the page's ``rank int``
+    # the lambda index is an int, so ``rank`` is an int column
     hits = F.transform(page, lambda x, i: F.when(x == F.col("id"), i + 1))
     rank = F.explode(F.filter(hits, lambda r: r.isNotNull()))
     return df.select("*", rank.alias("rank"))
