@@ -908,7 +908,7 @@ _WIDE_ROUTES = [
     f"/api/v1/search/deep?q=high&domain={_DOM}&label={_LABEL}"
     "&sender=customer3%40nation_3.example.com",
 ]
-# ... of which these read no archive table at all
+# record routes that read no archive table at all, messages included
 _RECORD_ONLY = ["/api/v1/messages?ids=7,3,1,999999", "/api/v1/messages/3",
                 "/api/v1/stats/total"]
 
