@@ -76,12 +76,17 @@ _PRIORITY = [
     "bigram_backoff_quality",
     "doremi_weight_update",
     "pmi_collocations",
+    # the PQ, IVF-PQ and SemDeDup index getters moved to the one session
+    # memo (sources/cache.memo)
+    "pq_knn_seed0",
+    "pq_recall_report",
+    "ivfpq_knn_seed0",
+    "ivfpq_recall_report",
+    "semantic_dedup_cells",
     # --- broad changes (catalog.py, sources/cache.py, artifact_store.py)
     # touch every entry, so the remaining slots keep the previous window's
     # order
     "embed_pipeline_vectors",
-    "ivfpq_knn_seed0",
-    "ivfpq_recall_report",
     "search_fast_operators",
     "search_text_terms",
     "search_relative_dates",
@@ -156,7 +161,6 @@ _PRIORITY = [
     "dedup_line_segments",
     "minhash_incremental_pairs",
     "unigram_quality_docs",
-    "semantic_dedup_cells",
     "cross_source_dup_report",
     "kmv_source_overlap",
     "embedding_near_dups_lsh",
@@ -190,7 +194,6 @@ _PRIORITY = [
     "ann_ivf_seed0",
     "hybrid_rrf_filtered",
     "bm25_prefix_documents",
-    "pq_knn_seed0",
     "phrase_search_docs",
     "asof_events_orders",
     "quantized_knn_seed0",
@@ -201,7 +204,6 @@ _PRIORITY = [
     "ann_recall_report",
     "ivf_recall_report",
     "sq8_recall_report",
-    "pq_recall_report",
     "token_budget_mix_plan",
     "ivf_probe_sweep",
     "dsir_importance_select",

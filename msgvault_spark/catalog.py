@@ -16,7 +16,6 @@ Determinism rules (the driver hash-compares values):
 
 from __future__ import annotations
 
-import sys
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -101,28 +100,17 @@ def is_memory_pressure_error(exc: BaseException) -> bool:
 def clear_session_caches(spark: SparkSession) -> int:
     """Memory-pressure recovery LEVEL 2 — cold-restart-without-process-
     restart. A marathon session's residual heap is the long-lived serving
-    caches: the persisted archive/wide/table/index/artifact memos plus
-    per-catalog-module index memos (PQ codes, SemDeDup cells, IVF-PQ).
-    Drop them ALL — every getter rebuilds lazily from the artifact lake
-    on next use — sweep any remaining cached relation, and ask the JVM
-    for a full GC so the freed blocks are actually available to the next
-    broadcast build. Returns cache entries dropped."""
+    caches: every frame-holding entry of the one session memo
+    (sources/cache.py: archive, wide view, tables, FTS indexes, lake
+    artifacts, the PQ / IVF-PQ / SemDeDup indexes). Drop them ALL — each
+    rebuilds lazily on next use, from the artifact lake where it has a
+    lake copy — sweep any
+    remaining cached relation, and ask the JVM for a full GC so the freed
+    blocks are actually available to the next broadcast build. Returns
+    cache entries dropped."""
     from msgvault_spark.sources import cache as srccache
 
     dropped = srccache.clear_serving_caches()
-    # per-module index memos living outside sources/cache.py
-    for modname, dictname in (
-        ("msgvault_spark.catalog_search", "_PQ_MEMO"),
-        ("msgvault_spark.catalog_dedup", "_SEMDEDUP_IDX_MEMO"),
-        ("msgvault_spark.catalog_ann", "_IVFPQ_MEMO"),
-    ):
-        mod = sys.modules.get(modname)
-        memo = getattr(mod, dictname, None) if mod else None
-        if memo:
-            for v in memo.values():
-                srccache._unpersist_tree(v)
-            dropped += len(memo)
-            memo.clear()
     # streaming one-shot pools: memory-sink views (driver-held rows) and
     # the footer-probe memo — both rebuild lazily
     try:

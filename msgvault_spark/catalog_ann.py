@@ -21,18 +21,15 @@ from msgvault_spark.similarity.ivfpq import (
 from msgvault_spark.similarity.pq import collect_codebooks
 from msgvault_spark.sources.loader import load_table
 
-_IVFPQ_MEMO: dict[tuple, object] = {}
-
 
 def get_ivfpq_index(spark: SparkSession, sf_dir: str):
     """Memoized IVF-PQ ETL artifacts: (codebooks, lake-persisted
     (cell, id, codes) table) — the one stored table of the composed
     index, written through the artifact store so serving sessions scan
     it (bucketed by cell at lake scale)."""
-    from msgvault_spark.sources.cache import get_artifact
+    from msgvault_spark.sources.cache import get_artifact, memo
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_MEMO:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         books = collect_codebooks(emb, m=4, n_codes=16)
         index = get_artifact(
@@ -40,8 +37,9 @@ def get_ivfpq_index(spark: SparkSession, sf_dir: str):
             (sf_dir, "ivfpq_index", 8, 4, 16),
             lambda: build_ivfpq_index(emb, books, n_cells=8).coalesce(4),
         )
-        _IVFPQ_MEMO[key] = (books, index)
-    return _IVFPQ_MEMO[key]
+        return books, index
+
+    return memo(spark, ("ivfpq_index", sf_dir), build)
 
 
 _NQ = 20   # recall eval query set: vec_id < 20 (catalog_multimodal._NQ)

@@ -1059,23 +1059,23 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_dedup_summary,
     )
     from msgvault_spark.similarity.ivf import build_ivf_index
+    from msgvault_spark.sources.cache import memo
 
-    emb = load_table(spark, sf_dir, "embeddings")
     # the cell assignment is an ETL artifact (persisted, like the ANN
     # indexes) — without it the centroid cross-join subplan re-executes
     # for each of the three branches reading the index
-    key = (spark.sparkContext.applicationId, sf_dir, "semdedup_idx", 8)
-    if key not in _SEMDEDUP_IDX_MEMO:
+    def build():
         from pyspark import StorageLevel
 
+        emb = load_table(spark, sf_dir, "embeddings")
         idx = build_ivf_index(emb, n_cells=8).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         idx.count()
-        _SEMDEDUP_IDX_MEMO[key] = idx
-    return semantic_dedup_summary(
-        semantic_dedup(threshold=0.4, index=_SEMDEDUP_IDX_MEMO[key])
-    )
+        return idx
+
+    idx = memo(spark, ("semdedup_idx", sf_dir, 8), build)
+    return semantic_dedup_summary(semantic_dedup(threshold=0.4, index=idx))
 
 
 # ---------------------------------------------------------------------------

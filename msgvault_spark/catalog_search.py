@@ -371,18 +371,20 @@ _PQ_MEMO: dict[tuple, object] = {}
 def get_pq_index(spark: SparkSession, sf_dir: str):
     """Memoized PQ ETL artifacts: (codebooks, persisted codes table) —
     kilobytes of driver-side codewords plus the pure-map m-byte encode."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_MEMO:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
+    from msgvault_spark.sources.cache import memo
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         books = collect_codebooks(emb, m=4, n_codes=16)
         codes = encode_pq(emb, books).coalesce(4).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         codes.count()
-        _PQ_MEMO[key] = (books, codes)
-    return _PQ_MEMO[key]
+        return books, codes
+
+    return memo(spark, ("pq_index", sf_dir), build)
 
 
 @register("pq_knn_seed0", pq_oracle_sql(0, k=10, m=4, n_codes=16, dim=64))

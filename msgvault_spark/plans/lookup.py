@@ -23,12 +23,21 @@ whole page of ids, which is what the search handlers need.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from msgvault_spark.operators.present import present_sorted
 
 from msgvault_spark.search.fast import _sender_resolution
+
+
+def _id_in(col: str, ids: list[int]) -> Column:
+    """``col IN (ids)`` as one SQL expression of bigint literals built
+    from the int-cast ids: the same optimized plan as
+    ``F.col(col).isin(*ids)``, without its one py4j call per id and its
+    one analyzer cast per id (seconds of plan build for a 5000-id
+    page)."""
+    return F.expr(f"`{col}` IN ({','.join(f'{int(i)}L' for i in ids)})")
 
 
 def _with_rank(df: DataFrame, ids: list[int]) -> DataFrame:
@@ -99,7 +108,7 @@ def get_message_summaries_by_ids(
     is absent from the archive are dropped, matching the reference."""
     if not ids:
         raise ValueError("get_message_summaries_by_ids: empty id list")
-    msg = archive["messages"].filter(F.col("id").isin(*[int(i) for i in ids]))
+    msg = archive["messages"].filter(_id_in("id", ids))
     decorated = _sender_resolution(
         msg, archive["message_recipients"], archive["participants"]
     )
@@ -115,7 +124,7 @@ def get_message_summaries_by_ids_wide(wide: DataFrame, ids: list[int]) -> DataFr
 
     if not ids:
         raise ValueError("get_message_summaries_by_ids: empty id list")
-    msg = wide.filter(F.col("id").isin(*[int(i) for i in ids]))
+    msg = wide.filter(_id_in("id", ids))
     return _summaries(_with_rank(msg.select("*", *search_sender()), ids))
 
 
@@ -132,14 +141,14 @@ def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
     if not ids:
         raise ValueError("get_messages: empty id list")
     idset = [int(i) for i in ids]
-    msg = archive["messages"].filter(F.col("id").isin(*idset))
+    msg = archive["messages"].filter(_id_in("id", idset))
     mr = archive["message_recipients"]
     p = archive["participants"]
 
     recips = (
         mr.filter(
             F.col("recipient_type").isin("to", "cc", "bcc")
-            & F.col("message_id").isin(*idset)
+            & _id_in("message_id", idset)
         )
         .join(
             F.broadcast(
@@ -160,7 +169,7 @@ def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
     )
     labels = (
         archive["message_labels"]
-        .filter(F.col("message_id").isin(*idset))
+        .filter(_id_in("message_id", idset))
         .join(
             F.broadcast(
                 archive["labels"].select(F.col("id").alias("lbl_id"), "name")
@@ -172,7 +181,7 @@ def get_messages(archive: dict[str, DataFrame], ids: list[int]) -> DataFrame:
     )
     atts = (
         archive["attachments"]
-        .filter(F.col("message_id").isin(*idset))
+        .filter(_id_in("message_id", idset))
         .groupBy("message_id")
         .agg(
             # att_-prefixed: `messages` itself carries an attachment_count
@@ -214,7 +223,7 @@ def get_messages_wide(wide: DataFrame, ids: list[int]) -> DataFrame:
     )
     return _details(
         _with_rank(
-            wide.filter(F.col("id").isin(*idset)).select(
+            wide.filter(_id_in("id", idset)).select(
                 "id",
                 "subject",
                 "snippet",

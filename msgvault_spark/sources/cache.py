@@ -28,15 +28,28 @@ straight off the prebuilt cache). Spark-first equivalents here:
     at 100 TB, built once per ETL and served as a lake scan (column
     pruning + pushdown reach the parquet footers).
 
-When a lake write fails (``artifact_store.save_group`` returns None) the
-in-session fallback applies: repartition by join key + MEMORY_AND_DISK
-persist, the same co-partitioning paid per session.
+Every session-scoped artifact (archive, wide record, tables, FTS
+indexes, lake artifacts, scalar statistics, and the catalog modules'
+PQ / IVF-PQ / SemDeDup indexes) lives in ONE memo (``memo``): a dict
+keyed ``(applicationId, *key)``, each first build single-flight under
+``_MEMO_LOCK``. The level-2 clear (``clear_serving_caches``) walks it and
+drops every entry that holds a DataFrame.
+
+Every lake-backed artifact goes through ONE load-or-build path
+(``_load_or_build``): serve the stored group when the lake holds it,
+else build it, save it and serve the stored re-read (so the served bits
+are the lake's). When the lake write fails (``artifact_store.save_group``
+returns None) the built frames are served from an in-session copy
+instead: repartitioned by their bucket spec, MEMORY_AND_DISK-persisted
+and counted, the same co-partitioning paid per session. Small tables
+(``get_table`` below TWIN_MIN_BYTES) never go to the lake and keep their
+own in-session layout. The HTTP answer cache (``get_answer``) is a
+separate byte-budgeted LRU whose lock is never held across a compute.
 """
 
 from __future__ import annotations
 
 import collections
-import functools
 import threading
 
 from pyspark import StorageLevel
@@ -45,32 +58,73 @@ from pyspark.sql import functions as F
 
 from msgvault_spark.sources.adapter import build_archive
 
-_ARCHIVE_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-_WIDE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 FACT_PARTITIONS = 16
 
+# The session's artifacts: archive, wide record, tables, text indexes,
+# lake artifacts, scalars and the catalog modules' ANN/dedup indexes,
+# keyed (applicationId, *key) with key[0] naming the artifact family.
+_MEMO: dict[tuple, object] = {}
+
 # ThreadingHTTPServer runs each request on its own driver thread, and
-# concurrent requests first-touch the same getters; the memoized getters
-# below must not double-build (wasted jobs, and a losing thread's
-# persisted dims would stay pinned unreferenced). One
-# reentrant lock around each getter: with a warm lake the held section is
-# metadata-only (registration + footer reads); builds serialize, which is
-# exactly the single-flight behavior a stale store needs.
+# concurrent requests first-touch the same artifacts; a first build must
+# not run twice (wasted jobs, and a losing thread's persisted frames
+# would stay pinned unreferenced). One reentrant lock, held across a
+# first build: with a warm lake the held section is metadata-only
+# (registration + footer reads); builds serialize, which is exactly the
+# single-flight behavior a stale store needs. Reentrant because builds
+# nest (the wide record reads the archive).
 _MEMO_LOCK = threading.RLock()
 
 
-def _locked(fn):
-    @functools.wraps(fn)
-    def inner(*a, **kw):
-        with _MEMO_LOCK:
-            return fn(*a, **kw)
+def memo(spark: SparkSession, key: tuple, build):
+    """This application's value for ``key``, built by ``build()`` on the
+    first touch. Concurrent first touches run ``build`` once."""
+    k = (spark.sparkContext.applicationId, *key)
+    with _MEMO_LOCK:
+        if k not in _MEMO:
+            _MEMO[k] = build()
+        return _MEMO[k]
 
-    return inner
 
+def _load_or_build(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: tuple,
+    build,
+    buckets: dict[str, tuple[str, int]] | None = None,
+) -> tuple[dict[str, DataFrame], dict]:
+    """(frames, scalars) of the lake group ``kind``. A stored group is
+    served as it is. Otherwise ``build()`` returns (frames, scalars),
+    which are saved (``buckets`` as ``artifact_store.save_group`` takes
+    it) and served as the stored re-read; frames the build persisted as
+    working copies are released then. When the save fails, the built
+    frames are served instead: repartitioned by their bucket spec,
+    persisted and counted."""
+    from msgvault_spark.sources import artifact_store
 
-def _key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
+    loaded = artifact_store.load_group(spark, sf_dir, kind)
+    if loaded is not None:
+        return loaded
+    frames, scalars = build()
+    scalars = scalars or {}
+    stored = artifact_store.save_group(
+        spark, sf_dir, kind, frames, scalars=scalars, buckets=buckets
+    )
+    if stored is not None:
+        for df in frames.values():
+            if df.is_cached:
+                df.unpersist()
+        return stored, scalars
+    kept = {}
+    for name, df in frames.items():
+        if name in (buckets or {}):
+            bucket_key, n = buckets[name]
+            df = df.repartition(n, bucket_key)
+        kept[name] = df.persist(StorageLevel.MEMORY_AND_DISK)
+    # materialize now so the first query isn't charged for it
+    for df in kept.values():
+        df.count()
+    return kept, scalars
 
 
 # write-time co-partitioning spec: each fact clustered on its join key
@@ -82,48 +136,27 @@ _ARCHIVE_BUCKETS: dict[str, tuple[str, int]] = {
 }
 
 
-@_locked
 def get_archive(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Adapter archive, served straight off the bucketed artifact lake.
     Round 11: co-partitioning moved from session warm-in (a repartition +
     persist + count of every fact, ~10s of the sf1 cold budget) to a
     write-time property — serving sessions register the stored bucketed
-    directories and scan them, paying nothing up front. The in-session
-    repartition+persist fallback survives only for a failed lake write."""
-    from msgvault_spark.sources import artifact_store
+    directories and scan them, paying nothing up front. The build session
+    serves the same stored bucketed-table reads every later load session
+    will. The in-session repartition+persist fallback survives only for a
+    failed lake write."""
 
-    key = _key(spark, sf_dir)
-    if key in _ARCHIVE_MEMO:
-        return _ARCHIVE_MEMO[key]
-    kind = ("archive",)
-    loaded = artifact_store.load_group(spark, sf_dir, kind)
-    if loaded is not None:
-        arch = _persist_dims(loaded[0])
-        _ARCHIVE_MEMO[key] = arch
-        return arch
-    arch = build_archive(spark, sf_dir)
-    stored = artifact_store.save_group(
-        spark, sf_dir, kind, arch, buckets=_ARCHIVE_BUCKETS
-    )
-    if stored:
-        # the stored frames ARE bucketed-table reads: the build session
-        # serves the same plans every later load session will
-        stored = _persist_dims(stored)
-        _ARCHIVE_MEMO[key] = stored
-        return stored
-    # lake write failed: per-session co-partition fallback
-    arch = dict(arch)
-    for name, (bucket_key, n) in _ARCHIVE_BUCKETS.items():
-        arch[name] = arch[name].repartition(n, bucket_key).persist(
-            StorageLevel.MEMORY_AND_DISK
+    def load():
+        arch, _ = _load_or_build(
+            spark,
+            sf_dir,
+            ("archive",),
+            lambda: (build_archive(spark, sf_dir), None),
+            buckets=_ARCHIVE_BUCKETS,
         )
-    for name in ("participants", "labels", "conversations", "sources"):
-        arch[name] = arch[name].persist(StorageLevel.MEMORY_AND_DISK)
-    # force materialization now so first query isn't charged for it
-    for df in arch.values():
-        df.count()
-    _ARCHIVE_MEMO[key] = arch
-    return arch
+        return _persist_dims(arch)
+
+    return memo(spark, ("archive", sf_dir), load)
 
 
 def _persist_dims(arch: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -300,7 +333,6 @@ WIDE_EXTRA_COLUMNS = (
 )
 
 
-@_locked
 def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized wide view: lake twin + LAZY persist. The wide view is the
     hottest serving table (the aggregate, search, listing, by-id, detail
@@ -310,16 +342,8 @@ def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds the full copy as a side effect, however few columns it reads,
     and every later reader scans memory. When serving, that first reader
     is the setup ``total`` request."""
-    from msgvault_spark.sources import artifact_store
 
-    key = _key(spark, sf_dir)
-    if key in _WIDE_MEMO:
-        return _WIDE_MEMO[key]
-    kind = ("wide_messages",)
-    loaded = artifact_store.load_group(spark, sf_dir, kind)
-    if loaded is not None:
-        wide = loaded[0]["wide"].persist(StorageLevel.MEMORY_AND_DISK)
-    else:
+    def build():
         # build at few, larger partitions: the wide view is dimension-scale
         # (≤ a few hundred MB at bench SFs) and every consumer is a
         # scan+agg, so per-task scheduling dominates — 8 partitions keeps
@@ -327,21 +351,14 @@ def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         # aggregates at sf0.1). The lake-persisted twin (build_wide_cache)
         # sizes by year partition/file instead, which is the knob that
         # matters on a real cluster.
-        built = build_wide_messages(get_archive(spark, sf_dir)).coalesce(8)
-        stored = artifact_store.save_group(spark, sf_dir, kind, {"wide": built})
-        if stored:
-            wide = stored["wide"].persist(StorageLevel.MEMORY_AND_DISK)
-        else:  # lake write failed: in-session persist fallback
-            wide = built.persist(StorageLevel.MEMORY_AND_DISK)
-            wide.count()
-    _WIDE_MEMO[key] = wide
-    return wide
+        wide = build_wide_messages(get_archive(spark, sf_dir)).coalesce(8)
+        return {"wide": wide}, None
 
+    def load():
+        frames, _ = _load_or_build(spark, sf_dir, ("wide_messages",), build)
+        return frames["wide"].persist(StorageLevel.MEMORY_AND_DISK)
 
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-_TEXT_INDEX_MEMO: dict[tuple[str, str, str, str, str], tuple[DataFrame, DataFrame]] = {}
-_CORPUS_STATS_MEMO: dict[tuple[str, str, str, str, str], tuple[int, float]] = {}
-_TERM_STATS_MEMO: dict[tuple[str, str, str, str, str], DataFrame] = {}
+    return memo(spark, ("wide_messages", sf_dir), load)
 
 
 # Tables at or above this raw-parquet footprint serve from a pre-sharded
@@ -391,7 +408,6 @@ def _layout_partitions(spark: SparkSession, n_rows: int, n_bytes: int | None) ->
     )
 
 
-@_locked
 def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Memoized testdata table (the raw-parquet analog of the reference
     keeping its DuckDB connection's buffer pool warm).
@@ -405,12 +421,14 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       * small tables: repartitioned to ~100k-row partitions (capped at
         core count) and MEMORY_AND_DISK-persisted, so CPU-heavy consumers
         get full-width parallelism on data whose warm-in costs ms."""
-    from msgvault_spark.sources import artifact_store
+    return memo(
+        spark, ("table", sf_dir, name), lambda: _serve_table(spark, sf_dir, name)
+    )
+
+
+def _serve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from msgvault_spark.sources.loader import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
     # size the layout from the parquet FOOTER (free) instead of a
     # full counting scan — at sf1 the old scan-count-then-repartition
     # sequence read lineitem twice before the first query could run
@@ -421,32 +439,22 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         and n_rows is not None
         and n_bytes >= TWIN_MIN_BYTES
     ):
-        kind = ("table_shards", name)
-        loaded = artifact_store.load_group(spark, sf_dir, kind)
-        if loaded is not None:
-            _TABLE_MEMO[key] = loaded[0]["data"]
-            return _TABLE_MEMO[key]
         bucket = _TWIN_BUCKETS.get(name)
-        if bucket is not None:
-            stored = artifact_store.save_group(
-                spark,
-                sf_dir,
-                kind,
-                {"data": load_table(spark, sf_dir, name)},
-                buckets={"data": bucket},
-            )
-        else:
-            n_part = _layout_partitions(spark, n_rows, n_bytes)
-            stored = artifact_store.save_group(
-                spark,
-                sf_dir,
-                kind,
-                {"data": load_table(spark, sf_dir, name).repartition(n_part)},
-            )
-        if stored is not None:
-            _TABLE_MEMO[key] = stored["data"]
-            return _TABLE_MEMO[key]
-        # lake write failed → fall through to the in-session cache path
+
+        def build():
+            raw = load_table(spark, sf_dir, name)
+            if bucket is None:
+                raw = raw.repartition(_layout_partitions(spark, n_rows, n_bytes))
+            return {"data": raw}, None
+
+        frames, _ = _load_or_build(
+            spark,
+            sf_dir,
+            ("table_shards", name),
+            build,
+            buckets={"data": bucket} if bucket else None,
+        )
+        return frames["data"]
     raw = load_table(spark, sf_dir, name)
     if n_rows is None:
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
@@ -459,8 +467,7 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = raw.persist(StorageLevel.MEMORY_AND_DISK)
         df.count()
-    _TABLE_MEMO[key] = df
-    return _TABLE_MEMO[key]
+    return df
 
 
 def _footer_rows(sf_dir: str, name: str) -> int | None:
@@ -508,105 +515,80 @@ def _footer_bytes(sf_dir: str, name: str) -> int | None:
     return None
 
 
-@_locked
 def get_text_index(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Memoized persisted inverted index (postings, doc_stats) — the ETL-time
     FTS index the reference maintains as SQLite FTS5 tables."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _TEXT_INDEX_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _TEXT_INDEX_MEMO[key]
+    index = _text_index(spark, sf_dir, table, id_col, text_col)
+    return index["postings"], index["stats"]
 
 
-@_locked
 def get_corpus_stats(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> tuple[int, float]:
     """(n_docs, avgdl) — corpus constants captured at index-build time so
     per-query BM25 folds them in as literals."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _CORPUS_STATS_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _CORPUS_STATS_MEMO[key]
+    index = _text_index(spark, sf_dir, table, id_col, text_col)
+    return index["n"], index["avgdl"]
 
 
-@_locked
 def get_term_stats(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> DataFrame:
     """ETL-time (term, df) document-frequency table — the statistic an FTS
     index keeps next to its postings. Queries broadcast a filtered slice of
     it instead of re-aggregating candidate postings per query."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _TERM_STATS_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _TERM_STATS_MEMO[key]
+    return _text_index(spark, sf_dir, table, id_col, text_col)["term_stats"]
 
 
-def _build_text_index(spark, key, sf_dir, table, id_col, text_col) -> None:
-    from pyspark.sql import functions as F
-
+def _text_index(
+    spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
+) -> dict:
+    """The memo entry of one FTS index: postings, stats and term_stats
+    frames plus the corpus constants n and avgdl. Lake-served frames come
+    back as plain scans (no persist/count warm-in): every consumer filters
+    postings to its query terms, and that predicate pushes into the
+    parquet scan — which the full-width cache blocked."""
     from msgvault_spark.search.fts import build_inverted_index
-    from msgvault_spark.sources import artifact_store
 
-    kind = ("text_index", table, id_col, text_col)
-    n = max(4, spark.sparkContext.defaultParallelism // 8)
-    loaded = artifact_store.load_group(spark, sf_dir, kind)
-    if loaded is not None:
-        # serve the lake scans directly (no persist/count warm-in): every
-        # consumer filters postings to its query terms, and that predicate
-        # pushes into the parquet scan — which the full-width cache blocked
-        frames, scalars = loaded
-        _TEXT_INDEX_MEMO[key] = (frames["postings"], frames["stats"])
-        _TERM_STATS_MEMO[key] = frames["term_stats"]
-        _CORPUS_STATS_MEMO[key] = (int(scalars["n"]), float(scalars["avgdl"]))
-        return
-    postings, stats = build_inverted_index(
-        get_table(spark, sf_dir, table), id_col, text_col
-    )
-    # right-size the persisted index: a handful of partitions caps per-scan
-    # task count locally; a real lake sizes this by bytes (term-hash
-    # partitioned), not by the session's shuffle.partitions
-    postings = postings.coalesce(n).persist(StorageLevel.MEMORY_AND_DISK)
-    stats = stats.coalesce(n).persist(StorageLevel.MEMORY_AND_DISK)
-    postings.count()
-    term_stats = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .coalesce(n)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    term_stats.count()
-    row = stats.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    stored = artifact_store.save_group(
-        spark,
-        sf_dir,
-        kind,
-        {"postings": postings, "stats": stats, "term_stats": term_stats},
-        scalars={"n": int(row["n"]), "avgdl": float(row["avgdl"])},
-    )
-    if stored:
-        # serve the parquet-backed copies so the build session and every
-        # later load session produce IDENTICAL downstream plans (and the
-        # served bits are the lake bits)
-        for df in (postings, stats, term_stats):
-            df.unpersist()
-        postings = stored["postings"]
-        stats = stored["stats"]
-        term_stats = stored["term_stats"]
-    _TEXT_INDEX_MEMO[key] = (postings, stats)
-    _TERM_STATS_MEMO[key] = term_stats
-    _CORPUS_STATS_MEMO[key] = (int(row["n"]), float(row["avgdl"]))
+    n_part = max(4, spark.sparkContext.defaultParallelism // 8)
+
+    def build():
+        postings, stats = build_inverted_index(
+            get_table(spark, sf_dir, table), id_col, text_col
+        )
+        # right-size the index: a handful of partitions caps per-scan task
+        # count locally; a real lake sizes this by bytes (term-hash
+        # partitioned), not by the session's shuffle.partitions. The
+        # persisted working copies let the save write all three frames
+        # from one index build.
+        postings = postings.coalesce(n_part).persist(StorageLevel.MEMORY_AND_DISK)
+        stats = stats.coalesce(n_part).persist(StorageLevel.MEMORY_AND_DISK)
+        postings.count()
+        term_stats = (
+            postings.groupBy("term")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .coalesce(n_part)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        term_stats.count()
+        row = stats.agg(
+            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+        ).collect()[0]
+        frames = {"postings": postings, "stats": stats, "term_stats": term_stats}
+        return frames, {"n": int(row["n"]), "avgdl": float(row["avgdl"])}
+
+    def load():
+        frames, scalars = _load_or_build(
+            spark, sf_dir, ("text_index", table, id_col, text_col), build
+        )
+        n, avgdl = int(scalars["n"]), float(scalars["avgdl"])
+        return {**frames, "n": n, "avgdl": avgdl}
+
+    return memo(spark, ("text_index", sf_dir, table, id_col, text_col), load)
 
 
-_ARTIFACT_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_artifact(spark: SparkSession, cache_key: tuple, builder) -> DataFrame:
     """Generic memoized persisted ETL artifact — the build-cache pattern
     (reference cmd/build_cache.go) for any query-independent derived frame
@@ -614,22 +596,15 @@ def get_artifact(spark: SparkSession, cache_key: tuple, builder) -> DataFrame:
     per-user rollups, normed vectors. Built + persisted once per
     (application, key); queries then scan the artifact instead of
     re-deriving it."""
-    key = (spark.sparkContext.applicationId, *cache_key)
-    if key not in _ARTIFACT_MEMO:
-        _ARTIFACT_MEMO[key] = _disk_backed(
-            spark, cache_key, ("artifact", *cache_key[1:]), builder
-        )
-    return _ARTIFACT_MEMO[key]
+    return _artifact(spark, cache_key, ("artifact", *cache_key[1:]), builder)
 
 
-def _disk_backed(
+def _artifact(
     spark: SparkSession, cache_key: tuple, kind: tuple, builder
 ) -> DataFrame:
-    """Load the artifact's parquet twin from the on-disk lake when fresh,
-    else build and persist it there (artifact_store.py — the reference's
-    build-cache + staleness-probe serving model). cache_key[0] is the
-    sf_dir by the package-wide memo convention; the served frame is the
-    stored copy, so served bits == lake bits.
+    """The lake group ``kind`` holding ``builder()``'s frame, memoized.
+    cache_key[0] is the sf_dir by the package-wide memo convention; the
+    served frame is the stored copy, so served bits == lake bits.
 
     Lake-served frames come back as PLAIN SCANS (no persist/count — that
     per-artifact warm-in was most of the sf1 cold budget, and consumers'
@@ -637,49 +612,37 @@ def _disk_backed(
     failed-write fallback persists: there the builder's plan would
     otherwise re-run per query (iterative builders like connected
     components make that prohibitive)."""
-    from msgvault_spark.sources import artifact_store
-
     sf_dir = cache_key[0]
-    loaded = artifact_store.load_group(spark, sf_dir, kind)
-    if loaded is not None:
-        return loaded[0]["data"]
-    df = builder()
-    stored = artifact_store.save_group(spark, sf_dir, kind, {"data": df})
-    if stored:
-        return stored["data"]
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
+
+    def load():
+        frames, _ = _load_or_build(
+            spark, sf_dir, kind, lambda: ({"data": builder()}, None)
+        )
+        return frames["data"]
+
+    return memo(spark, (kind[0], sf_dir, *kind[1:]), load)
 
 
-_SCALAR_MEMO: dict[tuple, object] = {}
-
-
-@_locked
 def get_scalar(spark: SparkSession, cache_key: tuple, compute):
     """Memoized scalar catalog statistic captured at build time (the
     corpus_stats pattern: n_docs/avgdl for BM25, distinct-group counts
     for the wide aggregates) — queries fold the value in as a literal
     instead of paying a 1-row aggregate job per invocation."""
-    key = (spark.sparkContext.applicationId, *cache_key)
-    if key not in _SCALAR_MEMO:
-        from msgvault_spark.sources import artifact_store
+    from msgvault_spark.sources import artifact_store
 
-        kind = ("scalar", *cache_key[1:])
+    kind = ("scalar", *cache_key[1:])
+
+    def load():
         stored = artifact_store.load_scalars(cache_key[0], kind)
         if stored is not None and "value" in stored:
-            _SCALAR_MEMO[key] = stored["value"]
-        else:
-            value = compute()
-            artifact_store.save_scalars(cache_key[0], kind, {"value": value})
-            _SCALAR_MEMO[key] = value
-    return _SCALAR_MEMO[key]
+            return stored["value"]
+        value = compute()
+        artifact_store.save_scalars(cache_key[0], kind, {"value": value})
+        return value
+
+    return memo(spark, ("scalar", *cache_key), load)
 
 
-_COMPONENTS_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_components(
     spark: SparkSession, cache_key: tuple, edges_builder, **params
 ) -> DataFrame:
@@ -690,22 +653,14 @@ def get_components(
     instead of re-running the iterative fixpoint per invocation."""
     from msgvault_spark.dedup.components import connected_components
 
-    key = (spark.sparkContext.applicationId, *cache_key, *sorted(params.items()))
-    if key not in _COMPONENTS_MEMO:
-        kind = ("components", *cache_key[1:], *sorted(params.items()))
-        _COMPONENTS_MEMO[key] = _disk_backed(
-            spark,
-            cache_key,
-            kind,
-            lambda: connected_components(edges_builder(), **params),
-        )
-    return _COMPONENTS_MEMO[key]
+    return _artifact(
+        spark,
+        cache_key,
+        ("components", *cache_key[1:], *sorted(params.items())),
+        lambda: connected_components(edges_builder(), **params),
+    )
 
 
-_MINHASH_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_minhash_index(
     spark: SparkSession,
     cache_key: tuple,
@@ -719,27 +674,23 @@ def get_minhash_index(
     queries pay only candidate-join + verify."""
     from msgvault_spark.dedup.minhash import build_minhash_index
 
-    key = (spark.sparkContext.applicationId, *cache_key, *sorted(params.items()))
-    if key not in _MINHASH_MEMO:
-        kind = (
+    return _artifact(
+        spark,
+        cache_key,
+        (
             "minhash_index",
             *cache_key[1:],
             id_col,
             text_col,
             *sorted(params.items()),
-        )
-        _MINHASH_MEMO[key] = _disk_backed(
-            spark,
-            cache_key,
-            kind,
-            lambda: build_minhash_index(df_builder(), id_col, text_col, **params),
-        )
-    return _MINHASH_MEMO[key]
+        ),
+        lambda: build_minhash_index(df_builder(), id_col, text_col, **params),
+    )
 
 
 # Serialized HTTP answers (server.py GET routes), keyed on
 # (applicationId, sf_dir, route, sorted query items). An answer is a pure
-# function of the archive frames the memos above hold (server.py keeps
+# function of the archive frames the one memo holds (server.py keeps
 # clock-relative searches out), so it lives exactly as long as they do:
 # clear_serving_caches() drops it with them. Bodies are a few KB; the LRU
 # byte budget only bounds a pathological key spread.
@@ -798,57 +749,47 @@ def get_answer(
             flight.set()
 
 
-def _unpersist_tree(obj) -> int:
-    """Unpersist every DataFrame reachable inside obj (DFs, dicts,
-    tuples/lists of them). blocking=True: callers are memory-pressure
-    recovery, which needs the blocks actually gone before retrying."""
-    n = 0
+def _frames_in(obj) -> list[DataFrame]:
+    """Every DataFrame reachable inside a memo entry (DFs, dicts,
+    tuples/lists of them)."""
     if isinstance(obj, DataFrame):
-        try:
-            obj.unpersist(blocking=True)
-            n += 1
-        except Exception:
-            pass
-    elif isinstance(obj, dict):
-        for v in obj.values():
-            n += _unpersist_tree(v)
-    elif isinstance(obj, (tuple, list)):
-        for v in obj:
-            n += _unpersist_tree(v)
-    return n
+        return [obj]
+    if isinstance(obj, dict):
+        obj = list(obj.values())
+    if isinstance(obj, (tuple, list)):
+        return [df for v in obj for df in _frames_in(v)]
+    return []
 
 
-@_locked
 def clear_serving_caches() -> int:
     """Memory-pressure recovery level 2 (cold-restart-without-process-
-    restart): drop every long-lived serving cache this module holds —
-    the persisted archive twins, wide view, sharded tables, FTS/term
-    indexes, generic artifacts, components and minhash labelings — and
-    the HTTP answers computed from them. Each
-    getter rebuilds lazily from the artifact lake on next use, so the
-    only cost is the next consumer's re-warm; the benefit is a driver
-    heap no longer carrying every entry ever served this session.
-    Returns the number of memo entries dropped. Scalar memos stay: they
-    hold bytes, not relations."""
+    restart): drop every entry of the one memo that holds a DataFrame —
+    the archive, wide view, tables, FTS indexes, lake artifacts and the
+    catalog modules' ANN/dedup indexes — unpersisting its frames, and
+    the HTTP answers computed from them. Each artifact rebuilds lazily
+    from the artifact lake on next use, so the only cost is the next
+    consumer's re-warm; the benefit is a driver heap no longer carrying
+    every entry ever served this session. Entries holding only Python
+    values (the scalar statistics) stay: they hold bytes, not relations,
+    and a non-JSON scalar lives nowhere else. Returns the number of memo
+    entries dropped."""
     global _ANSWER_BYTES, _ANSWER_GEN
     with _ANSWER_LOCK:
         _ANSWER_GEN += 1
         _ANSWER_MEMO.clear()
         _ANSWER_BYTES = 0
     dropped = 0
-    for memo in (
-        _ARCHIVE_MEMO,
-        _WIDE_MEMO,
-        _TABLE_MEMO,
-        _TEXT_INDEX_MEMO,
-        _TERM_STATS_MEMO,
-        _ARTIFACT_MEMO,
-        _COMPONENTS_MEMO,
-        _MINHASH_MEMO,
-        _CORPUS_STATS_MEMO,  # scalars, but lifecycle-tied to the index
-    ):
-        for v in memo.values():
-            _unpersist_tree(v)
-        dropped += len(memo)
-        memo.clear()
+    with _MEMO_LOCK:
+        for key, entry in list(_MEMO.items()):
+            frames = _frames_in(entry)
+            if not frames:
+                continue
+            # blocking: recovery needs the blocks gone before it retries
+            for df in frames:
+                try:
+                    df.unpersist(blocking=True)
+                except Exception:
+                    pass
+            del _MEMO[key]
+            dropped += 1
     return dropped

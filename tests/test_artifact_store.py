@@ -27,6 +27,13 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _forget(cache, family):
+    """Drop one artifact family from the session memo: the memo state of
+    a fresh serving session."""
+    for key in [k for k in cache._MEMO if k[1] == family]:
+        del cache._MEMO[key]
+
+
 def test_group_roundtrip_bits(spark, store):
     built = spark.range(10).selectExpr(
         "id", "id * 2 AS twice", "CAST(id AS STRING) AS s"
@@ -117,7 +124,7 @@ def test_archive_serving_is_scan_only(spark, store):
     from msgvault_spark.sources import cache
 
     cache.get_archive(spark, SF)  # ETL pass (writes the group)
-    cache._ARCHIVE_MEMO.clear()  # fresh serving session analog
+    _forget(cache, "archive")  # fresh serving session analog
     arch = cache.get_archive(spark, SF)
     plan = arch["messages"]._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan and "aspark_" in plan
@@ -192,9 +199,7 @@ def test_text_index_served_from_lake_matches_built(spark, store):
     # earlier tests may have warmed the in-session memo under the
     # conftest-wide store; clear it so the BUILD happens into THIS
     # test's fresh store fixture
-    cache._TEXT_INDEX_MEMO.clear()
-    cache._TERM_STATS_MEMO.clear()
-    cache._CORPUS_STATS_MEMO.clear()
+    _forget(cache, "text_index")
 
     postings1, stats1 = cache.get_text_index(
         spark, SF, "documents", "doc_id", "text"
@@ -205,9 +210,7 @@ def test_text_index_served_from_lake_matches_built(spark, store):
         spark, SF, ("text_index", "documents", "doc_id", "text")
     ) is not None
 
-    cache._TEXT_INDEX_MEMO.clear()
-    cache._TERM_STATS_MEMO.clear()
-    cache._CORPUS_STATS_MEMO.clear()
+    _forget(cache, "text_index")
 
     def boom(*a, **k):  # the lake must satisfy the reload
         raise AssertionError("rebuilt instead of loading the lake artifact")
@@ -240,7 +243,31 @@ def test_get_artifact_served_from_lake(spark, store):
         return spark.range(5).selectExpr("id", "id % 2 AS parity")
 
     df1 = cache.get_artifact(spark, (SF, "unit_lake_artifact"), build)
-    cache._ARTIFACT_MEMO.clear()  # fresh serving session analog
+    _forget(cache, "artifact")  # fresh serving session analog
     df2 = cache.get_artifact(spark, (SF, "unit_lake_artifact"), build)
     assert calls == [1]
     assert _rows(df1) == _rows(df2)
+
+
+def test_failed_save_serves_persisted_copartitioned_build(spark, store, monkeypatch):
+    """When the lake write fails, the load-or-build path serves the built
+    frames in-session: repartitioned by their bucket spec and persisted;
+    the scalars still come back."""
+    from msgvault_spark.sources import cache
+
+    monkeypatch.setattr(artifact_store, "save_group", lambda *a, **k: None)
+    built = spark.range(40).selectExpr("id", "id % 3 AS g")
+    frames, scalars = cache._load_or_build(
+        spark,
+        SF,
+        ("t", "failed_save"),
+        lambda: ({"keyed": built, "plain": built}, {"n": 40}),
+        buckets={"keyed": ("g", 5)},
+    )
+    assert scalars == {"n": 40}
+    assert all(df.is_cached for df in frames.values())
+    assert frames["keyed"].rdd.getNumPartitions() == 5
+    assert _rows(frames["keyed"]) == _rows(built) == _rows(frames["plain"])
+    assert artifact_store.load_group(spark, SF, ("t", "failed_save")) is None
+    for df in frames.values():
+        df.unpersist()

@@ -18,30 +18,80 @@ def _n_persistent_rdds(spark) -> int:
 
 def test_clear_session_caches_drops_and_rebuilds(spark):
     from msgvault_spark.catalog import CATALOG, clear_session_caches
+    from msgvault_spark.catalog_ann import get_ivfpq_index
+    from msgvault_spark.catalog_search import get_pq_index
     from msgvault_spark.sources import cache as srccache
 
     entry = CATALOG["agg_senders_wide"]
     before = entry.fn(spark, SF_DIR).collect()
-    assert srccache._WIDE_MEMO or srccache._ARCHIVE_MEMO  # memos populated
+    # the catalog modules' index memos live in the one memo too
+    get_pq_index(spark, SF_DIR)
+    get_ivfpq_index(spark, SF_DIR)
+    CATALOG["semantic_dedup_cells"].fn(spark, SF_DIR)
+    families = {k[1] for k in srccache._MEMO}
+    assert {"archive", "wide_messages", "pq_index", "ivfpq_index",
+            "semdedup_idx"} <= families, families
 
     dropped = clear_session_caches(spark)
-    assert dropped >= 1
-    # every DF-holding serving memo is empty — the level-2 contract
-    for memo in (
-        srccache._ARCHIVE_MEMO,
-        srccache._WIDE_MEMO,
-        srccache._TABLE_MEMO,
-        srccache._TEXT_INDEX_MEMO,
-        srccache._TERM_STATS_MEMO,
-        srccache._ARTIFACT_MEMO,
-        srccache._COMPONENTS_MEMO,
-        srccache._MINHASH_MEMO,
-    ):
-        assert not memo
+    assert dropped >= 5
+    # no memo entry holds a frame — the level-2 contract
+    assert not [k for k, v in srccache._MEMO.items() if srccache._frames_in(v)]
 
     # rebuild path: same entry, identical rows from a cold memo state
     after = entry.fn(spark, SF_DIR).collect()
     assert after == before
+
+
+def test_first_touches_of_one_key_build_once(spark):
+    """Concurrent first touches of one memo key run its builder once and
+    all see its value."""
+    import threading
+    import time
+
+    from msgvault_spark.sources import cache as srccache
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)  # hold the first build open while the rest arrive
+        return object()
+
+    start = threading.Barrier(6)
+    got = []
+
+    def touch():
+        start.wait()
+        got.append(srccache.memo(spark, ("unit_single_flight",), build))
+
+    threads = [threading.Thread(target=touch) for _ in range(6)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(calls) == 1
+    assert len(got) == 6 and all(g is got[0] for g in got)
+
+
+def test_scalar_survives_level2_clear(spark):
+    """A scalar entry holds no frame, so a level-2 clear keeps it: the
+    statistic is not recomputed after the clear."""
+    from msgvault_spark.catalog import clear_session_caches
+    from msgvault_spark.sources import cache as srccache
+
+    calls = []
+
+    def compute():
+        calls.append(1)
+        if len(calls) > 1:
+            raise AssertionError("scalar recomputed after the clear")
+        return 41
+
+    key = (SF_DIR, "unit_scalar_survives_clear")
+    assert srccache.get_scalar(spark, key, compute) == 41
+    clear_session_caches(spark)
+    assert srccache.get_scalar(spark, key, compute) == 41
+    assert calls == [1]
 
 
 def test_catalog_entries_retain_no_plan(spark):
