@@ -24,6 +24,10 @@ from msgvault_spark.catalog import CATALOG
 _PRIORITY = [
     # Narrow changes since the last clean boundary (tools/gate_priority.py
     # marks them; each must hold a window slot):
+    # sources/build_cache.py lost its wide-record, FTS-index and bucketed
+    # writers (the lake serves all three)
+    "cache_roundtrip_by_year",
+    "incremental_cache_append",
     # plans/lookup.py (_with_rank's literal id page: the two by-id
     # entries first; its module docstring touches every lookup entry)
     # and catalog_lookup's docstrings
@@ -88,12 +92,12 @@ _PRIORITY = [
     # order
     "embed_pipeline_vectors",
     "search_fast_operators",
+    # --- end of the window; the overflow relies on the out-of-band
+    # full-oracle sweep until its next window ---
     "search_text_terms",
     "search_relative_dates",
     "list_messages_by_domain",
     "list_messages_by_domain_wide",
-    # --- end of the window; the overflow relies on the out-of-band
-    # full-oracle sweep until its next window ---
     "search_with_stats",
     "search_page2",
     "search_by_domains",
@@ -231,7 +235,6 @@ _PRIORITY = [
     "bpe_trained_fertility",
     "edit_distance_pairs",
     "dedup_threshold_sweep",
-    "cache_roundtrip_by_year",
     "list_conversations",
     "text_agg_contacts",
     "empty_cc_by_year",
@@ -240,7 +243,6 @@ _PRIORITY = [
     "text_search_messages",
     "text_stats_total",
     "csv_roundtrip_stats",
-    "incremental_cache_append",
     "weighted_mix_sources",
     "topk_orders_per_priority",
     "top_bigrams_corpus",

@@ -192,102 +192,3 @@ def build_cache(
     )
     new_state.save(base_dir)
     return new_state
-
-
-def build_wide_cache(
-    spark: SparkSession, archive: dict[str, DataFrame], base_dir: str
-) -> str:
-    """Materialize the denormalized wide message view into the lake —
-    `wide_messages/year=*/...` zstd. This IS the reference's core design
-    (query-shaped tables built by ETL, served by every query); the
-    session-level memo in sources/cache.py is the warm-cache twin. At
-    100 TB this table is what aggregate/search scans read instead of
-    re-joining junctions per query."""
-    from msgvault_spark.sources.cache import build_wide_messages
-
-    wide = build_wide_messages(archive)
-    path = os.path.join(base_dir, "wide_messages")
-    (
-        wide.withColumn("year", F.coalesce(F.col("year"), F.year("sent_at")))
-        .repartition("year")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("year")
-        .parquet(path)
-    )
-    return path
-
-
-def load_wide_cache(spark: SparkSession, base_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, "wide_messages"))
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    *,
-    num_buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Bucketed managed table: pre-shuffles ONCE at write so every future
-    equi-join/aggregate on ``bucket_col`` between co-bucketed tables runs
-    exchange-free — the lakehouse answer to the reference's SQLite covering
-    indexes. At 100 TB, junction⋈fact joins (message_recipients.message_id
-    = messages.id) are the recurring shuffle; co-bucketing both sides by
-    the join key amortizes it into the ETL write. Sorted buckets also drop
-    the SortMergeJoin's per-query sort."""
-    w = df.write.format("parquet").mode("overwrite").bucketBy(
-        num_buckets, bucket_col
-    )
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
-
-
-def build_text_index_cache(
-    spark: SparkSession,
-    docs: DataFrame,
-    base_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """Persist the FTS inverted index into the lake: ``text_index/postings``
-    (bucketed-by-term-shaped: sorted + partitioned on term prefix via
-    repartition) + ``doc_stats`` + ``corpus_stats`` (n_docs, avgdl, one
-    row). The durable twin of the session memo in sources/cache.py —
-    the reference maintains exactly this as SQLite FTS5 shadow tables
-    (sqlite.go FTS index DDL); at 100 TB the index builds once per ingest
-    batch and every BM25 query reads postings pruned to its terms."""
-    from msgvault_spark.search.fts import build_inverted_index
-
-    postings, doc_stats = build_inverted_index(docs, id_col, text_col)
-    root = os.path.join(base_dir, "text_index")
-    (
-        postings.repartition("term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(os.path.join(root, "postings"))
-    )
-    doc_stats.coalesce(4).write.mode("overwrite").option(
-        "compression", "zstd"
-    ).parquet(os.path.join(root, "doc_stats"))
-    corpus = doc_stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    corpus.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(root, "corpus_stats")
-    )
-    return root
-
-
-def load_text_index_cache(
-    spark: SparkSession, base_dir: str
-) -> tuple[DataFrame, DataFrame, tuple[int, float]]:
-    root = os.path.join(base_dir, "text_index")
-    postings = spark.read.parquet(os.path.join(root, "postings"))
-    doc_stats = spark.read.parquet(os.path.join(root, "doc_stats"))
-    row = spark.read.parquet(os.path.join(root, "corpus_stats")).head()
-    return postings, doc_stats, (int(row["n_docs"]), float(row["avgdl"]))

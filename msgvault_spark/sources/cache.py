@@ -348,9 +348,9 @@ def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (≤ a few hundred MB at bench SFs) and every consumer is a
         # scan+agg, so per-task scheduling dominates — 8 partitions keeps
         # scans at 8 tasks instead of 32 (measured 25% off the 4 wide
-        # aggregates at sf0.1). The lake-persisted twin (build_wide_cache)
-        # sizes by year partition/file instead, which is the knob that
-        # matters on a real cluster.
+        # aggregates at sf0.1). The lake group is written from these
+        # 8 partitions, one file each; a real cluster would size files by
+        # bytes instead.
         wide = build_wide_messages(get_archive(spark, sf_dir)).coalesce(8)
         return {"wide": wide}, None
 

@@ -189,48 +189,76 @@ def test_half_written_group_never_loads(spark, store):
     assert artifact_store.load_group(spark, SF, ("t", "half")) is None
 
 
-def test_text_index_served_from_lake_matches_built(spark, store):
-    """End-to-end through sources/cache: build the documents FTS index
-    (writes the lake group), wipe the in-session memos to simulate a fresh
-    serving session, reload — postings/stats/scalars must be identical and
-    the store must actually be hit (no rebuild)."""
+def _text_index_built(spark, cache):
+    from pyspark.sql import functions as F
+
+    from msgvault_spark.search.fts import build_inverted_index
+
+    postings, stats = build_inverted_index(
+        cache.get_table(spark, SF, "documents"), "doc_id", "text"
+    )
+    row = stats.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).head()
+    return _rows(postings), _rows(stats), (row["n"], row["avgdl"])
+
+
+def _text_index_served(spark, cache):
+    postings, stats = cache.get_text_index(spark, SF, "documents", "doc_id", "text")
+    corpus = cache.get_corpus_stats(spark, SF, "documents", "doc_id", "text")
+    return _rows(postings), _rows(stats), corpus
+
+
+def _wide_built(spark, cache):
+    return _rows(cache.build_wide_messages(cache.get_archive(spark, SF)))
+
+
+def _wide_served(spark, cache):
+    return _rows(cache.get_wide_messages(spark, SF))
+
+
+@pytest.mark.parametrize(
+    "family, kind, builder, built, served",
+    [
+        (
+            "text_index",
+            ("text_index", "documents", "doc_id", "text"),
+            "msgvault_spark.search.fts.build_inverted_index",
+            _text_index_built,
+            _text_index_served,
+        ),
+        (
+            "wide_messages",
+            ("wide_messages",),
+            "msgvault_spark.sources.cache.build_wide_messages",
+            _wide_built,
+            _wide_served,
+        ),
+    ],
+    ids=["text_index", "wide_messages"],
+)
+def test_served_from_lake_matches_built(
+    spark, store, monkeypatch, family, kind, builder, built, served
+):
+    """End-to-end through sources/cache: the first read builds the
+    artifact and writes its lake group; with the session memo wiped (a
+    fresh serving session) the reload must serve the same rows from the
+    lake, nested columns included, without rebuilding."""
     from msgvault_spark.sources import cache
 
-    # earlier tests may have warmed the in-session memo under the
+    # earlier tests may have warmed the session memo under the
     # conftest-wide store; clear it so the BUILD happens into THIS
     # test's fresh store fixture
-    _forget(cache, "text_index")
+    _forget(cache, family)
+    expected = built(spark, cache)
+    assert served(spark, cache) == expected
+    assert artifact_store.load_group(spark, SF, kind) is not None
 
-    postings1, stats1 = cache.get_text_index(
-        spark, SF, "documents", "doc_id", "text"
-    )
-    n1, avgdl1 = cache.get_corpus_stats(spark, SF, "documents", "doc_id", "text")
-    p_rows, s_rows = _rows(postings1), _rows(stats1)
-    assert artifact_store.load_group(
-        spark, SF, ("text_index", "documents", "doc_id", "text")
-    ) is not None
-
-    _forget(cache, "text_index")
+    _forget(cache, family)
 
     def boom(*a, **k):  # the lake must satisfy the reload
         raise AssertionError("rebuilt instead of loading the lake artifact")
 
-    import msgvault_spark.search.fts as fts
-
-    orig = fts.build_inverted_index
-    fts.build_inverted_index = boom
-    try:
-        postings2, stats2 = cache.get_text_index(
-            spark, SF, "documents", "doc_id", "text"
-        )
-        n2, avgdl2 = cache.get_corpus_stats(
-            spark, SF, "documents", "doc_id", "text"
-        )
-    finally:
-        fts.build_inverted_index = orig
-    assert _rows(postings2) == p_rows
-    assert _rows(stats2) == s_rows
-    assert (n2, avgdl2) == (n1, avgdl1)
+    monkeypatch.setattr(builder, boom)
+    assert served(spark, cache) == expected
 
 
 def test_get_artifact_served_from_lake(spark, store):

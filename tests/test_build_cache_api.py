@@ -135,25 +135,6 @@ def test_eml_export_and_csv_roundtrip(spark, archive, tmp_path):
     assert row4["subject"] is None and row4["snippet"] == "yo"
 
 
-def test_wide_cache_roundtrip(spark, archive, tmp_path):
-    from msgvault_spark.plans.aggregate import aggregate_wide
-    from msgvault_spark.plans.models import ViewType
-    from msgvault_spark.sources.build_cache import build_wide_cache, load_wide_cache
-    from msgvault_spark.sources.cache import build_wide_messages
-
-    base = str(tmp_path / "lake_wide")
-    build_wide_cache(spark, archive, base)
-    lake_wide = load_wide_cache(spark, base)
-
-    mem = aggregate_wide(build_wide_messages(archive), ViewType.SENDERS)
-    disk = aggregate_wide(lake_wide, ViewType.SENDERS)
-    assert sorted(map(tuple, mem.collect())) == sorted(map(tuple, disk.collect()))
-    # hive partitioning materialized; the record carries the soft-deleted
-    # 2023 message too (its readers filter live rows)
-    years = {r["year"] for r in lake_wide.select("year").distinct().collect()}
-    assert years == {2023, 2024}
-
-
 def test_orc_sink_roundtrip(spark, archive, tmp_path):
     """Second columnar sink format (ORC is Spark-native like parquet):
     lake writes are format-parametric, values survive a roundtrip."""
@@ -280,44 +261,6 @@ def test_lookup_hydration_api(spark):
     accounts = api.list_accounts(spark, sf)
     assert accounts.row_count == 3  # adapter: source_id ∈ {1,2,3}
     assert all(r[1] > 0 for r in accounts.rows)
-
-
-def test_text_index_lake_roundtrip(spark, tmp_path):
-    """BM25 served from the lake-persisted index == BM25 from the in-memory
-    build: postings/doc_stats/corpus constants survive the roundtrip."""
-    from msgvault_spark.search.fts import bm25_scores, build_inverted_index
-    from msgvault_spark.sources.build_cache import (
-        build_text_index_cache,
-        load_text_index_cache,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark shuffles data across executors"),
-            (2, "spark broadcasts small tables"),
-            (3, "duckdb vectorizes over a single node"),
-            (4, "shuffle and broadcast joins in spark"),
-        ],
-        "doc_id long, text string",
-    )
-    base = str(tmp_path / "lake_fts")
-    build_text_index_cache(spark, docs, base)
-    postings, doc_stats, (n_docs, avgdl) = load_text_index_cache(spark, base)
-    assert n_docs == 4
-
-    mem_postings, mem_stats = build_inverted_index(docs, "doc_id", "text")
-    terms = ["spark", "shuffle"]
-    from_disk = sorted(
-        map(tuple, bm25_scores(
-            postings, doc_stats, terms, round_to=6,
-            corpus_stats=(n_docs, avgdl)).collect())
-    )
-    from_mem = sorted(
-        map(tuple, bm25_scores(
-            mem_postings, mem_stats, terms, round_to=6,
-            corpus_stats=(4, float(avgdl))).collect())
-    )
-    assert from_disk == from_mem and len(from_disk) > 0
 
 
 # ---------------------------------------------------------------------------

@@ -236,45 +236,6 @@ def test_hll_rollup_is_two_phase_agg(spark):
     assert "SortAggregate" not in plan  # datasketches aggs stay hash-based
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Co-bucketed tables joined on the bucket key: zero exchanges — the
-    write-time shuffle (sources/build_cache.py:write_bucketed) replaces the
-    per-query one. The per-query plan must show neither ShuffleExchange nor
-    per-side Sort (buckets are written sorted)."""
-    from pyspark.sql import functions as F
-
-    from msgvault_spark.sources.build_cache import write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}/bkt'")
-    old_db, old_thresh = (
-        spark.catalog.currentDatabase(),
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-    )
-    spark.catalog.setCurrentDatabase("bkt")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        facts = spark.range(1000).select(
-            F.col("id"), (F.col("id") % 7).alias("v")
-        )
-        junction = spark.range(3000).select(
-            (F.col("id") % 1000).alias("message_id"), F.col("id").alias("rid")
-        )
-        write_bucketed(facts, "b_facts", "id", num_buckets=4)
-        write_bucketed(junction, "b_junction", "message_id", num_buckets=4)
-        joined = spark.table("b_facts").join(
-            spark.table("b_junction"),
-            F.col("id") == F.col("message_id"),
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        n = joined.count()
-        assert n == 3000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.catalog.setCurrentDatabase(old_db)
-
-
 def test_every_catalog_plan_is_scale_safe(spark, catalog):
     """Blanket audit: NO catalog query may contain a CartesianProduct, and
     nested-loop joins are allowed only as broadcast 1-row cross joins (the
