@@ -24,6 +24,9 @@ from msgvault_spark.catalog import CATALOG
 _PRIORITY = [
     # Narrow changes since the last clean boundary (tools/gate_priority.py
     # marks them; each must hold a window slot):
+    # dedup/embedding_gemm.py's docstring (the GEMM rescore's pinning
+    # suite is tests/test_embedding_gemm.py)
+    "embedding_near_dups_lsh",
     # sources/build_cache.py lost its wide-record, FTS-index and bucketed
     # writers (the lake serves all three)
     "cache_roundtrip_by_year",
@@ -87,13 +90,12 @@ _PRIORITY = [
     "ivfpq_knn_seed0",
     "ivfpq_recall_report",
     "semantic_dedup_cells",
-    # --- broad changes (catalog.py, sources/cache.py, artifact_store.py)
-    # touch every entry, so the remaining slots keep the previous window's
-    # order
+    # --- end of the window; the overflow relies on the out-of-band
+    # full-oracle sweep until its next window. Broad changes (catalog.py,
+    # sources/cache.py, artifact_store.py) touch every entry, so the rest
+    # keeps the previous window's order ---
     "embed_pipeline_vectors",
     "search_fast_operators",
-    # --- end of the window; the overflow relies on the out-of-band
-    # full-oracle sweep until its next window ---
     "search_text_terms",
     "search_relative_dates",
     "list_messages_by_domain",
@@ -167,7 +169,6 @@ _PRIORITY = [
     "unigram_quality_docs",
     "cross_source_dup_report",
     "kmv_source_overlap",
-    "embedding_near_dups_lsh",
     "pricing_summary",
     "top_customers_by_spend",
     "orders_semi_anti",

@@ -5,11 +5,11 @@ per-pair interpreted fold, pre-built and output-pinned a round early.
 Why this exists (SCALING.md round-9): `embedding_near_dups_lsh` is the
 one genuinely rescore-bound sf1 entry (3.4× vs DuckDB — every
 within-bucket pair pays an interpreted 3-fold cosine), and the measured
-fix candidates went two ways: the flat-expression unroll LOST to the
-fold (similarity/flat.py, 0.4×), while the blocked-GEMM + fp-margin +
-fold-verify two-phase of `embedding.allpairs_near_dups` reads 0.02× vs
-DuckDB at sf1 on strictly more work. This module ports that proven
-two-phase onto the LSH bucket structure:
+fix candidates went two ways: a flat-expression unroll LOST to the
+fold (0.4×), while the blocked-GEMM + fp-margin + fold-verify two-phase
+of `embedding.allpairs_near_dups` reads 0.02× vs DuckDB at sf1 on
+strictly more work. This module ports that proven two-phase onto the
+LSH bucket structure:
 
   propose   within each signature bucket, sub-blocked float64 GEMM
             tiles emit pairs clearing ``threshold − margin`` (the same
@@ -20,10 +20,9 @@ two-phase onto the LSH bucket structure:
             so the emitted rows are bit-identical to lsh_near_dups
 
 Output contract: exactly `embedding.lsh_near_dups` (same pairs, same
-rounded cos bits) — pinned by tests/test_flat_vector.py's equality
-suite on real and adversarial corpora. The catalog entry stays on the
-fold version until its gate-window slot opens (the r9 window is full,
-tools/gate_priority.py); flipping is a one-line import change.
+rounded cos bits) — pinned by tests/test_embedding_gemm.py's equality
+suite on real and adversarial corpora. The catalog entry
+`embedding_near_dups_lsh` runs this version.
 
 Scale shape: task memory is bounded by 2·group_rows vectors per tile
 regardless of bucket size (hot buckets sub-block adaptively), candidate

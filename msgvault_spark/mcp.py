@@ -37,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from msgvault_spark import api
+from msgvault_spark.server import USER_ERRORS
 
 
 def _tool_table(
@@ -180,7 +181,7 @@ def handle(spark: SparkSession, sf_dir: str, request) -> dict:
         return err(-32600, "arguments must be an object")
     try:
         result = tools[name][1](arguments)
-    except (KeyError, ValueError, TypeError) as e:
+    except (TypeError, *USER_ERRORS) as e:
         return err(-32602, f"bad arguments for {name}: {e}")
     except Exception as e:  # noqa: BLE001 — engine errors become RPC errors
         return err(-32000, str(e).splitlines()[0][:500])

@@ -108,7 +108,7 @@ from msgvault_spark.sources.cache import get_answer
 
 
 # answered 400: the request is at fault, not the engine
-_USER_ERRORS = (
+USER_ERRORS = (
     KeyError,
     ValueError,
     AnalysisException,  # includes ParseException
@@ -193,7 +193,7 @@ class MsgvaultHTTPServer:
                 if isinstance(e, _HTTPError):
                     return self._err(e.code, str(e))
                 msg = (str(e).splitlines() or [repr(e)])[0][:500]
-                if isinstance(e, _USER_ERRORS):
+                if isinstance(e, USER_ERRORS):
                     return self._err(400, msg)
                 print(
                     f"[server] 500 {self.command} {self.path}: "
@@ -354,24 +354,21 @@ class MsgvaultHTTPServer:
                 if not query:
                     raise _HTTPError(400, "Query parameter 'q' is required")
                 mode = q.get("mode") or "fts"
+                size = int(q.get("page_size", 20) or 20)
+                if size < 1 or size > 100:
+                    size = 20
                 if mode in ("vector", "hybrid"):
                     if int(q.get("page", 1) or 1) > 1:
                         raise _HTTPError(
                             400, "mode=vector|hybrid only supports page=1"
                         )
-                    size = int(q.get("page_size", 20) or 20)
-                    return self._vector_search(
-                        query, mode, size if size >= 1 else 20
-                    )
+                    return self._vector_search(query, mode, size)
                 if mode != "fts":
                     raise _HTTPError(
                         400,
                         f"mode must be one of fts|vector|hybrid, got '{mode}'",
                     )
                 page = max(1, int(q.get("page", 1) or 1))
-                size = int(q.get("page_size", 20) or 20)
-                if size < 1 or size > 100:
-                    size = 20
                 from msgvault_spark.search.fast import SearchWithStats
                 from msgvault_spark.sources.cache import get_wide_messages
 
@@ -497,21 +494,19 @@ class MsgvaultHTTPServer:
                 if not cid:
                     raise _HTTPError(400, "Missing 'cid' query parameter")
                 from msgvault_spark.functions.mime import extract_inline_part
-                from msgvault_spark.plans.lookup import get_messages_raw
-                from msgvault_spark.sources.cache import get_archive
 
                 raw_store = outer.raw_store
                 if raw_store is None:
                     from msgvault_spark.catalog_lookup import _raw_store
 
                     raw_store = _raw_store(outer.spark, outer.sf_dir)
-                arch = get_archive(outer.spark, outer.sf_dir)
-                rows = get_messages_raw(
-                    raw_store, arch["messages"], [mid]
-                ).collect()
-                if not rows:
+                raw = api.get_message_raw(
+                    outer.spark, outer.sf_dir, raw_store, [mid]
+                )
+                if not raw.rows:
                     raise _HTTPError(404, "Message raw data not found")
-                part = extract_inline_part(rows[0]["raw_text"], cid)
+                text = raw.rows[0][raw.columns.index("raw_text")]
+                part = extract_inline_part(text, cid)
                 if part is None:
                     raise _HTTPError(404, "Inline part not found")
                 ctype, body = part

@@ -14,7 +14,8 @@ This module is the missing disk layer:
     digest of (artifact kind+params, source freshness fingerprint,
     package code fingerprint); it holds one parquet dir per frame plus
     a ``meta.json`` with any captured scalars (n_docs/avgdl-style
-    catalog statistics).
+    catalog statistics). A scalar statistic is a group with no frames.
+    ``save_group`` is the one writer and ``load_group`` the one reader.
   * freshness = the reference's staleness triple at file granularity:
     (name, mtime_ns, size) of every source parquet in the sf_dir.
     Any source change → different digest → the old group is simply
@@ -40,8 +41,9 @@ This module is the missing disk layer:
     prebuilt cache (cmd/msgvault/cmd/build_cache.go:52-56).
 
 Set ``SPARK_GRAFT_ARTIFACT_DIR`` to relocate the store (tests point it
-at tmp_path). When a lake write fails, ``save_group`` returns None and
-the caller serves an in-session copy instead.
+at tmp_path). When a lake write fails, or its scalars do not round-trip
+through JSON, ``save_group`` returns None and the caller serves an
+in-session copy instead.
 """
 
 from __future__ import annotations
@@ -204,85 +206,80 @@ def save_group(
     failed or lost a race. ``buckets`` maps a frame name to
     (bucket_key, n_buckets): that frame is written hash-clustered +
     sorted on the key, one file per bucket (the write-time shuffle that
-    replaces every serving session's co-partitioning exchange)."""
+    replaces every serving session's co-partitioning exchange).
+
+    ``scalars`` must ROUND-TRIP through JSON exactly: a value that merely
+    serializes (tuple→list, int dict keys→str) would change type in the
+    next session, and a date or an object does not serialize. Either
+    returns None before anything is written."""
+    scalars = scalars or {}
+    try:
+        if json.loads(json.dumps(scalars)) != scalars:
+            return None
+    except (TypeError, ValueError):
+        return None
     root = store_root()
     digest = _digest(sf_dir, kind_key)
     d = os.path.join(root, digest)
     # Serialize in-process writers: HTTP request threads build plans
     # concurrently, and two threads first-touching the same stale kind
-    # would otherwise race the SAME tmp dir and throwaway table name
-    # (both were PID-keyed). Cross-process races stay handled by the
-    # exists-check + atomic rename below.
+    # would otherwise race the SAME tmp dir and throwaway table name.
+    # Cross-process races stay handled by the exists-check + atomic
+    # rename below.
     with _SAVE_LOCK:
-        return _save_group_locked(
-            spark, sf_dir, kind_key, frames, scalars, buckets, d, digest
-        )
-
-
-def _save_group_locked(
-    spark: SparkSession,
-    sf_dir: str,
-    kind_key: tuple,
-    frames: dict[str, DataFrame],
-    scalars: dict | None,
-    buckets: dict[str, tuple[str, int]] | None,
-    d: str,
-    digest: str,
-) -> dict[str, DataFrame] | None:
-    root = store_root()
-    if os.path.exists(d):  # another writer finished first
-        loaded = load_group(spark, sf_dir, kind_key)
-        return loaded[0] if loaded else None
-    tmp = f"{d}.tmp{os.getpid()}_{threading.get_ident()}"
-    schemas: dict[str, str] = {}
-    bucket_meta: dict[str, dict] = {}
-    try:
-        os.makedirs(tmp, exist_ok=True)
-        for name, df in frames.items():
-            spec = (buckets or {}).get(name)
-            target = os.path.join(tmp, name)
-            if spec is None:
-                df.write.mode("overwrite").parquet(target)
-                continue
-            key_col, n = spec
-            # bucketBy requires saveAsTable; write through a throwaway
-            # session-catalog name with an explicit external path, then
-            # drop the metadata (files stay — the table was external).
-            # repartition(n, key) first so each task owns exactly one
-            # bucket → one file per bucket (both use Murmur3 pmod n).
-            wtbl = (
-                f"aspark_w_{os.getpid()}_{threading.get_ident()}"
-                f"_{digest[:12]}_{name}"
-            )
-            (
-                df.repartition(n, key_col)
-                .write.bucketBy(n, key_col)
-                .sortBy(key_col)
-                .option("path", target)
-                .mode("overwrite")
-                .saveAsTable(wtbl)
-            )
-            spark.sql(f"DROP TABLE IF EXISTS `{wtbl}`")
-            schemas[name] = _schema_ddl(df)
-            bucket_meta[name] = {"key": key_col, "n": n}
-        meta = {
-            "kind": _kind_token(kind_key),
-            "sf_dir": os.path.realpath(sf_dir),
-            "frames": sorted(frames),
-            "scalars": scalars or {},
-            "buckets": bucket_meta,
-            "schemas": schemas,
-            "source_fp": _source_fingerprint(sf_dir),
-            "code_fp": _package_fingerprint(),
-        }
-        with open(os.path.join(tmp, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        os.rename(tmp, d)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return None
-    _prune_stale(root, meta["kind"], meta["sf_dir"], keep=digest)
-    return {name: _serve_frame(spark, d, name, meta) for name in frames}
+        if os.path.exists(d):  # another writer finished first
+            loaded = load_group(spark, sf_dir, kind_key)
+            return loaded[0] if loaded else None
+        tmp = f"{d}.tmp{os.getpid()}_{threading.get_ident()}"
+        schemas: dict[str, str] = {}
+        bucket_meta: dict[str, dict] = {}
+        try:
+            os.makedirs(tmp, exist_ok=True)
+            for name, df in frames.items():
+                spec = (buckets or {}).get(name)
+                target = os.path.join(tmp, name)
+                if spec is None:
+                    df.write.mode("overwrite").parquet(target)
+                    continue
+                key_col, n = spec
+                # bucketBy requires saveAsTable; write through a throwaway
+                # session-catalog name with an explicit external path, then
+                # drop the metadata (files stay — the table was external).
+                # repartition(n, key) first so each task owns exactly one
+                # bucket → one file per bucket (both use Murmur3 pmod n).
+                wtbl = (
+                    f"aspark_w_{os.getpid()}_{threading.get_ident()}"
+                    f"_{digest[:12]}_{name}"
+                )
+                (
+                    df.repartition(n, key_col)
+                    .write.bucketBy(n, key_col)
+                    .sortBy(key_col)
+                    .option("path", target)
+                    .mode("overwrite")
+                    .saveAsTable(wtbl)
+                )
+                spark.sql(f"DROP TABLE IF EXISTS `{wtbl}`")
+                schemas[name] = _schema_ddl(df)
+                bucket_meta[name] = {"key": key_col, "n": n}
+            meta = {
+                "kind": _kind_token(kind_key),
+                "sf_dir": os.path.realpath(sf_dir),
+                "frames": sorted(frames),
+                "scalars": scalars,
+                "buckets": bucket_meta,
+                "schemas": schemas,
+                "source_fp": _source_fingerprint(sf_dir),
+                "code_fp": _package_fingerprint(),
+            }
+            with open(os.path.join(tmp, "meta.json"), "w") as f:
+                json.dump(meta, f)
+            os.rename(tmp, d)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
+        _prune_stale(root, meta["kind"], meta["sf_dir"], keep=digest)
+        return {name: _serve_frame(spark, d, name, meta) for name in frames}
 
 
 # Superseded groups younger than this survive one more save cycle:
@@ -320,51 +317,3 @@ def _prune_stale(root: str, kind: str, sf_dir: str, keep: str) -> None:
                 shutil.rmtree(os.path.join(root, name), ignore_errors=True)
         except Exception:
             continue
-
-
-def load_scalars(sf_dir: str, kind_key: tuple) -> dict | None:
-    """Scalar-only group lookup (no Spark session needed)."""
-    root = store_root()
-    meta_path = os.path.join(root, _digest(sf_dir, kind_key), "meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    try:
-        with open(meta_path) as f:
-            return json.load(f).get("scalars", {})
-    except Exception:
-        return None
-
-
-def save_scalars(sf_dir: str, kind_key: tuple, scalars: dict) -> None:
-    """Persist a frame-less scalar group (catalog statistics). Values
-    must ROUND-TRIP through JSON bit-identically — a value that merely
-    serializes (tuple→list, int dict keys→str, date→skip) would change
-    type across sessions, so it stays an in-session memo (r10 advice)."""
-    root = store_root()
-    try:
-        if json.loads(json.dumps(scalars)) != scalars:
-            return  # serializes but mutates: in-session memo only
-    except (TypeError, ValueError):
-        return  # non-JSON scalar: in-session memo only
-    digest = _digest(sf_dir, kind_key)
-    d = os.path.join(root, digest)
-    if os.path.exists(d):
-        return
-    tmp = f"{d}.tmp{os.getpid()}"
-    try:
-        os.makedirs(tmp, exist_ok=True)
-        meta = {
-            "kind": _kind_token(kind_key),
-            "sf_dir": os.path.realpath(sf_dir),
-            "frames": [],
-            "scalars": scalars,
-            "source_fp": _source_fingerprint(sf_dir),
-            "code_fp": _package_fingerprint(),
-        }
-        with open(os.path.join(tmp, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        os.rename(tmp, d)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    _prune_stale(root, _kind_token(kind_key), os.path.realpath(sf_dir), keep=digest)

@@ -35,16 +35,18 @@ keyed ``(applicationId, *key)``, each first build single-flight under
 ``_MEMO_LOCK``. The level-2 clear (``clear_serving_caches``) walks it and
 drops every entry that holds a DataFrame.
 
-Every lake-backed artifact goes through ONE load-or-build path
-(``_load_or_build``): serve the stored group when the lake holds it,
-else build it, save it and serve the stored re-read (so the served bits
-are the lake's). When the lake write fails (``artifact_store.save_group``
-returns None) the built frames are served from an in-session copy
-instead: repartitioned by their bucket spec, MEMORY_AND_DISK-persisted
-and counted, the same co-partitioning paid per session. Small tables
-(``get_table`` below TWIN_MIN_BYTES) never go to the lake and keep their
-own in-session layout. The HTTP answer cache (``get_answer``) is a
-separate byte-budgeted LRU whose lock is never held across a compute.
+Every lake-backed artifact, scalar statistics included (a frame-less
+group), goes through ONE load-or-build path (``_load_or_build``): serve
+the stored group when the lake holds it, else build it, save it and
+serve the stored re-read (so the served bits are the lake's). When the
+lake write fails (``artifact_store.save_group`` returns None, as it does
+for scalars JSON cannot round-trip exactly) the built result is served
+from an in-session copy instead: frames repartitioned by their bucket
+spec, MEMORY_AND_DISK-persisted and counted, the same co-partitioning
+paid per session. Small tables (``get_table`` below TWIN_MIN_BYTES)
+never go to the lake and keep their own in-session layout. The HTTP
+answer cache (``get_answer``) is a separate byte-budgeted LRU whose lock
+is never held across a compute.
 """
 
 from __future__ import annotations
@@ -432,8 +434,7 @@ def _serve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # size the layout from the parquet FOOTER (free) instead of a
     # full counting scan — at sf1 the old scan-count-then-repartition
     # sequence read lineitem twice before the first query could run
-    n_rows = _footer_rows(sf_dir, name)
-    n_bytes = _footer_bytes(sf_dir, name)
+    n_rows, n_bytes = _footer(sf_dir, name)
     if (
         n_bytes is not None
         and n_rows is not None
@@ -470,49 +471,32 @@ def _serve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _footer_rows(sf_dir: str, name: str) -> int | None:
-    """Row count from parquet footer metadata (no data pages touched) —
-    None when the layout is not a plain local file/dir of parquet parts."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return None
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            total = 0
-            for f in os.listdir(path):
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(path, f)
-                    ).metadata.num_rows
-            return total
-    except Exception:
-        return None
-    return None
-
-
-def _footer_bytes(sf_dir: str, name: str) -> int | None:
-    """On-disk parquet footprint (stat only) — the TWIN_MIN_BYTES input."""
+def _footer(sf_dir: str, name: str) -> tuple[int | None, int | None]:
+    """(rows, bytes) of a table's parquet parts from one walk: rows from
+    footer metadata (no data pages touched), bytes from stat — None when
+    the layout is not a plain local file/dir of parquet parts."""
     import os
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isfile(path):
-            return os.stat(path).st_size
-        if os.path.isdir(path):
-            return sum(
-                os.stat(os.path.join(path, f)).st_size
+        parts = (
+            [path]
+            if os.path.isfile(path)
+            else [
+                os.path.join(path, f)
                 for f in os.listdir(path)
                 if f.endswith(".parquet")
-            )
+            ]
+        )
+        n_bytes = sum(os.stat(p).st_size for p in parts)
     except OSError:
-        return None
-    return None
+        return None, None
+    try:
+        import pyarrow.parquet as pq
+
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in parts), n_bytes
+    except Exception:
+        return None, n_bytes
 
 
 def get_text_index(
@@ -627,18 +611,18 @@ def get_scalar(spark: SparkSession, cache_key: tuple, compute):
     """Memoized scalar catalog statistic captured at build time (the
     corpus_stats pattern: n_docs/avgdl for BM25, distinct-group counts
     for the wide aggregates) — queries fold the value in as a literal
-    instead of paying a 1-row aggregate job per invocation."""
-    from msgvault_spark.sources import artifact_store
-
-    kind = ("scalar", *cache_key[1:])
+    instead of paying a 1-row aggregate job per invocation. Stored as a
+    frame-less lake group; a value JSON cannot round-trip exactly stays
+    in-session."""
 
     def load():
-        stored = artifact_store.load_scalars(cache_key[0], kind)
-        if stored is not None and "value" in stored:
-            return stored["value"]
-        value = compute()
-        artifact_store.save_scalars(cache_key[0], kind, {"value": value})
-        return value
+        _, scalars = _load_or_build(
+            spark,
+            cache_key[0],
+            ("scalar", *cache_key[1:]),
+            lambda: ({}, {"value": compute()}),
+        )
+        return scalars["value"]
 
     return memo(spark, ("scalar", *cache_key), load)
 

@@ -6,6 +6,7 @@ cmd/msgvault/cmd/tui.go:183-290)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -69,14 +70,6 @@ def test_source_change_invalidates(spark, store, tmp_path):
     # fingerprints are recomputed per call, so the mtime change is seen
     # immediately — no fresh-process analog needed
     assert artifact_store.load_group(spark, str(src), ("t", "fresh")) is None
-
-
-def test_scalar_roundtrip_and_non_json_fallback(spark, store):
-    artifact_store.save_scalars(SF, ("scalar", "n"), {"value": 42})
-    assert artifact_store.load_scalars(SF, ("scalar", "n")) == {"value": 42}
-    # a non-JSON scalar must not be persisted (and must not raise)
-    artifact_store.save_scalars(SF, ("scalar", "bad"), {"value": object()})
-    assert artifact_store.load_scalars(SF, ("scalar", "bad")) is None
 
 
 def test_bucketed_group_roundtrip_and_join_partitioning(spark, store):
@@ -147,12 +140,46 @@ def test_archive_serving_is_scan_only(spark, store):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_scalar_persist_requires_exact_round_trip(spark, store):
-    """A value that JSON-serializes but mutates (tuple→list) must stay an
-    in-session memo — persisting it would silently change its type in the
-    next session."""
-    artifact_store.save_scalars(SF, ("scalar", "tup"), {"value": (1, 2)})
-    assert artifact_store.load_scalars(SF, ("scalar", "tup")) is None
+_OPAQUE = object()
+
+
+@pytest.mark.parametrize(
+    "value, persists",
+    [
+        (42, True),
+        (datetime.date(1998, 8, 2), False),  # not JSON
+        ((1, 2), False),  # JSON, but comes back a list
+        (_OPAQUE, False),  # not JSON
+    ],
+    ids=["int", "date", "tuple", "object"],
+)
+def test_scalar_persists_only_exact_json(spark, store, value, persists):
+    """cache.get_scalar stores a statistic as a frame-less lake group only
+    when JSON round-trips it exactly; any other value keeps its own type
+    in-session, leaves nothing in the lake, and is recomputed by a fresh
+    session."""
+    from msgvault_spark.sources import cache
+
+    key = (SF, "unit_scalar", type(value).__name__)
+    _forget(cache, "scalar")
+    got = cache.get_scalar(spark, key, lambda: value)
+    assert got == value and type(got) is type(value)
+    kind = ("scalar", *key[1:])
+    assert (artifact_store.load_group(spark, SF, kind) is not None) == persists
+    if not persists:
+        assert os.listdir(store) == []  # no group, no .tmp dir
+
+    _forget(cache, "scalar")  # fresh serving session analog
+    calls = []
+
+    def compute():
+        if persists:
+            raise AssertionError("recomputed instead of loading the lake")
+        calls.append(1)
+        return value
+
+    assert cache.get_scalar(spark, key, compute) == value
+    assert calls == ([] if persists else [1])
 
 
 def test_prune_drops_superseded_group(spark, store):
@@ -170,7 +197,7 @@ def test_prune_drops_superseded_group(spark, store):
     stale.write_text(json.dumps(meta))
     os.utime(stale, (1, 1))
     # next save of the SAME kind prunes it; an unrelated kind does not
-    artifact_store.save_scalars(SF, ("scalar", "other"), {"value": 1})
+    artifact_store.save_group(spark, SF, ("t", "other"), {}, scalars={"v": 1})
     assert (store / "deadbeef").exists()
     (store / live[0] / "meta.json").unlink()  # force digest dir rebuildable?
     # rebuild the real group after dropping it entirely

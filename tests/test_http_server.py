@@ -273,6 +273,13 @@ def test_search_vector_and_hybrid_modes(server):
     assert {"id", "rrf_score"} <= set(h["results"][0])
     assert h["results"][0]["rrf_score"] >= h["results"][-1]["rrf_score"]
 
+    # an out-of-range page_size falls back to 20, as in mode=fts
+    for mode in ("vector", "hybrid"):
+        status, big = _get(
+            server, f"/api/v1/search?q=token7&mode={mode}&page_size=1000"
+        )
+        assert status == 200 and big["returned"] == 20
+
 
 def test_vector_search_reads_embedding_width_once(server, spark, monkeypatch):
     """The embedding width is a per-snapshot scalar: once one vector

@@ -91,6 +91,11 @@ def test_errors_are_rpc_errors_not_exceptions(call, spark):
     assert call("find_similar_messages", {"seed_id": 10**9})["error"][
         "code"
     ] == -32602
+    # a Spark analysis error on user input (a negative LIMIT) is the
+    # caller's fault, as it is over HTTP (400), not an engine failure
+    assert call("aggregate_messages", {"view": "senders", "limit": -1})[
+        "error"
+    ]["code"] == -32602
     assert handle(spark, SF_DIR, {"id": 9, "method": "bogus"})["error"][
         "code"
     ] == -32601
